@@ -234,29 +234,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE right-size CACHED plan output too: the matview/commit
-      // paths cache small delta frames, and without this every cached
-      // frame materializes at the raw shuffle-partition count — 32
-      // near-empty tasks per downstream read at any scale. Byte-based
-      // coalescing keeps big caches wide; this is scale-adaptive, not
-      // a local tuning (q194: 1557 -> 125 tasks, task_sec 35 -> 3).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // the engine's commit/fold/scan working set is far more than 100
-      // distinct codegen units (the static default): an overflowing
-      // cache recompiles the SAME generated classes inside executor
-      // tasks on every reuse — pure CPU waste at any scale. Bounded by
-      // distinct plan shapes, not data volume (scale-independent).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     if (args.isEmpty) progressInit()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,27 +19,7 @@ object Verify {
     // optional 3rd+ args: run only the named queries (local iteration;
     // the driver always passes exactly two args → full battery)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE may right-size cached plan output (see Bench.scala) —
-      // verify under the same partitioning rules the bench runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // the engine's commit/fold/scan working set is far more than 100
-      // distinct codegen units (the static default): an overflowing
-      // cache recompiles the SAME generated classes inside executor
-      // tasks on every reuse — pure CPU waste at any scale. Bounded by
-      // distinct plan shapes, not data volume (scale-independent).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as LongType
-      // (nanos since epoch) instead of failing — ordering semantics
-      // are identical and the ts column is never a query output.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // remove any previous run's output first: if a query throws before
@@ -65,21 +44,30 @@ object Verify {
       // accumulate across the 70+-query run on local[4]
       CacheReset(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(only))
     spark.stop()
   }
+
+  /** oracle_sql.json's body: the oracle SQL of the queries in `only`
+    * (every query when empty), so a named-query run's dump holds an
+    * oracle for exactly the parquet dirs it wrote. */
+  def oracleJson(only: Set[String]): String =
+    SparkEntry.oracleSql
+      .filter { case (k, _) => only.isEmpty || only.contains(k) }
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+
+  /** JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -80,9 +80,10 @@ object ConnectedComponents {
         .join(propagated.select(col("id").as("comp"), col("comp").as("ccomp")), Seq("comp"), "left")
         .select(col("id"), coalesce(col("ccomp"), col("comp")).as("comp"))
         .localCheckpoint()
-      val s = jumped.agg(sum(col("comp"))).head().getLong(0)
-      converged = s == prevSum
-      prevSum = s
+      val s = jumped.agg(sum(col("comp"))).head()
+      // an empty label set sums to null: nothing to propagate, converged
+      converged = s.isNullAt(0) || s.getLong(0) == prevSum
+      if (!converged) prevSum = s.getLong(0)
       labels = jumped
       round += 1
     }

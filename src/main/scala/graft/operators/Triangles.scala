@@ -206,9 +206,10 @@ object Triangles {
   }
 
   /** MEASURED operating point for the exact/approx pair
-    * (TriangleCrossoverBench + the isolated q134/q154 A/B,
-    * BENCH_SCALE x168): Doulion k=3 beats the exact counter 1.45× on
-    * the 1.2M-edge co-order graph (7M raw pairs) and 2.7×/6.1×
+    * (TriangleCrossoverBench, retired: see "Retired harnesses" in
+    * BENCH_NOTES.md; plus the isolated q134/q154 A/B, BENCH_SCALE
+    * x168): Doulion k=3 beats the exact counter 1.45× on the 1.2M-edge
+    * co-order graph (7M raw pairs) and 2.7×/6.1×
     * (k=3/k=30) on a 10M-edge hub-heavy graph — the sampling pass
     * commutes with the canonical-edge distinct, so dup-heavy inputs
     * sample BEFORE the dominant shuffle. Below ~10⁶ raw pair rows both

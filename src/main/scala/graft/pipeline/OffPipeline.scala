@@ -32,7 +32,8 @@ object OffPipeline {
     // quoted-newline-free (one cheap parity scan, loud throw otherwise)
     // and reads with multiLine=false — parallelism then follows bytes
     // (maxPartitionBytes splits), not file count. Measured A/B at
-    // 1x/10x/100x in PipelineScaleBench (x204/x205 rows).
+    // 1x/10x/100x in PipelineScaleBench (x204/x205 rows; retired, see
+    // "Retired harnesses" in BENCH_NOTES.md).
     val projected = Ingest.renameDashes(
       Ingest.selectExisting(bronze, OffModel.rawAllowlist))
 

@@ -237,7 +237,8 @@ object Similarity {
     * form n²(x·x) − 2n(x·s) + s·s overflows int64 once cluster counts
     * pass the scaladoc's dims·n²·2²⁶ bound (measured: the 1M-vector
     * decade of AnnAtRestBench's PQ build threw ARITHMETIC_OVERFLOW in
-    * training). When the worst case — computed from the ACTUAL frames:
+    * training; the bench is retired, see "Retired harnesses" in
+    * BENCH_NOTES.md). When the worst case — computed from the ACTUAL frames:
     * max n and max |s| from the k-row centroid frame, max |x| from the
     * member frame — can exceed 2⁶², the summed centroids are demoted
     * to floored MEANS (n = 1): the numerator becomes x·x − 2(x·c) + c·c

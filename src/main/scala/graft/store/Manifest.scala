@@ -1914,8 +1914,9 @@ object Manifest {
 
   /** BENCH/TEST-ONLY commit of fabricated file entries — no data is
     * staged and the entries must never be read; exists so the log
-    * benches ([[graft.bench.ManifestLogBench]]) and the two-process
-    * race harness ([[graft.tools.CommitRace]]) can exercise COMMIT
+    * bench (ManifestLogBench, retired: see "Retired harnesses" in
+    * BENCH_NOTES.md) and the two-process race harness
+    * ([[graft.tools.CommitRace]]) can exercise COMMIT
     * PROTOCOL cost and atomicity at 10⁴–10⁵-file manifests without
     * paying 10⁵ real parquet writes that would drown the measured
     * object. Goes through the real [[publish]] (locks, arbiter,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.store.Manifest
 
 /** Second-driver half of the CROSS-PROCESS commit race test
@@ -51,11 +49,8 @@ object CommitRace {
         }
       case _ => ()
     }
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.GraftSession.builder(2)
       .appName(s"commit-race-$tag")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

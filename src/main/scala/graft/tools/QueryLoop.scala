@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Repeat-timing harness for single battery queries: runs each named
   * query `reps` times in ONE JVM and prints every sample. Host timing
   * noise on this box makes cross-JVM comparisons useless (2-4x
@@ -14,37 +12,16 @@ object QueryLoop {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    // mirror Bench's session exactly (same SPARK_GRAFT_CPUS contract) —
-    // an A/B timed under a different parallelism than the benchmark it
-    // explains would mislead
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE right-size CACHED plan output too: the matview/commit
-      // paths cache small delta frames, and without this every cached
-      // frame materializes at the raw shuffle-partition count — 32
-      // near-empty tasks per downstream read at any scale. Byte-based
-      // coalescing keeps big caches wide; this is scale-adaptive, not
-      // a local tuning (q194: 1557 -> 125 tasks, task_sec 35 -> 3).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // the engine's commit/fold/scan working set is far more than 100
-      // distinct codegen units (the static default): an overflowing
-      // cache recompiles the SAME generated classes inside executor
-      // tasks on every reuse — pure CPU waste at any scale. Bounded by
-      // distinct plan shapes, not data volume (scale-independent).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // A/B a conf hypothesis in the same harness: semicolon-separated
-    // key=value overrides, e.g. SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false"
+    // Bench's session (same GraftSession.cpus) — an A/B timed under a
+    // different parallelism than the benchmark it explains would mislead.
+    // SPARK_GRAFT_CONF A/Bs a conf hypothesis in the same harness:
+    // semicolon-separated key=value overrides on top, e.g.
+    // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false"
     val spark = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.split("=", 2))
       .collect { case Array(k, v) => (k.trim, v.trim) }
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .foldLeft(graft.GraftSession.builder(graft.GraftSession.cpus)) {
+        case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // job/stage counters: a scenario whose wall is fixed per-job

@@ -35,6 +35,11 @@ class ConnectedComponentsSpec extends SparkTestBase {
     // threshold 0 -> distributed min-label fixpoint
     assert(ConnectedComponents.components(pairs, driverThreshold = 0L)
       .as[(Long, Long)].collect().toMap == want)
+    // no pairs: both paths return the empty (id, comp) frame
+    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    assert(ConnectedComponents.components(none).as[(Long, Long)].collect().isEmpty)
+    assert(ConnectedComponents.components(none, driverThreshold = 0L)
+      .as[(Long, Long)].collect().isEmpty)
   }
 
   test("long path converges within the round budget (pointer jumping, distributed path)") {
