@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * referencing it are discarded with the finished run.
   *
   * Callers still HOLDING a localCheckpoint-backed DataFrame across the
-  * reset (e.g. `Curation.funnel(materialize = true)` stage outputs)
+  * reset (e.g. `Curation.funnel` stage outputs)
   * must pass those RDD ids in `keep` — otherwise their next action
   * fails (unrecomputable) instead of recomputing. Collect the ids with
   * [[rddIds]] on each DataFrame to protect.

@@ -627,23 +627,21 @@ object Dedup {
     * production both read back from [[graft.store.Store]] tables, not
     * recomputed. The batch pays ONE shingle-hash pass, shared between
     * banding and verification via localCheckpoint exactly as in
-    * [[verifiedNearDupPairs]] (same fault-tolerance caveat; same
-    * `persistFingerprints = false` escape); the corpus pays only the
-    * bucket probe and the fingerprint lookup of its candidate ids.
+    * [[verifiedNearDupPairs]] (same fault-tolerance caveat); the
+    * corpus pays only the bucket probe and the fingerprint lookup of
+    * its candidate ids.
     * Returns (batch_id, corpus_id, jaccard); screen the batch by
     * anti-joining its ids against rows ≥ the duplicate threshold. */
   def incrementalNearDupPairs(
       batch: DataFrame, idCol: String, textCol: String, mode: ShingleMode,
       bands: Int, rowsPerBand: Int,
       corpusBanded: DataFrame, corpusHashed: DataFrame,
-      persistFingerprints: Boolean = true,
       maxBucketSize: Int = Int.MaxValue,
       family: SigFamily = PermMinhash): DataFrame = {
     // frame-based form: no table to carry the family marker, so the
     // consistency contract is the CALLER's — `family` must be the one
     // that wrote `corpusBanded` (admitBatch enforces it for tables)
-    val base = hashedDocs(batch, idCol, textCol, mode)
-    val batchHashed = if (persistFingerprints) base.localCheckpoint(false) else base
+    val batchHashed = hashedDocs(batch, idCol, textCol, mode).localCheckpoint(false)
     val pairs = incrementalCandidatePairs(
       batchHashed.select(col("id"),
         posexplode(family.sigCol(col("h"), bands, rowsPerBand)).as(Seq("band", "bandsig"))),
@@ -950,17 +948,13 @@ object Dedup {
     * re-plan from cheaply. Caveat: localCheckpoint is not
     * fault-tolerant — a lost executor fails the job instead of
     * recomputing — so a 1000-executor run on preemptible nodes should
-    * pass `persistFingerprints = false` or write the fingerprint
-    * table out explicitly (the durable form of the same design). */
+    * write the fingerprint table out explicitly (the durable form of
+    * the same design). */
   def verifiedNearDupPairs(
       df: DataFrame, idCol: String, textCol: String, mode: ShingleMode,
       bands: Int = 8, rowsPerBand: Int = 4,
-      persistFingerprints: Boolean = true,
       maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val base = hashedDocs(df, idCol, textCol, mode)
-    val hashed = if (persistFingerprints)
-      base.localCheckpoint(false)
-    else base
+    val hashed = hashedDocs(df, idCol, textCol, mode).localCheckpoint(false)
     val pairs =
       candidatePairsFromBanded(bandedSigs(hashed, bands, rowsPerBand), maxBucketSize)
     jaccardOnHashed(pairs, hashed)

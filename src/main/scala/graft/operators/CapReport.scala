@@ -47,8 +47,11 @@ object CapReport {
   /** Warning line for one observation row, None when nothing was
     * dropped (pure — unit-testable without the listener bus). */
   def format(name: String, row: Row): Option[String] = {
+    // other observations (Store's `retro`) ride the same queries and
+    // lack these fields: the name decides before any field is read
+    if (!name.startsWith(MetricPrefix)) return None
     val excludedGroups = row.getAs[Long]("excluded_groups")
-    if (!name.startsWith(MetricPrefix) || excludedGroups == 0L) None
+    if (excludedGroups == 0L) None
     else {
       val what = name.stripPrefix(MetricPrefix).takeWhile(_ != '#')
       Some(s"[graft] CAPPED RUN: $what excluded $excludedGroups group(s) " +

@@ -456,9 +456,8 @@ object Manifest {
   /** How many consecutive delta manifests may chain before [[publish]]
     * forces a full checkpoint — bounds resolution depth (a cold
     * [[snapshot]] read walks at most this many documents) while keeping
-    * 15 of every 16 commits O(batch) in JSON bytes. Bench-visible knob
-    * ([[graft.bench]]): 1 = every manifest full, the pre-incremental
-    * behavior, the A/B baseline. */
+    * 15 of every 16 commits O(batch) in JSON bytes. Tests set it to 1
+    * (every manifest full, the pre-incremental behavior). */
   @volatile private[graft] var checkpointEvery: Int = 16
 
   /** Resolved snapshots are immutable per (root, version) — a tiny
@@ -507,6 +506,11 @@ object Manifest {
     snap
   }
 
+  /** [[current]] for the operations that need a committed table. */
+  private def currentOrFail(spark: SparkSession, root: String): Snapshot =
+    current(spark, root).getOrElse(
+      throw new IllegalArgumentException(s"$root has no committed version"))
+
   /** All committed versions, ascending. */
   def versions(spark: SparkSession, root: String): Seq[Long] = {
     val f = fs(spark, root)
@@ -521,8 +525,7 @@ object Manifest {
     * which reads as an empty frame of the caller-known schema only if
     * at least one file exists; callers bootstrap with an init commit). */
   def read(spark: SparkSession, root: String): DataFrame = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     readSnapshot(spark, root, snap)
   }
 
@@ -681,12 +684,14 @@ object Manifest {
     * them (q194's by_cust view reached 97 files in 3 commits). Output
     * sizing derives from the PLAN'S BYTE ESTIMATE, never a constant
     * partition count, so it is scale-adaptive: a 10 GB rewrite keeps
-    * ~160 parallel writers at the default, a 100 KB fold lands as one
-    * file. Env-overridable for cluster tuning (production: align with
-    * the table's target file size, e.g. 128–512 MB / guide §6). */
-  private[graft] val rewriteTargetBytes: Long =
-    sys.env.get("GRAFT_REWRITE_TARGET_BYTES").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
+    * ~160 parallel writers at 64 MiB, a 100 KB fold lands as one
+    * file. */
+  private[graft] val rewriteTargetBytes: Long = 64L * 1024 * 1024
+
+  /** Output files for `bytes` of data at `targetBytes` per file: at
+    * least one, at most 2^20. */
+  private[store] def fileCount(bytes: BigInt, targetBytes: Long): Int =
+    ((bytes + targetBytes - 1) / targetBytes).max(1).min(1L << 20).toInt
 
   /** `df` coalesced to ~[[rewriteTargetBytes]]-sized output files from
     * the optimizer's size estimate — driver-side, no job. Estimates
@@ -928,7 +933,6 @@ object Manifest {
   private def footerStats(staged: Seq[String], statsCols: Seq[String],
       footers: Map[String, Seq[org.apache.parquet.hadoop.metadata.BlockMetaData]])
       : Option[Map[String, Map[String, (Any, Any)]]] = try {
-    if (sys.env.contains("GRAFT_NO_FOOTER_STATS")) return None // A/B valve
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -1180,16 +1184,12 @@ object Manifest {
       val blocks = try rd.getFooter.getBlocks.asScala.toSeq finally rd.close()
       (rel, blocks.map(_.getRowCount).sum, in.getLength, blocks)
     }
-    val t0 = System.nanoTime()
     val both: Seq[(String, Long, Long,
         Seq[org.apache.parquet.hadoop.metadata.BlockMetaData])] =
-      // GRAFT_FOOTER_SERIAL: A/B valve — pool of 1 reproduces the old
-      // serial open cost for measurement
       if (staged.size <= 1) staged.map(readOne)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          if (sys.env.contains("GRAFT_FOOTER_SERIAL")) 1
-          else math.min(16, staged.size))
+          math.min(16, staged.size))
         try {
           val futs = staged.map(rel => pool.submit(
             new java.util.concurrent.Callable[(String, Long, Long,
@@ -1199,9 +1199,6 @@ object Manifest {
           futs.map(_.get())
         } finally { pool.shutdown(); () }
       }
-    if (sys.env.contains("GRAFT_FOOTER_TIMING"))
-      System.err.println(f"[manifest] footerMeta: ${staged.size} file(s) in " +
-        f"${(System.nanoTime() - t0) / 1e6}%.1f ms")
     (both.map(t => (t._1, t._2)).toMap, both.map(t => (t._1, t._3)).toMap,
       both.map(t => (t._1, t._4)).toMap)
   }
@@ -1210,10 +1207,13 @@ object Manifest {
     * schema-only zero-row part file for an empty first task; left in
     * the list it would carry no skip stats and be conservatively
     * scanned by every probe forever). An all-empty batch keeps ONE
-    * file so the snapshot still carries the schema. */
-  private def withoutEmpty(staged: Seq[String], rows: Map[String, Long]): Seq[String] = {
+    * file so the snapshot still carries the schema — unless
+    * `othersCarrySchema`: a delete/replaceWhere rewrite whose untouched
+    * remainder of the table still carries it publishes no empty file. */
+  private def withoutEmpty(staged: Seq[String], rows: Map[String, Long],
+      othersCarrySchema: Boolean): Seq[String] = {
     val kept = staged.filter(f => rows.getOrElse(f, 1L) > 0L)
-    if (kept.nonEmpty) kept else staged.take(1)
+    if (kept.nonEmpty || othersCarrySchema) kept else staged.take(1)
   }
 
   /** Reserved metadata key prefix: CHECK constraints,
@@ -1283,8 +1283,7 @@ object Manifest {
       version: Option[Long] = None): Long = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
       s"tag name must be a simple token, got [$name]")
-    val cur = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val cur = currentOrFail(spark, root)
     val v = version.getOrElse(cur.version)
     snapshot(spark, root, v) // loud throw if not retained
     require(!cur.meta.contains(TagKeyPrefix + name),
@@ -1366,9 +1365,7 @@ object Manifest {
       val nGood = tagged.count() - nBad
       val v =
         if (nGood > 0) append(good, root, statsCols = statsCols)
-        else current(spark, root).map(_.version).getOrElse(
-          throw new IllegalArgumentException(
-            s"$root has no committed version and the whole batch quarantined"))
+        else currentOrFail(spark, root).version
       if (nBad > 0) append(bad, quarantineRoot)
       (v, nGood, nBad)
     } finally { tagged.unpersist(); () }
@@ -1497,8 +1494,7 @@ object Manifest {
     require(from != to, s"renameColumn: [$from] -> itself is a no-op")
     require(to.nonEmpty && !to.startsWith("__"),
       s"renameColumn: [$to] is not a legal column name")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val names = logicalSchemaNames(spark, root, snap)
     require(names.contains(from),
       s"$root: no column [$from] to rename (have ${names.mkString(", ")})")
@@ -1527,8 +1523,7 @@ object Manifest {
     * column's old values into the new one). */
   def dropColumn(spark: SparkSession, root: String, name: String): Long =
    retryingCommit(s"$root dropColumn", 4) {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val names = logicalSchemaNames(spark, root, snap)
     require(names.contains(name),
       s"$root: no column [$name] to drop (have ${names.mkString(", ")})")
@@ -1622,10 +1617,11 @@ object Manifest {
       meta: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil): Long = {
     val cur = current(df.sparkSession, root)
-    commitStaged(physicalize(df, cur), root, meta,
+    val dfP = physicalize(df, cur)
+    val fp = checkedFingerprint(dfP, root, enforceSchema = true)
+    commitStaged(dfP, root, None, _ => Nil,
       statsCols.map(c => cur.map(toPhysical(_, c)).getOrElse(c)),
-      _.files, enforceSchema = true,
-      skipIf = _ => false, op = "append")._1
+      old => old ++ meta + (SchemaKey -> fp) + (OpKey -> "append"))._1
   }
 
   /** Atomic table replace: stage, publish ONLY the new files. The
@@ -1634,16 +1630,21 @@ object Manifest {
     * merges. */
   def overwrite(df: DataFrame, root: String,
       meta: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil): Long =
-    // overwrite REPLACES the table wholesale under the batch's own
-    // names — any column mapping resets (logical = physical again)
-    // ... and the deletion-vector pointer drops with the old files: a
-    // carried stale vector would be harmless (fresh file names never
-    // match) but every read would pay its broadcast anti-join for free
-    commitStaged(df, root, meta + (SchemaJsonKey -> df.schema.json), statsCols,
-      _ => Seq.empty, enforceSchema = false,
-      skipIf = _ => false, op = "overwrite",
-      clearMeta = Seq(ColMapKey, DroppedKey, DvKey, DvRowsKey))._1
+      statsCols: Seq[String] = Nil): Long = {
+    val fp = checkedFingerprint(df, root, enforceSchema = false)
+    commitStaged(df, root, None, _.files, statsCols,
+      old => (old -- OverwriteResets) ++ meta +
+        (SchemaJsonKey -> df.schema.json) + (SchemaKey -> fp) +
+        (OpKey -> "overwrite"))._1
+  }
+
+  /** Metadata an overwrite drops: it REPLACES the table wholesale under
+    * the batch's own names, so any column mapping resets (logical =
+    * physical again) ... and the deletion-vector pointer drops with the
+    * old files: a carried stale vector would be harmless (fresh file
+    * names never match) but every read would pay its broadcast
+    * anti-join for free. */
+  private val OverwriteResets = Seq(ColMapKey, DroppedKey, DvKey, DvRowsKey)
 
   /** EXACTLY-ONCE overwrite — [[overwrite]] carrying a (writerId →
     * txnId) watermark in the same atomic commit, the wholesale-replace
@@ -1665,12 +1666,14 @@ object Manifest {
       s.meta.get(txnKey(writerId)).exists(_.toLong >= txnId)
     val cur = current(spark, root)
     cur.filter(done).foreach(s => return (s.version, false))
-    val (v, committed, staged) = commitStaged(df, root,
-      meta + (SchemaJsonKey -> df.schema.json) +
-        (txnKey(writerId) -> txnId.toString),
-      statsCols, _ => Seq.empty, enforceSchema = false,
-      skipIf = done, op = "overwriteOnce",
-      clearMeta = Seq(ColMapKey, DroppedKey, DvKey, DvRowsKey))
+    val fp = checkedFingerprint(df, root, enforceSchema = false)
+    val (v, committed, staged) = commitStaged(df, root, None, _.files,
+      statsCols,
+      old => (old -- OverwriteResets) ++ meta +
+        (SchemaJsonKey -> df.schema.json) +
+        (txnKey(writerId) -> txnId.toString) + (SchemaKey -> fp) +
+        (OpKey -> "overwriteOnce"),
+      skipIf = done)
     if (!committed) staged.headOption.foreach { rel =>
       val f = fs(spark, root)
       f.delete(new Path(dataDir(root), rel.substring(0, rel.indexOf('/'))), true)
@@ -1768,12 +1771,12 @@ object Manifest {
         case Some(from) => padTo(col(f.name), from, f.dataType).as(f.name)
         case None => lit(null).cast(f.dataType).as(f.name)
       }): _*)
-    commitStaged(padded, root,
-      meta ++ mapMeta + (SchemaJsonKey -> mergedN.json),
+    val fp = checkedFingerprint(padded, root, enforceSchema = false)
+    commitStaged(padded, root, parent, _ => Nil,
       statsCols.map(c => parent.map(s =>
         remap.getOrElse(c, toPhysical(s, c))).getOrElse(c)),
-      _.files, enforceSchema = false, skipIf = _ => false, op = "appendMerge",
-      requireVersion = parent.map(_.version))._1
+      old => old ++ meta ++ mapMeta + (SchemaJsonKey -> mergedN.json) +
+        (SchemaKey -> fp) + (OpKey -> "appendMerge"))._1
    }
 
   /** Field-wise struct merge for [[appendMerge]]: table fields keep
@@ -1897,10 +1900,13 @@ object Manifest {
     // fast path: no staging work when the txn is already in
     val cur = current(spark, root)
     cur.filter(done).foreach(s => return (s.version, false))
-    val (v, committed, staged) = commitStaged(physicalize(df, cur), root,
-      meta + (txnKey(writerId) -> txnId.toString),
-      statsCols.map(c => cur.map(toPhysical(_, c)).getOrElse(c)), _.files,
-      enforceSchema = true, skipIf = done, op = "appendOnce")
+    val dfP = physicalize(df, cur)
+    val fp = checkedFingerprint(dfP, root, enforceSchema = true)
+    val (v, committed, staged) = commitStaged(dfP, root, None, _ => Nil,
+      statsCols.map(c => cur.map(toPhysical(_, c)).getOrElse(c)),
+      old => old ++ meta + (txnKey(writerId) -> txnId.toString) +
+        (SchemaKey -> fp) + (OpKey -> "appendOnce"),
+      skipIf = done)
     // abandoned commit: sweep ONLY our own staged batch dir (another
     // writer's staged-but-uncommitted batch must survive; [[gc]] is the
     // backstop for crash debris)
@@ -1931,28 +1937,46 @@ object Manifest {
       newRows = names.map(_ -> rowsPer).toMap,
       newBytes = names.map(_ -> bytesPer).toMap)._1
 
-  /** Common commit path: stage → footer row counts → drop empty files
-    * → optional schema enforcement → min/max stats pass → publish.
-    * Returns (version, committed, stagedFiles). */
-  private def commitStaged(df: DataFrame, root: String,
-      meta: Map[String, String], statsCols: Seq[String],
-      baseFiles: Snapshot => Seq[String], enforceSchema: Boolean,
-      skipIf: Snapshot => Boolean, op: String,
-      requireVersion: Option[Long] = None,
-      clearMeta: Seq[String] = Nil): (Long, Boolean, Seq[String]) = {
+  /** Schema fingerprint of a batch about to be staged, after the
+    * checks every data-adding commit runs first: the recorded schema
+    * (when `enforceSchema`) and the CHECK constraints. */
+  private def checkedFingerprint(df: DataFrame, root: String,
+      enforceSchema: Boolean): String = {
     val spark = df.sparkSession
     val fp = schemaFingerprint(df)
     if (enforceSchema) requireSchema(spark, root, fp)
     requireChecks(spark, root, df)
+    fp
+  }
+
+  /** The commit tail of EVERY data-writing operation: stage `df` →
+    * footer rows/bytes/blocks (one open per file) → drop empty files
+    * ([[withoutEmpty]]) → per-file stats over `statsCols` (stamped with
+    * `cube` by the clustered compactions) → [[publish]]. `planned`, the
+    * snapshot a read-modify-write op planned against, is pinned as the
+    * required parent: a commit landing in between throws
+    * [[ConcurrentCommitException]] and the op's [[retryingCommit]]
+    * re-plans. `replaced` names the parent files the commit drops
+    * (`_.files` for a wholesale rewrite); `metaFn` maps the parent's
+    * metadata to the new one. Returns (version, committed, staged). */
+  private def commitStaged(df: DataFrame, root: String,
+      planned: Option[Snapshot], replaced: Snapshot => Seq[String],
+      statsCols: Seq[String],
+      metaFn: Map[String, String] => Map[String, String],
+      cube: Option[String] = None, othersCarrySchema: Boolean = false,
+      skipIf: Snapshot => Boolean = _ => false): (Long, Boolean, Seq[String]) = {
+    val spark = df.sparkSession
     val staged = stage(df, root)
-    val (rows, bytesM, fts) = footerMeta(spark, root, staged)
-    val kept = withoutEmpty(staged, rows)
-    val stats = fileStats(spark, root, kept, statsCols, fts)
-    val (v, committed) = publish(spark, root, kept,
-      old => (old -- clearMeta) ++ meta + (SchemaKey -> fp) + (OpKey -> op),
-      baseFiles, stats, rows.filter(kv => kept.contains(kv._1)), skipIf,
-      requireVersion = requireVersion,
-      newBytes = bytesM.filter(kv => kept.contains(kv._1)))
+    val (rows, bytes, footers) = footerMeta(spark, root, staged)
+    val kept = withoutEmpty(staged, rows, othersCarrySchema)
+    val keptSet = kept.toSet
+    val stats = fileStats(spark, root, kept, statsCols, footers)
+    val (v, committed) = publish(spark, root, kept, metaFn,
+      s => { val gone = replaced(s).toSet; s.files.filterNot(gone) },
+      cube.fold(stats)(stampCube(kept, stats, _)),
+      rows.filter(kv => keptSet(kv._1)), skipIf,
+      requireVersion = planned.map(_.version),
+      newBytes = bytes.filter(kv => keptSet(kv._1)))
     (v, committed, staged)
   }
 
@@ -2009,8 +2033,7 @@ object Manifest {
     * measurement. */
   def readWhereBetween(spark: SparkSession, root: String,
       colName: String, lo: Any, hi: Any): DataFrame = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val keep = prunedFiles(snap, toPhysical(snap, colName), lo, hi)
     val base =
       if (keep.isEmpty)
@@ -2105,8 +2128,7 @@ object Manifest {
   def buildBloomIndex(spark: SparkSession, root: String, colName: String,
       bitsPerRow: Int = 10): Long = {
     require(bitsPerRow >= 2, s"bitsPerRow must be >= 2, got $bitsPerRow")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     require(snap.files.nonEmpty, s"$root is empty — nothing to index")
     val pcol = toPhysical(snap, colName)
     import org.apache.spark.sql.functions.xxhash64
@@ -2145,8 +2167,7 @@ object Manifest {
       colName: String, minCoverage: Double = 0.7): Boolean = {
     require(minCoverage > 0.0 && minCoverage <= 1.0,
       s"minCoverage must be in (0, 1], got $minCoverage")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     if (snap.files.isEmpty) return false
     val stale = snap.meta.get(BloomKeyPrefix + toPhysical(snap, colName)) match {
       case None => true
@@ -2172,8 +2193,7 @@ object Manifest {
   def readWhereEquals(spark: SparkSession, root: String, colName: String,
       value: Any): DataFrame = {
     require(value != null, "readWhereEquals probes a non-null value")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val pcol = toPhysical(snap, colName)
     val statCand = prunedFiles(snap, pcol, value, value)
     val cand = snap.meta.get(BloomKeyPrefix + pcol) match {
@@ -2211,8 +2231,7 @@ object Manifest {
       values: Seq[Any]): DataFrame = {
     require(values.nonEmpty, "readWhereIn needs at least one value")
     require(values.forall(_ != null), "readWhereIn probes non-null values")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val pcol = toPhysical(snap, colName)
     val statCand = values
       .flatMap(v => prunedFiles(snap, pcol, v, v)).distinct
@@ -2274,8 +2293,7 @@ object Manifest {
   /** count(*) of the current snapshot: metadata fast path, scan
     * fallback for pre-row-count tables. */
   def countRows(spark: SparkSession, root: String): Long = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     rowCount(snap).getOrElse(readSnapshot(spark, root, snap).count())
   }
 
@@ -2309,8 +2327,7 @@ object Manifest {
     * loudly — re-read the table and re-baseline, the public formats'
     * own rule for file-rewriting commits in a change feed. */
   def changesSince(spark: SparkSession, root: String, sinceVersion: Long): DataFrame = {
-    val cur = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val cur = currentOrFail(spark, root)
     changes(spark, root, sinceVersion, cur)
   }
 
@@ -2624,6 +2641,24 @@ object Manifest {
       maxRetries: Int = 4): Long =
     retryingCommit(s"$root upsert", maxRetries)(upsertPlanned(batch, root, keyCol))
 
+  /** Touched-file discovery, the public Delta MERGE's: the entries of
+    * `files` holding a row `matching` keeps, found with ONE scan that
+    * tags each row with its file name (`__f`, from `input_file_name`)
+    * and collects the distinct names. `matching` gets the raw scan
+    * (deletion vector not yet applied) and must keep `__f`. */
+  private def touchedFiles(spark: SparkSession, root: String, snap: Snapshot,
+      files: Seq[String])(matching: DataFrame => DataFrame): Seq[String] =
+    if (files.isEmpty) Seq.empty
+    else {
+      import org.apache.spark.sql.functions.{input_file_name, substring_index}
+      val byName = files.map(rel =>
+        rel.substring(rel.lastIndexOf('/') + 1) -> rel).toMap
+      matching(readFiles(spark, root, snap, files)
+          .withColumn("__f", substring_index(input_file_name(), "/", -1)))
+        .select("__f").distinct().collect()
+        .flatMap(r => byName.get(r.getString(0))).toSeq
+    }
+
   /** Bounded auto-retry for the read-modify-write commits: on a
     * [[ConcurrentCommitException]] (another commit landed between plan
     * and publish) the operation RE-PLANS from scratch against the new
@@ -2721,15 +2756,14 @@ object Manifest {
       keyCol: String, matchedSetSql: Map[String, String],
       insertUnmatched: Boolean, matchedDeleteSql: Option[String],
       notMatchedBySourceDeleteSql: Option[String]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, expr, input_file_name, substring_index, when}
+    import org.apache.spark.sql.functions.{coalesce, expr, when}
     require(matchedSetSql.nonEmpty || matchedDeleteSql.nonEmpty ||
       notMatchedBySourceDeleteSql.nonEmpty,
       "mergeInto needs at least one SET column or a delete predicate")
     require(!matchedSetSql.contains(keyCol),
       s"mergeInto cannot SET the merge key [$keyCol]")
     val spark = source.sparkSession
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val keyP = toPhysical(snap, keyCol)
     // logical table columns (the expression surface)
     val tCols = logicalize(
@@ -2761,18 +2795,8 @@ object Manifest {
     val candidates =
       if (range.isNullAt(0)) Seq.empty
       else prunedFiles(snap, keyP, range.get(0), range.get(1))
-    val touchedByKey: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        val byName = candidates.map(rel =>
-          rel.substring(rel.lastIndexOf('/') + 1) -> rel).toMap
-        readFiles(spark, root, snap, candidates)
-          .select(col(keyP),
-            substring_index(input_file_name(), "/", -1).as("__f"))
-          .join(srcKeys, Seq(keyP), "left_semi")
-          .select("__f").distinct().collect()
-          .flatMap(r => byName.get(r.getString(0))).toSeq
-      }
+    val touchedByKey = touchedFiles(spark, root, snap, candidates)(
+      _.select(col(keyP), col("__f")).join(srcKeys, Seq(keyP), "left_semi"))
     // WHEN NOT MATCHED BY SOURCE THEN DELETE discovery: the arm's
     // rows can live in ANY file (absence from the source is not a
     // key-range property), so like [[replaceWhere]] it is one
@@ -2782,23 +2806,16 @@ object Manifest {
     val touchedNmbs: Seq[String] = notMatchedBySourceDeleteSql match {
       case None => Seq.empty
       case Some(d) =>
-        val byName = snap.files.map(rel =>
-          rel.substring(rel.lastIndexOf('/') + 1) -> rel).toMap
         // discovery reads THROUGH the deletion vector like the rewrite
         // side — a file whose only NMBS-matching rows are already
         // DV-deleted must not be selected and needlessly rewritten
-        logicalize(applyDv(spark, root, snap,
-            readFiles(spark, root, snap, snap.files)
-              .withColumn("__f", substring_index(input_file_name(), "/", -1))),
-          snap).alias("t")
-          .join(source.select(col(keyCol)).distinct().alias("s"),
-            col(s"t.$keyCol") === col(s"s.$keyCol"), "left_anti")
-          .filter(coalesce(expr(d), lit(false)))
-          .select("__f").distinct().collect()
-          .flatMap(r => byName.get(r.getString(0))).toSeq
+        touchedFiles(spark, root, snap, snap.files)(raw =>
+          logicalize(applyDv(spark, root, snap, raw), snap).alias("t")
+            .join(source.select(col(keyCol)).distinct().alias("s"),
+              col(s"t.$keyCol") === col(s"s.$keyCol"), "left_anti")
+            .filter(coalesce(expr(d), lit(false))))
     }
     val touched = (touchedByKey ++ touchedNmbs).distinct
-    val touchedSet = touched.toSet
     // matched rewrite: t LEFT JOIN s on the key; SET columns take
     // their expression where a source row matched, else carry
     val updated: Option[DataFrame] =
@@ -2862,20 +2879,10 @@ object Manifest {
       case (None, None) => return snap.version
     }
     val rewritten = physicalize(outcome, Some(snap))
-    val fp = schemaFingerprint(rewritten)
-    requireSchema(spark, root, fp)
-    requireChecks(spark, root, rewritten)
-    val staged = stage(rightSized(rewritten), root)
-    val (rows, bytesM, fts) = footerMeta(spark, root, staged)
-    val kept = withoutEmpty(staged, rows)
-    val statCols = inheritedStatCols(snap)
-    val stats = fileStats(spark, root, kept, statCols, fts)
-    publish(spark, root, kept,
-      old => old - DvRowsKey + (SchemaKey -> fp) + (OpKey -> "mergeInto"),
-      _.files.filterNot(touchedSet), stats,
-      rows.filter(kv => kept.contains(kv._1)),
-      requireVersion = Some(snap.version),
-      newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
+    val fp = checkedFingerprint(rewritten, root, enforceSchema = true)
+    commitStaged(rightSized(rewritten), root, Some(snap), _ => touched,
+      inheritedStatCols(snap),
+      old => old - DvRowsKey + (SchemaKey -> fp) + (OpKey -> "mergeInto"))._1
   }
 
   /** [[upsertPlanned]]'s `drops`: keys whose rows LEAVE the table in
@@ -2894,8 +2901,7 @@ object Manifest {
       evolveSchema: Boolean = false,
       keyedRange: Option[(Any, Any)] = None): Long = {
     val spark = batch.sparkSession
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     // exactly-once guard: checked against the SAME snapshot the commit
     // pins via requireVersion — a racing commit forces a re-plan that
     // re-runs this check
@@ -2931,9 +2937,7 @@ object Manifest {
           }): _*)
         (padded, Map(SchemaJsonKey -> mergedN.json))
       }
-    val fp = schemaFingerprint(batchP)
-    if (!evolveSchema) requireSchema(spark, root, fp)
-    requireChecks(spark, root, batchP)
+    val fp = checkedFingerprint(batchP, root, enforceSchema = !evolveSchema)
     // ONE aggregation serves the duplicate-key guard AND the key range
     // of batch ∪ drops (previously two jobs per upsert, and a THIRD
     // when drop-keys were present — on commit-dense lifecycles the
@@ -2969,20 +2973,8 @@ object Manifest {
     }
     if (range.isNullAt(0)) return snap.version // empty batch+drops: no-op
     val candidates = prunedFiles(snap, keyP, range.get(0), range.get(1))
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        import org.apache.spark.sql.functions.{input_file_name, substring_index}
-        val byName = candidates.map(rel =>
-          rel.substring(rel.lastIndexOf('/') + 1) -> rel).toMap
-        readFiles(spark, root, snap, candidates)
-          .select(col(keyP),
-            substring_index(input_file_name(), "/", -1).as("__f"))
-          .join(allKeys, Seq(keyP), "left_semi")
-          .select("__f").distinct().collect()
-          .flatMap(r => byName.get(r.getString(0))).toSeq
-      }
-    val touchedSet = touched.toSet
+    val touched = touchedFiles(spark, root, snap, candidates)(
+      _.select(col(keyP), col("__f")).join(allKeys, Seq(keyP), "left_semi"))
     val rewritten =
       if (touched.isEmpty) batchP
       else applyDv(spark, root, snap, readFiles(spark, root, snap, touched))
@@ -2990,18 +2982,10 @@ object Manifest {
         // rewritten old rows read under the OLD recorded schema — an
         // evolving batch's added columns fill as NULL there
         .unionByName(batchP, allowMissingColumns = evolveSchema)
-    val staged = stage(rightSized(rewritten), root)
-    val (rows, bytesM, fts) = footerMeta(spark, root, staged)
-    val kept = withoutEmpty(staged, rows)
-    val statCols = inheritedStatCols(snap)
-    val stats = fileStats(spark, root, kept, statCols, fts)
-    publish(spark, root, kept,
+    commitStaged(rightSized(rewritten), root, Some(snap), _ => touched,
+      inheritedStatCols(snap),
       old => old - DvRowsKey + (SchemaKey -> fp) + (OpKey -> "upsert")
-        ++ schemaMeta ++ extraMeta,
-      _.files.filterNot(touchedSet), stats,
-      rows.filter(kv => kept.contains(kv._1)),
-      requireVersion = Some(snap.version),
-      newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
+        ++ schemaMeta ++ extraMeta)._1
   }
 
   /** DELETE of a key range, file-pruned: only the files whose recorded
@@ -3032,8 +3016,7 @@ object Manifest {
 
   private def deleteWhereBetweenPlanned(spark: SparkSession, root: String,
       colName0: String, lo: Any, hi: Any): Long = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val colName = toPhysical(snap, colName0) // raw-file row filters below
     val touched = prunedFiles(snap, colName, lo, hi)
     if (touched.isEmpty) return snap.version
@@ -3056,23 +3039,9 @@ object Manifest {
         readFiles(spark, root, snap, clipped))
       .filter(!(col(colName) >= lit(lo) && col(colName) <= lit(hi)) ||
         col(colName).isNull)
-    val staged = stage(rightSized(survivors), root)
-    val (rows, bytesM, fts) = footerMeta(spark, root, staged)
-    // unlike a commit of fresh data, an all-empty rewrite publishes NO
-    // files here — the untouched remainder of the table still carries
-    // the schema (and a fully-emptied table keeps its newest staged
-    // schema file via withoutEmpty only when nothing else remains)
-    val nonEmpty = staged.filter(f => rows.getOrElse(f, 1L) > 0L)
-    val kept =
-      if (nonEmpty.nonEmpty || snap.files.exists(f => !touchedSet.contains(f))) nonEmpty
-      else staged.take(1)
-    val statCols = inheritedStatCols(snap)
-    val stats = fileStats(spark, root, kept, statCols, fts)
-    publish(spark, root, kept, old => old - DvRowsKey + (OpKey -> "delete"),
-      _.files.filterNot(touchedSet), stats,
-      rows.filter(kv => kept.contains(kv._1)),
-      requireVersion = Some(snap.version),
-      newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
+    commitStaged(rightSized(survivors), root, Some(snap), _ => touched,
+      inheritedStatCols(snap), old => old - DvRowsKey + (OpKey -> "delete"),
+      othersCarrySchema = snap.files.exists(f => !touchedSet.contains(f)))._1
   }
 
   /** Atomic REPLACE of a key range — the public Delta `replaceWhere`
@@ -3096,15 +3065,12 @@ object Manifest {
   private def replaceWhereBetweenPlanned(batch: DataFrame, root: String,
       colName0: String, lo: Any, hi: Any): Long = {
     val spark = batch.sparkSession
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     // column mapping: the batch-range guard runs on the LOGICAL batch;
     // everything against files (stats, survivors, staging) is physical
     val batchP = physicalize(batch, Some(snap))
     val colName = toPhysical(snap, colName0)
-    val fp = schemaFingerprint(batchP)
-    requireSchema(spark, root, fp)
-    requireChecks(spark, root, batchP)
+    val fp = checkedFingerprint(batchP, root, enforceSchema = true)
     val outside = batch.filter(col(colName0).isNull ||
       col(colName0) < lit(lo) || col(colName0) > lit(hi)).limit(1).collect()
     require(outside.isEmpty,
@@ -3125,24 +3091,12 @@ object Manifest {
         .filter(!(col(colName) >= lit(lo) && col(colName) <= lit(hi)) ||
           col(colName).isNull)
         .unionByName(batchP)
-    val staged = stage(rightSized(survivorsAndBatch), root)
-    val (rows, bytesM, fts) = footerMeta(spark, root, staged)
     // an empty batch over a fully-covered range is a pure delete: keep
-    // the delete path's rule — publish no empty files unless nothing
-    // else would carry the schema
-    val nonEmpty = staged.filter(f => rows.getOrElse(f, 1L) > 0L)
-    val kept =
-      if (nonEmpty.nonEmpty || snap.files.exists(f => !touchedSet.contains(f)))
-        nonEmpty
-      else staged.take(1)
-    val statCols = inheritedStatCols(snap)
-    val stats = fileStats(spark, root, kept, statCols, fts)
-    publish(spark, root, kept,
+    // the delete path's empty-file rule
+    commitStaged(rightSized(survivorsAndBatch), root, Some(snap), _ => touched,
+      inheritedStatCols(snap),
       old => old - DvRowsKey + (SchemaKey -> fp) + (OpKey -> "replaceWhere"),
-      _.files.filterNot(touchedSet), stats,
-      rows.filter(kv => kept.contains(kv._1)),
-      requireVersion = Some(snap.version),
-      newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
+      othersCarrySchema = snap.files.exists(f => !touchedSet.contains(f)))._1
   }
 
   /** GENERAL-predicate atomic replace — [[replaceWhereBetween]]'s
@@ -3164,31 +3118,22 @@ object Manifest {
 
   private def replaceWherePlanned(batch: DataFrame, root: String,
       predicateSql: String): Long = {
-    import org.apache.spark.sql.functions.{expr, input_file_name, substring_index}
+    import org.apache.spark.sql.functions.expr
     val spark = batch.sparkSession
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     // column mapping: the predicate is authored in LOGICAL names, so
     // it evaluates against logicalized frames (batch + corpus); the
     // staged rewrite is physicalized back for the files
     val batchP = physicalize(batch, Some(snap))
-    val fp = schemaFingerprint(batchP)
-    requireSchema(spark, root, fp)
-    requireChecks(spark, root, batchP)
+    val fp = checkedFingerprint(batchP, root, enforceSchema = true)
     val pred = expr(predicateSql)
     val outside = batch.filter(!pred || pred.isNull).limit(1).collect()
     require(outside.isEmpty,
       s"replaceWhere batch has rows not satisfying [$predicateSql] " +
         s"(e.g. ${outside.headOption.getOrElse("")}) — the replaced set " +
         "and the replacement batch must coincide")
-    val byName = snap.files.map(rel =>
-      rel.substring(rel.lastIndexOf('/') + 1) -> rel).toMap
-    val touched = logicalize(readFiles(spark, root, snap, snap.files)
-        .withColumn("__f", substring_index(input_file_name(), "/", -1)), snap)
-      .filter(pred)
-      .select("__f")
-      .distinct().collect()
-      .flatMap(r => byName.get(r.getString(0))).toSeq
+    val touched = touchedFiles(spark, root, snap, snap.files)(
+      raw => logicalize(raw, snap).filter(pred))
     val touchedSet = touched.toSet
     val survivorsAndBatch =
       if (touched.isEmpty) batchP
@@ -3197,21 +3142,10 @@ object Manifest {
             readFiles(spark, root, snap, touched)), snap)
           .filter(!pred || pred.isNull), Some(snap))
         .unionByName(batchP)
-    val staged = stage(rightSized(survivorsAndBatch), root)
-    val (rows, bytesM, fts) = footerMeta(spark, root, staged)
-    val nonEmpty = staged.filter(f => rows.getOrElse(f, 1L) > 0L)
-    val kept =
-      if (nonEmpty.nonEmpty || snap.files.exists(f => !touchedSet.contains(f)))
-        nonEmpty
-      else staged.take(1)
-    val statCols = inheritedStatCols(snap)
-    val stats = fileStats(spark, root, kept, statCols, fts)
-    publish(spark, root, kept,
+    commitStaged(rightSized(survivorsAndBatch), root, Some(snap), _ => touched,
+      inheritedStatCols(snap),
       old => old - DvRowsKey + (SchemaKey -> fp) + (OpKey -> "replaceWhere"),
-      _.files.filterNot(touchedSet), stats,
-      rows.filter(kv => kept.contains(kv._1)),
-      requireVersion = Some(snap.version),
-      newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
+      othersCarrySchema = snap.files.exists(f => !touchedSet.contains(f)))._1
   }
 
   /** DELETE as a DELETION VECTOR — the public Delta DV idea: record
@@ -3236,8 +3170,7 @@ object Manifest {
 
   private def deleteWhereBetweenDvPlanned(spark: SparkSession, root: String,
       colName0: String, lo: Any, hi: Any): Long = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val colName = toPhysical(snap, colName0) // raw-file row filter below
     val candidates = prunedFiles(snap, colName, lo, hi)
     if (candidates.isEmpty) return snap.version
@@ -3270,8 +3203,7 @@ object Manifest {
 
   private def deleteWhereDvPlanned(spark: SparkSession, root: String,
       predicateSql: String): Long = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     if (snap.files.isEmpty) return snap.version
     import org.apache.spark.sql.functions.{coalesce, expr}
     val cand = logicalize(readFiles(spark, root, snap, snap.files)
@@ -3321,10 +3253,6 @@ object Manifest {
     } finally { staged.unpersist(); () }
   }
 
-  /** Reader-safe small-file compaction: read current, rewrite into
-    * ~targetBytes files, publish as an overwrite carrying the same
-    * metadata. Readers pinned to older snapshots keep their files
-    * (until [[gc]]); new readers see the compacted snapshot. */
   /** PARTIAL compaction — the 100 TB steady-state form: bin-pack ONLY
     * the files smaller than `smallBytes` into ~targetBytes files and
     * carry every large file by IDENTITY (stats, row counts, byte sizes
@@ -3342,48 +3270,43 @@ object Manifest {
   def compactSmall(spark: SparkSession, root: String,
       smallBytes: Long = 8L * 1024 * 1024,
       targetBytes: Long = 128L * 1024 * 1024,
-      rangeBy: Seq[String] = Nil): Long = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+      rangeBy: Seq[String] = Nil): Long =
+   retryingCommit(s"$root compactSmall", 4) {
+    val snap = currentOrFail(spark, root)
     val small = snap.files.filter(f => snap.bytes.get(f).forall(_ < smallBytes))
-    if (small.size < 2) return snap.version
-    val smallSet = small.toSet
-    val df = applyDv(spark, root, snap, readFiles(spark, root, snap, small))
-    val rangeByP = rangeBy.map(toPhysical(snap, _))
-    val bytes = small.flatMap(snap.bytes.get).sum.max(1L)
-    val target = ((bytes + targetBytes - 1) / targetBytes).max(1).min(1L << 20).toInt
-    // range path: materialize the input once (lazy) — the range
-    // exchange's SAMPLING job otherwise re-reads every packed file a
-    // second time before the real shuffle does
-    val base = if (rangeByP.nonEmpty) df.localCheckpoint(false) else df
-    val repart =
-      if (rangeByP.nonEmpty) base.repartitionByRange(target, rangeByP.map(col): _*)
-      else base.repartition(target)
-    val staged = repart.localCheckpoint()
-    try {
-      val stagedFiles = stage(staged, root)
-      val (rows, bytesM, fts) = footerMeta(spark, root, stagedFiles)
-      val kept = withoutEmpty(stagedFiles, rows)
-      val statCols = inheritedStatCols(snap)
-      val stats = fileStats(spark, root, kept, statCols, fts)
-      publish(spark, root, kept,
-        old => old - DvRowsKey + (OpKey -> "compactSmall"),
-        _.files.filterNot(smallSet), stats,
-        rows.filter(kv => kept.contains(kv._1)),
-        requireVersion = Some(snap.version),
-        newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
-    } finally { staged.unpersist(); if (rangeByP.nonEmpty) base.unpersist(); () }
-  }
+    if (small.size < 2) snap.version
+    else {
+      val df = applyDv(spark, root, snap, readFiles(spark, root, snap, small))
+      val rangeByP = rangeBy.map(toPhysical(snap, _))
+      val target = fileCount(small.flatMap(snap.bytes.get).sum.max(1L), targetBytes)
+      // range path: materialize the input once (lazy) — the range
+      // exchange's SAMPLING job otherwise re-reads every packed file a
+      // second time before the real shuffle does
+      val base = if (rangeByP.nonEmpty) df.localCheckpoint(false) else df
+      val repart =
+        if (rangeByP.nonEmpty) base.repartitionByRange(target, rangeByP.map(col): _*)
+        else base.repartition(target)
+      val staged = repart.localCheckpoint()
+      try commitStaged(staged, root, Some(snap), _ => small, inheritedStatCols(snap),
+        old => old - DvRowsKey + (OpKey -> "compactSmall"))._1
+      finally { staged.unpersist(); if (rangeByP.nonEmpty) base.unpersist(); () }
+    }
+   }
 
+  /** Reader-safe full compaction: read current, rewrite into
+    * ~targetBytes files, publish them in place of every file. Readers
+    * pinned to older snapshots keep their files (until [[gc]]); new
+    * readers see the compacted snapshot. Like every rewrite, the commit
+    * is pinned to the snapshot it read: a commit landing in between
+    * makes it re-plan, never overwrite that commit's rows. */
   def compact(spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024,
-      rangeBy: Seq[String] = Nil): Long = {
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+      rangeBy: Seq[String] = Nil): Long =
+   retryingCommit(s"$root compact", 4) {
+    val snap = currentOrFail(spark, root)
     val df = readSnapshotRaw(spark, root, snap)
     val rangeByP = rangeBy.map(toPhysical(snap, _))
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = ((bytes + targetBytes - 1) / targetBytes).max(1).min(1L << 20).toInt
+    val target = fileCount(df.queryExecution.optimizedPlan.stats.sizeInBytes, targetBytes)
     // `rangeBy` keeps the skip index SHARP through compaction: a hash
     // repartition scatters rows, so every compacted file's [min, max]
     // widens toward the global range and [[readWhereBetween]] stops
@@ -3398,22 +3321,14 @@ object Manifest {
       if (rangeByP.nonEmpty) base.repartitionByRange(target, rangeByP.map(col): _*)
       else base.repartition(target)
     val staged = repart.localCheckpoint()
-    try {
-      val stagedFiles = stage(staged, root)
-      val (rows, bytesM, fts) = footerMeta(spark, root, stagedFiles)
-      val kept = withoutEmpty(stagedFiles, rows)
-      // the skip index survives compaction: recompute stats for every
-      // column any pre-compaction file carried stats for
-      val statCols = inheritedStatCols(snap)
-      val stats = fileStats(spark, root, kept, statCols, fts)
-      // a clean rewrite APPLIES any outstanding deletion vector (the
-      // read above went through it) — clear the pointer
-      publish(spark, root, kept,
-        old => old - DvKey - DvRowsKey + (OpKey -> "compact"),
-        _ => Seq.empty, stats, rows.filter(kv => kept.contains(kv._1)),
-        newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
-    } finally { staged.unpersist(); if (rangeByP.nonEmpty) base.unpersist(); () }
-  }
+    // the skip index survives compaction: recompute stats for every
+    // column any pre-compaction file carried stats for; a clean rewrite
+    // APPLIES any outstanding deletion vector (the read above went
+    // through it) — clear the pointer
+    try commitStaged(staged, root, Some(snap), _.files, inheritedStatCols(snap),
+      old => old - DvKey - DvRowsKey + (OpKey -> "compact"))._1
+    finally { staged.unpersist(); if (rangeByP.nonEmpty) base.unpersist(); () }
+   }
 
   /** MULTI-COLUMN clustered compaction — the public OPTIMIZE ZORDER BY:
     * rewrite the table along a space-filling curve over `cols`
@@ -3422,14 +3337,14 @@ object Manifest {
     * skip index prunes on all of them at once — where
     * [[compact]](rangeBy=…) is lexicographic and only the leading
     * column stays sharp. Stats are recorded for `cols` plus whatever
-    * the table already indexed; same reader-safe overwrite publish as
-    * [[compact]]. */
+    * the table already indexed; same reader-safe, planned-parent
+    * publish as [[compact]]. */
   def compactClustered(spark: SparkSession, root: String, cols: Seq[String],
       targetBytes: Long = 128L * 1024 * 1024,
-      bits: Int = 8, curve: String = "z"): Long = {
+      bits: Int = 8, curve: String = "z"): Long =
+   retryingCommit(s"$root compactClustered", 4) {
     require(cols.nonEmpty, "compactClustered needs at least one layout column")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     // CPU-stage widening (the hashedDocs valve): a freshly-appended or
     // once-compacted table is often a handful of files, and the curve
     // interleave + boundary sketch then serialize onto 1-2 scan tasks;
@@ -3439,27 +3354,19 @@ object Manifest {
     val df = graft.operators.Rebalance.forCpuStage(
       readSnapshotRaw(spark, root, snap))
     val colsP = cols.map(toPhysical(snap, _))
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = ((bytes + targetBytes - 1) / targetBytes).max(1).min(1L << 20).toInt
+    val target = fileCount(df.queryExecution.optimizedPlan.stats.sizeInBytes, targetBytes)
     val staged = Layout.cluster(df, Layout.mixedBoundariesFor(df, colsP, bits),
       target, bits, curve).localCheckpoint()
-    try {
-      val stagedFiles = stage(staged, root)
-      val (rows, bytesM, fts) = footerMeta(spark, root, stagedFiles)
-      val kept = withoutEmpty(stagedFiles, rows)
-      val statCols = (inheritedStatCols(snap) ++ colsP).distinct
-      // the whole table becomes ONE stable cube — the provenance
-      // baseline [[compactClusteredIncremental]] builds on
-      val stats = stampCube(kept, fileStats(spark, root, kept, statCols, fts),
-        java.util.UUID.randomUUID().toString)
-      // a clean rewrite APPLIES any outstanding deletion vector (the
-      // read above went through it) — clear the pointer
-      publish(spark, root, kept,
-        old => old - DvKey - DvRowsKey + (OpKey -> "compact"),
-        _ => Seq.empty, stats, rows.filter(kv => kept.contains(kv._1)),
-        newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
-    } finally { staged.unpersist(); () }
-  }
+    // the whole table becomes ONE stable cube — the provenance baseline
+    // [[compactClusteredIncremental]] builds on; a clean rewrite
+    // APPLIES any outstanding deletion vector (the read above went
+    // through it) — clear the pointer
+    try commitStaged(staged, root, Some(snap), _.files,
+      (inheritedStatCols(snap) ++ colsP).distinct,
+      old => old - DvKey - DvRowsKey + (OpKey -> "compact"),
+      cube = Some(java.util.UUID.randomUUID().toString))._1
+    finally { staged.unpersist(); () }
+   }
 
   /** Reserved PSEUDO-STAT key: ZCube provenance (the public Delta
     * OPTIMIZE ZORDER design) — files written by a clustering pass carry
@@ -3538,20 +3445,20 @@ object Manifest {
     * files read through it (their entries go stale-but-harmless),
     * carried files' entries stay load-bearing — only the full
     * [[compact]]/[[compactClustered]] clears the pointer. Commit is
-    * pinned to the planned snapshot (concurrent appends throw
-    * [[ConcurrentCommitException]] — retry). Returns the accounting;
+    * pinned to the planned snapshot (a concurrent commit re-plans the
+    * pass, bounded like every rewrite). Returns the accounting;
     * `version` is unchanged when nothing needed rewriting. */
   def compactClusteredIncremental(spark: SparkSession, root: String,
       cols: Seq[String], targetBytes: Long = 128L * 1024 * 1024,
       bits: Int = 8, curve: String = "z", volumeFactor: Double = 4.0,
       cubeMinBytes: Long = 16L * 1024 * 1024,
       overlapDegree: Int = 8,
-      cubeStackFactor: Double = 4.0): ClusterIncResult = {
+      cubeStackFactor: Double = 4.0): ClusterIncResult =
+   retryingCommit(s"$root compactClusteredIncremental", 4) {
     require(cols.nonEmpty,
       "compactClusteredIncremental needs at least one layout column")
     require(volumeFactor > 0, s"volumeFactor must be positive ($volumeFactor)")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val colsP = cols.map(toPhysical(snap, _))
     def num(v: Any): Option[Double] = v match {
       case n: Number => Some(n.doubleValue())
@@ -3731,35 +3638,25 @@ object Manifest {
     val carried = snap.files.size - selected.size
     val carriedB = (snap.files.toSet -- selected)
       .toSeq.flatMap(snap.bytes.get).sum
-    if (selected.isEmpty)
-      return ClusterIncResult(snap.version, 0, carried, 0L, carriedB)
-    val selectedSet = selected.toSet
-    val selBytes = selected.flatMap(snap.bytes.get).sum.max(1L)
-    // same CPU-stage widening as compactClustered: the incremental
-    // selection is typically a few polluting files — narrow plans with
-    // splits ≪ cores open the valve, DV'd tables (a join) keep it shut
-    val df = graft.operators.Rebalance.forCpuStage(
-      applyDv(spark, root, snap, readFiles(spark, root, snap, selected)))
-    val target = ((selBytes + targetBytes - 1) / targetBytes)
-      .max(1).min(1L << 20).toInt
-    val staged = Layout.cluster(df, Layout.mixedBoundariesFor(df, colsP, bits),
-      target, bits, curve).localCheckpoint()
-    try {
-      val stagedFiles = stage(staged, root)
-      val (rows, bytesM, fts) = footerMeta(spark, root, stagedFiles)
-      val kept = withoutEmpty(stagedFiles, rows)
-      val statCols = (inheritedStatCols(snap) ++ colsP).distinct
-      val stats = stampCube(kept, fileStats(spark, root, kept, statCols, fts),
-        java.util.UUID.randomUUID().toString)
-      val v = publish(spark, root, kept,
-        old => old - DvRowsKey + (OpKey -> "compactClusteredInc"),
-        _.files.filterNot(selectedSet), stats,
-        rows.filter(kv => kept.contains(kv._1)),
-        requireVersion = Some(snap.version),
-        newBytes = bytesM.filter(kv => kept.contains(kv._1)))._1
-      ClusterIncResult(v, selected.size, carried, selBytes, carriedB)
-    } finally { staged.unpersist(); () }
-  }
+    if (selected.isEmpty) ClusterIncResult(snap.version, 0, carried, 0L, carriedB)
+    else {
+      val selBytes = selected.flatMap(snap.bytes.get).sum.max(1L)
+      // same CPU-stage widening as compactClustered: the incremental
+      // selection is typically a few polluting files — narrow plans with
+      // splits ≪ cores open the valve, DV'd tables (a join) keep it shut
+      val df = graft.operators.Rebalance.forCpuStage(
+        applyDv(spark, root, snap, readFiles(spark, root, snap, selected)))
+      val staged = Layout.cluster(df, Layout.mixedBoundariesFor(df, colsP, bits),
+        fileCount(selBytes, targetBytes), bits, curve).localCheckpoint()
+      try {
+        val v = commitStaged(staged, root, Some(snap), _ => selected,
+          (inheritedStatCols(snap) ++ colsP).distinct,
+          old => old - DvRowsKey + (OpKey -> "compactClusteredInc"),
+          cube = Some(java.util.UUID.randomUUID().toString))._1
+        ClusterIncResult(v, selected.size, carried, selBytes, carriedB)
+      } finally { staged.unpersist(); () }
+    }
+   }
 
   /** Multi-predicate skip read: files pruned by EVERY conjunct's
     * recorded [min, max] (a file survives only if each predicate's
@@ -3769,8 +3666,7 @@ object Manifest {
   def readWhere(spark: SparkSession, root: String,
       preds: Seq[(String, Any, Any)]): DataFrame = {
     require(preds.nonEmpty, "readWhere needs at least one (col, lo, hi) conjunct")
-    val snap = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val snap = currentOrFail(spark, root)
     val keep = preds.foldLeft(snap.files) { case (files, (c, lo, hi)) =>
       val surviving = prunedFiles(snap.copy(files = files),
         toPhysical(snap, c), lo, hi)
@@ -3797,8 +3693,7 @@ object Manifest {
     * `table` is what a catalog would hand a query engine. Pinned to
     * the current snapshot at call time. */
   def table(spark: SparkSession, root: String): DataFrame =
-    tableSnapshot(spark, root, current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version")))
+    tableSnapshot(spark, root, currentOrFail(spark, root))
 
   /** TIME-TRAVEL twin of [[table]]: the planner-integrated scan of a
     * PAST version — skip pruning, vectorized reads, and that version's
@@ -3888,8 +3783,7 @@ object Manifest {
     * inside source retention, or compact the clone to materialize. */
   def shallowClone(spark: SparkSession, srcRoot: String, dstRoot: String,
       extraMeta: Map[String, String] = Map.empty): Long = {
-    val snap = current(spark, srcRoot).getOrElse(
-      throw new IllegalArgumentException(s"$srcRoot has no committed version"))
+    val snap = currentOrFail(spark, srcRoot)
     require(current(spark, dstRoot).isEmpty,
       s"$dstRoot already has a committed version — clone targets a fresh root")
     def abs(rel: String): String = new Path(dataDir(srcRoot), rel).toString
@@ -3956,8 +3850,7 @@ object Manifest {
     val br = branchRoot(root, name)
     require(versions(spark, br).isEmpty,
       s"$root: branch '$name' already exists")
-    val parent = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val parent = currentOrFail(spark, root)
     shallowClone(spark, root, br,
       extraMeta = Map(BranchForkKey -> parent.version.toString))
   }
@@ -4132,8 +4025,7 @@ object Manifest {
         "history — the merge baseline/per-commit replay is gone; keep " +
         "the branch's full history or use publishBranch before main " +
         "diverges")
-    val cur0 = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no committed version"))
+    val cur0 = currentOrFail(spark, root)
     if (snapB.version == 0L) { // no branch commits: nothing to merge
       deleteBranch(spark, root, name)
       return cur0.version

@@ -555,10 +555,8 @@ object Store {
       s"compact would strip bucketing from $table — rewrite via overwriteBucketed instead")
     val provider = meta.provider.getOrElse("parquet")
 
-    def fileTarget(df: DataFrame): Int = {
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      ((bytes + targetBytes - 1) / targetBytes).max(1).min(1L << 20).toInt
-    }
+    def fileTarget(df: DataFrame): Int =
+      Manifest.fileCount(df.queryExecution.optimizedPlan.stats.sizeInBytes, targetBytes)
 
     if (meta.partitionColumnNames.isEmpty) {
       val df = spark.table(table)

@@ -73,12 +73,10 @@ object Curation {
     * drop the larger id of each verified pair. */
   def nearDedup(
       idCol: String, textCol: String, shingleN: Int = 5,
-      bands: Int = 8, rowsPerBand: Int = 4, jaccardThreshold: Double = 0.5,
-      persistFingerprints: Boolean = true)(
+      bands: Int = 8, rowsPerBand: Int = 4, jaccardThreshold: Double = 0.5)(
       df: DataFrame): DataFrame = {
     val drops = Dedup.verifiedNearDupPairs(
-        df, idCol, textCol, Dedup.CharShingles(shingleN), bands, rowsPerBand,
-        persistFingerprints)
+        df, idCol, textCol, Dedup.CharShingles(shingleN), bands, rowsPerBand)
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("id_b").as(idCol)).distinct()
     df.join(drops, Seq(idCol), "left_anti")
@@ -93,12 +91,10 @@ object Curation {
     * equivalence. */
   def nearDedupClustered(
       idCol: String, textCol: String, shingleN: Int = 5,
-      bands: Int = 8, rowsPerBand: Int = 4, jaccardThreshold: Double = 0.5,
-      persistFingerprints: Boolean = true)(
+      bands: Int = 8, rowsPerBand: Int = 4, jaccardThreshold: Double = 0.5)(
       df: DataFrame): DataFrame = {
     val verified = Dedup.verifiedNearDupPairs(
-        df, idCol, textCol, Dedup.CharShingles(shingleN), bands, rowsPerBand,
-        persistFingerprints)
+        df, idCol, textCol, Dedup.CharShingles(shingleN), bands, rowsPerBand)
       .filter(col("jaccard") >= jaccardThreshold)
       .select("id_a", "id_b")
     val drops = graft.operators.ConnectedComponents.components(verified)
@@ -788,9 +784,9 @@ object Curation {
     * in order (s0 input … s5 sample) so callers can count, persist, or
     * continue from any stage.
     *
-    * `materialize` (default true) lazily localCheckpoints the shuffled
-    * stages (exact dedup, near-dedup): callers typically act on SEVERAL
-    * stages (per-stage counts, or count-then-continue), and each stage's
+    * The shuffled stages (exact dedup, near-dedup) are lazily
+    * localCheckpointed: callers typically act on SEVERAL stages
+    * (per-stage counts, or count-then-continue), and each stage's
     * plan embeds its whole prefix — without materialization, six
     * per-stage counts recompute the prefix quadratically, and the
     * near-dedup stage even recomputes inside itself (its anti-join
@@ -810,13 +806,13 @@ object Curation {
     * callers (battery q54, Bench — the plan is rebuilt per run) need
     * nothing. */
   def funnel(
-      docs: DataFrame, idCol: String, textCol: String, langCol: String,
-      materialize: Boolean = true): Seq[(String, DataFrame)] = {
-    def mat(df: DataFrame): DataFrame = if (materialize) df.localCheckpoint(false) else df
+      docs: DataFrame, idCol: String, textCol: String, langCol: String)
+      : Seq[(String, DataFrame)] = {
     val s1 = docs.transform(qualityFilter(textCol))
     val s2 = s1.transform(langConsistencyFilter(textCol, langCol))
-    val s3 = mat(s2.select(idCol, textCol).transform(exactDedup(idCol, textCol)))
-    val s4 = mat(s3.transform(nearDedup(idCol, textCol)))
+    val s3 = s2.select(idCol, textCol).transform(exactDedup(idCol, textCol))
+      .localCheckpoint(false)
+    val s4 = s3.transform(nearDedup(idCol, textCol)).localCheckpoint(false)
     val s5 = s4.transform(hashSample(idCol, keep = 1, outOf = 2))
     Seq("s0_all" -> docs, "s1_quality" -> s1, "s2_lang" -> s2,
       "s3_exact_dedup" -> s3, "s4_near_dedup" -> s4, "s5_sample" -> s5)

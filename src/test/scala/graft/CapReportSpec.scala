@@ -64,6 +64,14 @@ class CapReportSpec extends SparkTestBase {
     assert(CapReport.format(CapReport.MetricPrefix + "lsh_buckets#1", row).isEmpty)
     // non-graft observations are ignored by the formatter
     assert(CapReport.format("user.metric", row).isEmpty)
+    // ... including ones that lack the cap fields (Store's `retro`
+    // observation rides the same queries as a capped operator)
+    val retro = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array[Any](3L),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("retro",
+          org.apache.spark.sql.types.LongType))))
+    assert(CapReport.format("retro", retro).isEmpty)
 
     val docs = Seq((1L, "aaa bbb"), (2L, "ccc ddd")).toDF("doc_id", "text")
     val banded = Dedup.bandedSigs(

@@ -2753,6 +2753,93 @@ class ManifestSpec extends SparkTestBase {
     assert(!overlap, "a live holder was usurped despite its heartbeat")
   }
 
+  // Every data-writing op with a rival commit landing inside its own
+  // publish — after it planned and staged, before it resolves its
+  // parent: the window a concurrent writer hits. The commit-lock hook
+  // fires the rival once. Oracle: the same rival, then the same op, run
+  // one after the other on a copy of the same base table. An op that
+  // publishes over the rival without re-planning loses its rows (or
+  // resurrects its deletes); one that throws instead of re-planning
+  // fails outright.
+  private lazy val raceBase: String = {
+    val root = newRoot("racebase")
+    // four small interleaved files: each file's id box spans the table,
+    // so every compaction (small, clustered, incremental) has work
+    (0 until 4).foreach { i =>
+      Manifest.append(spark.range(0, 100).filter(col("id") % 4 === i)
+          .select(col("id"), concat(lit("v"), col("id").cast("string")).as("v"))
+          .coalesce(1), root, statsCols = Seq("id"))
+    }
+    root
+  }
+
+  private def copyOfBase(tag: String): String = {
+    val to = newRoot(tag)
+    val src = java.nio.file.Paths.get(raceBase)
+    val dst = java.nio.file.Paths.get(to)
+    val walk = Files.walk(src)
+    try walk.forEach(p => { Files.copy(p, dst.resolve(src.relativize(p))); () })
+    finally walk.close()
+    to
+  }
+
+  private val raceRivals: Seq[(String, String => Any)] = Seq(
+    "append of id 1000" -> (r => Manifest.append(Seq((1000L, "rival")).toDF("id", "v"), r)),
+    "DV delete of ids 0-9" -> (r => Manifest.deleteWhereBetweenDv(spark, r, "id", 0L, 9L)))
+
+  private val raceOps: Seq[(String, String => Any)] = Seq(
+    "append" -> (r => Manifest.append(Seq((500L, "n")).toDF("id", "v"), r)),
+    "appendOnce" -> (r => Manifest.appendOnce(Seq((500L, "n")).toDF("id", "v"), r, "w", 1L)),
+    "appendMerge" -> (r => Manifest.appendMerge(Seq((500L, "n")).toDF("id", "v"), r)),
+    "overwrite" -> (r => Manifest.overwrite(Seq((500L, "n")).toDF("id", "v"), r)),
+    "overwriteOnce" -> (r =>
+      Manifest.overwriteOnce(Seq((500L, "n")).toDF("id", "v"), r, "w", 1L)),
+    "upsert" -> (r =>
+      Manifest.upsert(Seq((5L, "u"), (500L, "n")).toDF("id", "v"), r, "id")),
+    "upsertOnce" -> (r => Manifest.upsertOnce(
+      Seq((5L, "u"), (500L, "n")).toDF("id", "v"), r, "id", "w", 1L)),
+    "mergeInto" -> (r => Manifest.mergeInto(Seq((5L, "m")).toDF("id", "v"), r, "id",
+      Map("v" -> "s.v"))),
+    "deleteWhereBetween" -> (r => Manifest.deleteWhereBetween(spark, r, "id", 40L, 49L)),
+    "replaceWhereBetween" -> (r => Manifest.replaceWhereBetween(
+      Seq((50L, "r")).toDF("id", "v"), r, "id", 50L, 59L)),
+    "replaceWhere" -> (r => Manifest.replaceWhere(
+      Seq((60L, "r")).toDF("id", "v"), r, "id >= 60 AND id < 70")),
+    "deleteWhereBetweenDv" -> (r => Manifest.deleteWhereBetweenDv(spark, r, "id", 20L, 29L)),
+    "deleteWhereDv" -> (r => Manifest.deleteWhereDv(spark, r, "id >= 30 AND id < 35")),
+    "compactSmall" -> (r => Manifest.compactSmall(spark, r)),
+    "compact" -> (r => Manifest.compact(spark, r)),
+    "compactClustered" -> (r => Manifest.compactClustered(spark, r, Seq("id"))),
+    "compactClusteredIncremental" -> (r =>
+      Manifest.compactClusteredIncremental(spark, r, Seq("id"))))
+
+  for ((opName, op) <- raceOps)
+    test(s"concurrent commit inside $opName's publish: re-planned, nothing lost") {
+      def rows(r: String): Seq[(Long, String)] =
+        Manifest.read(spark, r).as[(Long, String)].collect().toSeq.sorted
+      for ((rivalName, rival) <- raceRivals) {
+        val raced = copyOfBase("raced")
+        val saved = Manifest.arbiterFor
+        val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+        try {
+          Manifest.arbiterFor = r => new graft.store.CommitArbiter {
+            def withCommitLock[T](root: String)(body: => T): T = {
+              if (root == raced && armed.compareAndSet(true, false)) rival(raced)
+              saved(root).withCommitLock(root)(body)
+            }
+          }
+          op(raced)
+        } finally Manifest.arbiterFor = saved
+        assert(!armed.get, s"$opName never published, so the $rivalName never ran")
+        val serial = copyOfBase("serial")
+        rival(serial)
+        op(serial)
+        val (got, want) = (rows(raced), rows(serial))
+        assert(got == want, s"$opName raced by the $rivalName: lost " +
+          s"${want.diff(got)}, gained ${got.diff(want)} vs the serial order")
+      }
+    }
+
   test("bloom probe hashes the column's SCAN type on plain-append tables (no recorded schema)") {
     val root = newRoot("bloomtype")
     // plain appends never record SchemaJsonKey; hash-split layout so
