@@ -9,10 +9,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * events, documents, embeddings — one parquet file each under an sf dir.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Engine contract: `events.ts` is nanos-since-epoch (LongType) — every
     * downstream consumer (q36/q42/q56, StreamOps, AsOfJoinPlan) does integer
     * nanos arithmetic on it. The driver's parquet has stored `ts` as
@@ -46,9 +42,4 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-
-  /** Register every testdata table as a temp view so `spark.sql` queries
-    * can reference the same names the DuckDB oracle uses. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

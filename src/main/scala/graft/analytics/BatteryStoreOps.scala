@@ -407,15 +407,15 @@ trait BatteryStoreOps extends BatteryModels {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = t(s, dir, "documents").select("doc_id", "text", "source")
       val base = java.nio.file.Files.createTempDirectory("graft_q153").toString
-      val hashedT = "graft_q153_hashed"; val bandedT = "graft_q153_banded"
+      val (hashedRoot, bandedRoot) = (s"$base/hashed", s"$base/banded")
       Dedup.writeCorpusIndex(docs.limit(0), "doc_id", "text",
-        Dedup.CharShingles(5), 8, 4, hashedT, bandedT)
+        Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
       val input = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String, String)]
       val q = graft.streaming.StreamOps.curationPipelineSink(
         input.toDF().toDF("doc_id", "text", "source"),
         "doc_id", "text", "source", Dedup.CharShingles(5), 8, 4,
-        hashedT, bandedT, minJaccard = 0.5,
+        hashedRoot, bandedRoot, minJaccard = 0.5,
         s"$base/admitted", s"$base/scd2_open", s"$base/scd2_closed",
         s"$base/ckpt")
       // ONE collect sliced driver-side, not three filtered scans: the
@@ -430,7 +430,7 @@ trait BatteryStoreOps extends BatteryModels {
       }
       q.stop()
       val admitted = s.read.parquet(s"$base/admitted")
-      val versions = graft.store.Store.scd2VersionsAtomic(
+      val versions = graft.store.Store.scd2Versions(
         s, s"$base/scd2_open", s"$base/scd2_closed")
       admitted.as("d").join(versions.as("v"),
           col("d.source") === col("v.source") &&

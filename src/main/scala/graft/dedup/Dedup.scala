@@ -331,32 +331,6 @@ object Dedup {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
-  private val hexChars = "0123456789abcdef".toCharArray
-  /** Lowercase hex md5, identical to Spark's and DuckDB's `md5()`.
-    * Table-driven hex — this runs ~k·|shingles| times per row in the
-    * MinHash path, so no per-byte Formatter allocations. */
-  def md5Hex(s: String): String = {
-    val d = md5Digest.get(); d.reset()
-    val bytes = d.digest(s.getBytes("UTF-8"))
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      val v = bytes(i) & 0xff
-      out(i * 2) = hexChars(v >>> 4)
-      out(i * 2 + 1) = hexChars(v & 15)
-      i += 1
-    }
-    new String(out)
-  }
-
-  /** k MinHash values of a shingle set: per seed, the lexicographic min
-    * of md5(seed || shingle) hex strings — reproducible in any engine
-    * with md5(). NOTE: this is the slow reference variant (k full md5
-    * digests per shingle); the production path is the permutation
-    * family below (ONE md5 per shingle, k cheap linear maps). */
-  def minhashSigScala(sh: Seq[String], k: Int): IndexedSeq[String] =
-    (0 until k).map(seed => sh.iterator.map(s => md5Hex(seed.toString + s)).min)
-
   /** Prime modulus 2³¹−1 for the permutation-minhash family. Small
     * enough that a·x+b stays within a signed 64-bit product (a,x < P ⇒
     * a·x < 2⁶²), so any BIGINT engine reproduces it exactly. */
@@ -376,8 +350,9 @@ object Dedup {
   /** k permutation-minhash values over a 60-bit shingle-hash set:
     * min over shingles of (a_i·(x mod P) + b_i) mod P. Cost is ONE md5
     * per shingle total (the [[shingleHash60]] pass) + k multiply-adds —
-    * ~k× fewer digests than [[minhashSigScala]], which is the
-    * difference between a CPU-bound and an I/O-bound scan at 100 TB. */
+    * ~k× fewer digests than a per-seed md5 signature (k digests per
+    * shingle), which is the difference between a CPU-bound and an
+    * I/O-bound scan at 100 TB. */
   def minhashPermScala(h: Iterable[Long], k: Int): Array[Long] = {
     val (as, bs) = permArrays(k)
     val mins = Array.fill(k)(Long.MaxValue)
@@ -405,44 +380,17 @@ object Dedup {
       (cs.map(_._1).toArray, cs.map(_._2).toArray)
     })
 
-  /** Signature + banding computed in ONE in-JVM UDF returning the
-    * band-signature strings ("m_i|m_j|...", one per band).
-    *
-    * WHY a monolithic UDF: two independent Spark 4.1.2 wrong-results
-    * hazards surfaced (caught only by the DuckDB oracle) when this was
-    * composed from expression-level pieces: (a) one lambda-bearing
-    * shingle `transform` reused by several outer higher-order minhash
-    * lambdas nondeterministically mis-binds the nested lambda
-    * variables; (b) a UDF-produced array consumed by several
-    * `transform`s in a full-table scan showed cross-row result
-    * contamination (29 distinct minhash values across 500 distinct
-    * docs). A single opaque UDF has neither problem.
-    *
-    * NOTE: this is the LEGACY md5-string signature (k digests per
-    * shingle), kept for [[withMinhashSignature]] and its regression
-    * spec; the production LSH path is [[graft.functions.MinhashBandSigs]]
-    * (one md5 per shingle + k linear permutations). */
-  private def bandSigsUdf(mode: ShingleMode, bands: Int, rowsPerBand: Int): UserDefinedFunction =
-    udf { (text: String) =>
-      Option(text).map { t =>
-        val mins = minhashSigScala(mode(t), bands * rowsPerBand)
-        (0 until bands).map(b =>
-          (0 until rowsPerBand).map(r => mins(b * rowsPerBand + r)).mkString("|"))
-      }
-    }
-
-  /** MinHash signature as `k` columns named minhash_0..minhash_{k-1}
-    * over char n-gram shingles. */
-  def withMinhashSignature(
-      df: DataFrame, textCol: String, shingleN: Int, k: Int): DataFrame = {
-    val sigUdf = bandSigsUdf(CharShingles(shingleN), k, 1)
-    val withSig = df.withColumn("__sig", sigUdf(col(textCol)))
-    withSig.select((df.columns.map(col).toIndexedSeq ++
-      (0 until k).map(i => element_at(col("__sig"), i + 1).as(s"minhash_$i"))): _*)
-  }
-
-  // Per-band signature strings now come from the codegen expression
-  // graft.functions.MinhashBandSigs (one eval per doc, no UDF fence).
+  // Two Spark 4.1.2 wrong-results hazards, each caught only by the
+  // DuckDB oracle, keep every signature kernel an opaque expression
+  // rather than a composition of higher-order functions: (a) one
+  // lambda-bearing shingle `transform` reused by several outer
+  // higher-order minhash lambdas nondeterministically mis-binds the
+  // nested lambda variables; (b) a UDF-produced array consumed by
+  // several `transform`s in a full-table scan showed cross-row result
+  // contamination (29 distinct minhash values across 500 distinct
+  // docs). Per-band signature strings therefore come from the codegen
+  // expression graft.functions.MinhashBandSigs (one eval per doc, no
+  // lambda nesting, no UDF fence).
 
   /** (id, h): sorted distinct 60-bit shingle hashes per doc — the ONE
     * md5 pass, shared by both LSH banding and exact-Jaccard
@@ -485,8 +433,9 @@ object Dedup {
     * bucket join downstream is family-agnostic; what is NOT
     * family-agnostic is consistency: an index written with one family
     * probed with the other matches nothing — a SILENT recall hole.
-    * [[writeCorpusIndex]] therefore records the family as a table
-    * property and [[admitBatch]] fails loudly on a mismatch. */
+    * [[writeCorpusIndex]] therefore records the family in the banded
+    * root's manifest metadata and [[admitBatch]] fails loudly on a
+    * mismatch. */
   sealed abstract class SigFamily(val name: String) {
     private[graft] def sigCol(h: Column, bands: Int, rowsPerBand: Int): Column
   }
@@ -624,7 +573,7 @@ object Dedup {
     * duplicate something already in the corpus, given the corpus's
     * stored signature index (`corpusBanded`, see [[bandedSigs]]) and
     * stored fingerprints (`corpusHashed`, see [[hashedDocs]]) — in
-    * production both read back from [[graft.store.Store]] tables, not
+    * production both read back from the [[writeCorpusIndex]] roots, not
     * recomputed. The batch pays ONE shingle-hash pass, shared between
     * banding and verification via localCheckpoint exactly as in
     * [[verifiedNearDupPairs]] (same fault-tolerance caveat); the
@@ -638,9 +587,9 @@ object Dedup {
       corpusBanded: DataFrame, corpusHashed: DataFrame,
       maxBucketSize: Int = Int.MaxValue,
       family: SigFamily = PermMinhash): DataFrame = {
-    // frame-based form: no table to carry the family marker, so the
+    // frame-based form: no manifest to carry the family marker, so the
     // consistency contract is the CALLER's — `family` must be the one
-    // that wrote `corpusBanded` (admitBatch enforces it for tables)
+    // that wrote `corpusBanded` (admitBatch enforces it for index roots)
     val batchHashed = hashedDocs(batch, idCol, textCol, mode).localCheckpoint(false)
     val pairs = incrementalCandidatePairs(
       batchHashed.select(col("id"),
@@ -660,35 +609,17 @@ object Dedup {
     minhashCandidatePairs(df, idCol, textCol, CharShingles(shingleN), bands, rowsPerBand)
 
   /** Bootstrap the persistent corpus dedup index: one shingle-hash pass
-    * over the founding corpus, fingerprints to `hashedTable` (id, h)
-    * and banded signatures to `bandedTable` (id, band, bandsig), both
-    * as [[graft.store.Store]] managed tables. Written hashed-first for
-    * the same reason [[admitBatch]] appends hashed-first. */
+    * over the founding corpus, fingerprints to `hashedRoot` (id, h) and
+    * banded signatures to `bandedRoot` (id, band, bandsig), each a
+    * [[graft.store.Manifest]] root published by one atomic commit.
+    * Written hashed-first for the same reason [[admitBatch]] appends
+    * hashed-first. The signature family is recorded ON the index, in
+    * the banded root's manifest metadata: a future probe with the other
+    * family would bucket-match nothing (silent recall hole), so the
+    * mismatch must be detectable at probe time, not by audit — and
+    * metadata survives compaction without re-assertion. An empty
+    * `docs` (e.g. `docs.limit(0)`) bootstraps an empty index. */
   def writeCorpusIndex(
-      docs: DataFrame, idCol: String, textCol: String, mode: ShingleMode,
-      bands: Int, rowsPerBand: Int,
-      hashedTable: String, bandedTable: String,
-      family: SigFamily = PermMinhash): Unit = {
-    val hashed = hashedDocs(docs, idCol, textCol, mode).localCheckpoint(false)
-    graft.store.Store.overwrite(hashed, hashedTable)
-    graft.store.Store.overwrite(
-      hashed.select(col("id"),
-        posexplode(family.sigCol(col("h"), bands, rowsPerBand)).as(Seq("band", "bandsig"))),
-      bandedTable)
-    // record the family ON the index: a future probe with the other
-    // family would bucket-match nothing (silent recall hole), so the
-    // mismatch must be detectable at probe time, not by audit
-    docs.sparkSession.sql(
-      s"ALTER TABLE $bandedTable SET TBLPROPERTIES ('graft.sig.family' = '${family.name}')")
-    ()
-  }
-
-  /** [[writeCorpusIndex]] on the ATOMIC manifest store
-    * ([[graft.store.Manifest]]): the two index parts live under
-    * versioned roots; the family marker travels in the manifest's
-    * metadata map instead of TBLPROPERTIES (so it survives compaction
-    * without re-assertion). */
-  def writeCorpusIndexManifest(
       docs: DataFrame, idCol: String, textCol: String, mode: ShingleMode,
       bands: Int, rowsPerBand: Int,
       hashedRoot: String, bandedRoot: String,
@@ -703,22 +634,45 @@ object Dedup {
     ()
   }
 
-  /** [[admitBatch]] on the ATOMIC manifest store — the standing admit
-    * loop inheriting snapshot-isolated commits: every append/compact
-    * publishes by one atomic manifest rename, so a probe racing the
-    * maintenance pass reads a complete committed index snapshot, never
-    * the half-rewritten table the catalog form documents as its
-    * residual window (Store.compact's rename swap). What the manifest
-    * form gives up: the catalog form's bucketed layout options — the
-    * probe here shuffles the (small) batch side against the corpus
-    * scan. Same protocol ordering (hashed committed FIRST; a crash
-    * between the commits leaves fingerprints without banded rows,
-    * which is screened-but-never-probed = harmless), same replay
-    * story (a replayed batch near-duplicates its own prior admissions
-    * at jaccard 1.0 and is screened out, so nothing re-appends).
-    * Maintenance: when a root's current file list exceeds
-    * `compactMinFiles`, compact + gc — both reader-safe. */
-  def admitBatchManifest(
+  /** The standing ingest transaction: screen a new batch against the
+    * stored corpus index ([[writeCorpusIndex]]; the probe is
+    * [[incrementalNearDupPairs]]'s), ADMIT the docs that near-duplicate
+    * nothing (< `minJaccard` against every candidate), and append ONLY
+    * the admitted docs' fingerprints and banded signatures to the index
+    * roots — so tomorrow's batch is screened against today's admissions
+    * without any recompute. Returns the admitted batch rows (original
+    * columns).
+    *
+    * Contracts and caveats, in scale order:
+    *  - Batch ids must be disjoint from corpus ids (they are the
+    *    index's primary key).
+    *  - Intra-batch near-dups are NOT screened here — both get
+    *    admitted. Pre-dedup the batch ([[exactDedup]] +
+    *    [[verifiedNearDupPairs]]) when that matters; at daily-ingest
+    *    scale the batch-local pass is cheap relative to the probe.
+    *  - Every append and compaction publishes by one atomic manifest
+    *    commit, so a probe racing the maintenance pass reads a complete
+    *    committed index snapshot. The two appends are two commits, not
+    *    one: hashed is committed FIRST deliberately — a crash between
+    *    them leaves fingerprints without banded rows, which is harmless
+    *    (docs absent from the banded index are never probed, and
+    *    re-running the batch re-screens it). The reverse order could
+    *    leave banded rows whose fingerprint lookup inner-join silently
+    *    drops candidates — a silent recall hole.
+    *  - Replay is idempotent through the screen itself: a replayed
+    *    batch near-duplicates its own prior admissions at jaccard 1.0,
+    *    so nothing re-appends.
+    *  - The signature family must match the one recorded on the banded
+    *    root (an index without a marker was written by [[PermMinhash]]);
+    *    a mismatch fails loudly.
+    *  - The batch pays ONE shingle-hash pass (localCheckpoint shared
+    *    by screen + admission append), matching
+    *    [[verifiedNearDupPairs]]'s fault-tolerance tradeoff.
+    * Maintenance: each admission adds files to both roots; when a
+    * root's current file list exceeds `compactMinFiles` it is compacted
+    * and gc'd in-loop — both reader-safe, and screen verdicts are
+    * unaffected (compaction rewrites the same rows into fewer files). */
+  def admitBatch(
       batch: DataFrame, idCol: String, textCol: String, mode: ShingleMode,
       bands: Int, rowsPerBand: Int,
       hashedRoot: String, bandedRoot: String,
@@ -730,7 +684,7 @@ object Dedup {
     import graft.store.Manifest
     val bandedSnap = Manifest.current(spark, bandedRoot).getOrElse(
       throw new IllegalArgumentException(
-        s"$bandedRoot has no committed corpus index — writeCorpusIndexManifest first"))
+        s"$bandedRoot has no committed corpus index — writeCorpusIndex first"))
     bandedSnap.meta.get("graft.sig.family") match {
       case Some(f) => require(f == family.name,
         s"corpus index $bandedRoot was written with signature family '$f' but this " +
@@ -754,7 +708,8 @@ object Dedup {
       .filter(jaccardOfHashSets(col("__ha"), col("__hb")) >= minJaccard)
       .select(col("batch_id").as("id")).distinct()
     val admittedHashed = batchHashed.join(dupIds, Seq("id"), "left_anti")
-      .localCheckpoint(false)
+      .localCheckpoint(false) // appended twice below; also decouples the
+                              // writes from the screen's lineage
     Manifest.append(admittedHashed, hashedRoot)
     Manifest.append(banded(admittedHashed), bandedRoot,
       meta = Map("graft.sig.family" -> family.name))
@@ -771,104 +726,16 @@ object Dedup {
     admitted
   }
 
-  /** The signature family recorded on a stored banded-signature table,
-    * if any (pre-family indexes carry no marker and are treated as
-    * [[PermMinhash]], which is what wrote them). */
-  private[graft] def storedFamily(
-      spark: org.apache.spark.sql.SparkSession, bandedTable: String): Option[String] =
-    spark.sql(s"SHOW TBLPROPERTIES $bandedTable").collect()
-      .collectFirst { case r if r.getString(0) == "graft.sig.family" => r.getString(1) }
-
-  /** The standing ingest transaction: screen a new batch against the
-    * stored corpus index ([[incrementalNearDupPairs]]), ADMIT the docs
-    * that near-duplicate nothing (< `minJaccard` against every
-    * candidate), and append ONLY the admitted docs' fingerprints and
-    * banded signatures to the index tables — so tomorrow's batch is
-    * screened against today's admissions without any recompute.
-    * Returns the admitted batch rows (original columns).
-    *
-    * Contracts and caveats, in scale order:
-    *  - Batch ids must be disjoint from corpus ids (they are the
-    *    index's primary key).
-    *  - Intra-batch near-dups are NOT screened here — both get
-    *    admitted. Pre-dedup the batch ([[exactDedup]] +
-    *    [[verifiedNearDupPairs]]) when that matters; at daily-ingest
-    *    scale the batch-local pass is cheap relative to the probe.
-    *  - The two appends are not one transaction (Spark's catalog is
-    *    non-transactional, same caveat as [[graft.store.Store.compact]]).
-    *    Hashed is appended FIRST deliberately: a crash between the
-    *    appends leaves fingerprints without banded rows, which is
-    *    harmless (docs absent from the banded index are never probed,
-    *    and re-running the batch re-screens it). The reverse order
-    *    could leave banded rows whose fingerprint lookup inner-join
-    *    silently drops candidates — a silent recall hole.
-    *  - The batch pays ONE shingle-hash pass (localCheckpoint shared
-    *    by screen + admission append), matching
-    *    [[verifiedNearDupPairs]]'s fault-tolerance tradeoff. */
-  def admitBatch(
-      batch: DataFrame, idCol: String, textCol: String, mode: ShingleMode,
-      bands: Int, rowsPerBand: Int,
-      hashedTable: String, bandedTable: String,
-      minJaccard: Double,
-      maxBucketSize: Int = Int.MaxValue,
-      compactMinFiles: Int = 64,
-      family: SigFamily = PermMinhash): DataFrame = {
-    val spark = batch.sparkSession
-    storedFamily(spark, bandedTable) match {
-      case Some(f) => require(f == family.name,
-        s"corpus index $bandedTable was written with signature family '$f' but this " +
-          s"probe uses '${family.name}' — a mismatched family buckets nothing and is " +
-          "a silent recall hole")
-      case None => require(family == PermMinhash,
-        s"corpus index $bandedTable carries no family marker (pre-family index = perm) " +
-          s"but this probe uses '${family.name}'")
-    }
-    val batchHashed = hashedDocs(batch, idCol, textCol, mode).localCheckpoint(false)
-    def banded(h: DataFrame): DataFrame = h.select(col("id"),
-      posexplode(family.sigCol(col("h"), bands, rowsPerBand)).as(Seq("band", "bandsig")))
-    val pairs = incrementalCandidatePairs(
-      banded(batchHashed),
-      spark.table(bandedTable), maxBucketSize)
-    val dupIds = pairs
-      .join(batchHashed.select(col("id").as("batch_id"), col("h").as("__ha")), "batch_id")
-      .join(spark.table(hashedTable).select(col("id").as("corpus_id"), col("h").as("__hb")),
-        "corpus_id")
-      .filter(jaccardOfHashSets(col("__ha"), col("__hb")) >= minJaccard)
-      .select(col("batch_id").as("id")).distinct()
-    val admittedHashed = batchHashed.join(dupIds, Seq("id"), "left_anti")
-      .localCheckpoint(false) // appended twice below; also decouples the
-                              // writes from the screen's lineage
-    graft.store.Store.append(admittedHashed, hashedTable)
-    graft.store.Store.append(banded(admittedHashed), bandedTable)
-    maintainCorpusIndex(spark, hashedTable, bandedTable, minFiles = compactMinFiles)
-    // compaction swaps through a fresh table, which drops TBLPROPERTIES —
-    // re-assert the family marker so the NEXT probe's check still works
-    spark.sql(
-      s"ALTER TABLE $bandedTable SET TBLPROPERTIES ('graft.sig.family' = '${family.name}')")
-    batch.join(admittedHashed.select(col("id").as(idCol)), Seq(idCol), "left_semi")
-  }
-
-  /** The maintenance half of the admission loop: every [[admitBatch]]
-    * appends NEW FILES to both index tables, which after N daily
-    * batches is precisely the small-files sprawl
-    * [[graft.store.Store.fileReport]] was built to detect — a
-    * 10⁶-tiny-file index spends the probe's time in parquet footers
-    * and task scheduling, not data. Runs the (driver-side, metadata-
-    * only) report on each index table and compacts any whose file
-    * count exceeds both its byte-justified target AND `minFiles` —
-    * the extra floor keeps the loop from rewriting a young index on
-    * every admission just because two batches made two files.
-    * Screen verdicts are unaffected: compaction rewrites the same
-    * rows into fewer files. Called by [[admitBatch]] after its
-    * appends; callable standalone for out-of-band maintenance. */
-  def maintainCorpusIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      hashedTable: String, bandedTable: String,
-      targetBytes: Long = 128L * 1024 * 1024, minFiles: Int = 64): Unit =
-    maintainIndexTables(spark, Seq(hashedTable, bandedTable), targetBytes, minFiles)
-
-  /** Table-list form of the maintenance pass, shared with the
-    * substring-dedup loop's single gram table. */
+  /** The maintenance half of the substring-dedup loop
+    * ([[admitSpansBatch]]): every admission appends NEW FILES to the
+    * gram table, which after N daily batches is precisely the
+    * small-files sprawl [[graft.store.Store.fileReport]] was built to
+    * detect — a 10⁶-tiny-file index spends the probe's time in parquet
+    * footers and task scheduling, not data. Runs the (driver-side,
+    * metadata-only) report on each table and compacts any whose file
+    * count exceeds both its byte-justified target AND `minFiles` — the
+    * extra floor keeps the loop from rewriting a young index on every
+    * admission just because two batches made two files. */
   def maintainIndexTables(
       spark: org.apache.spark.sql.SparkSession, tables: Seq[String],
       targetBytes: Long = 128L * 1024 * 1024, minFiles: Int = 64): Unit =

@@ -19,8 +19,8 @@ import graft.dedup.Dedup
   * fence hurts most at 100 TB. As opaque expressions they ALSO keep the
   * protection the UDFs existed for: their output array is a leaf value
   * to any downstream higher-order function, so the documented Spark
-  * 4.1.2 nested-lambda mis-binding hazard (Dedup.scala bandSigsUdf
-  * scaladoc) can never see inside them.
+  * 4.1.2 nested-lambda mis-binding hazard (the hazard note above
+  * Dedup.hashedDocs) can never see inside them.
   *
   * Semantics are bit-for-bit those of the UDFs they replace (the DuckDB
   * oracles pin them): md5-based 60-bit shingle hashes

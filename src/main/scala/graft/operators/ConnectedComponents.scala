@@ -116,12 +116,6 @@ object ConnectedComponents {
     spark.createDataset(labels).toDF("id", "comp")
   }
 
-  /** Cluster histogram: (component, n_members), smallest id is the
-    * cluster representative. */
-  def clusterSizes(pairs: DataFrame): DataFrame =
-    components(pairs).groupBy("comp").agg(count(lit(1)).as("n_members"))
-      .select(col("comp").as("component"), col("n_members"))
-
   /** INCREMENTAL connected components — fold a NEW edge batch into an
     * existing exact min-label assignment without recomputing over the
     * full edge history: the missing piece of the standing near-dup

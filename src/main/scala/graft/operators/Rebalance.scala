@@ -20,10 +20,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *      between the leaves and this stage. Any wide op already runs
   *      the downstream stage at `spark.sql.shuffle.partitions`
   *      parallelism, so there is nothing to fix; and
-  *  (b) the estimated leaf split count is under half the target
-  *      (default `sparkContext.defaultParallelism`; override or
-  *      disable with the `graft.cpuStageParallelism` conf — 0
-  *      disables).
+  *  (b) the estimated leaf split count is at most half the target,
+  *      `sparkContext.defaultParallelism`.
   * Both checks read the OPTIMIZED LOGICAL plan and file statistics
   * only — deliberately no `df.rdd`, which under AQE materializes every
   * upstream shuffle stage at "planning" time and would double-execute
@@ -70,13 +68,7 @@ object Rebalance {
     // throw (UnsupportedOperationChecker); the valve is a batch-scan
     // concept anyway, so it stays closed for streams.
     if (df.isStreaming) return df
-    // Tolerant parse, matching the maxPartitionBytes convention below:
-    // a malformed conf degrades to the default instead of failing every
-    // query in the dedup family.
-    val target = spark.conf.getOption("graft.cpuStageParallelism")
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    if (target <= 0) return df
+    val target = spark.sparkContext.defaultParallelism
     val plan = df.queryExecution.optimizedPlan
     if (plan.collectFirst { case p if isWide(p) => p }.nonEmpty) return df
     val maxPartitionBytes = try {

@@ -528,7 +528,7 @@ object Similarity {
     * the k zip_with lambdas: feeding one lambda-bearing array
     * expression into k outer higher-order functions is the documented
     * Spark 4.1.2 nested-lambda wrong-results hazard
-    * (Dedup.scala bandSigsUdf scaladoc). That protection relies on the
+    * (the hazard note above Dedup.hashedDocs). That protection relies on the
     * projection NOT collapsing, which Catalyst only guarantees while
     * `__qv` is referenced more than once — so a 1-entry codebook goes
     * through least(c, c) (same value, two references) instead of the
@@ -1376,7 +1376,7 @@ object Similarity {
     * clusters ([[probeAssigned]]), and the codebook fold touches
     * k·dims + batch rows. After the append, [[maintainSemanticIndex]]
     * compacts the bucketed index when N small admissions have sprawled
-    * it into small files (same policy as `Dedup.maintainCorpusIndex`).
+    * it into small files (same policy as `Dedup.maintainIndexTables`).
     *
     * Note the admitted rows keep the CURRENT codebook's assignment;
     * clusters therefore drift from their true Lloyd optimum as the
@@ -1420,7 +1420,7 @@ object Similarity {
   }
 
   /** The maintenance half of the semantic admission loop — the
-    * embedding twin of `Dedup.maintainCorpusIndex`: every
+    * embedding twin of `Dedup.maintainIndexTables`: every
     * [[admitSemanticBatch]] appends NEW FILES to the bucketed index,
     * which after N daily batches is the small-files sprawl
     * [[graft.store.Store.fileReport]] detects. Compacts the index

@@ -263,28 +263,31 @@ object Store {
   /** The SPLIT SCD-2 store — the shape that survives 100 TB of
     * history: [[scd2Apply]] returns the whole table, so a sink built
     * on it rewrites ALL closed versions every batch (O(history) per
-    * batch). Here the dimension lives as two parts instead:
+    * batch). Here the dimension lives as two [[Manifest]] roots
+    * instead, each published by atomic manifest commits:
     *
-    *  - `openTable`: ONE row per key — the open versions. Overwritten
-    *    per batch: O(keys), never O(history).
-    *  - `closedPath`: an APPEND-ONLY parquet log of closed versions.
-    *    Rows are appended exactly once through any replay (left-anti
-    *    on (key, valid_from) against the stored log — the
-    *    admitPostingsBatch dedup pattern; at scales where that probe
-    *    dominates, bucket the log by key or keep a (key, valid_from)
-    *    registry beside it).
+    *  - `openRoot`: ONE row per key — the open versions. Replaced per
+    *    batch: O(keys), never O(history). Bootstrap it with
+    *    `Manifest.overwrite(scd2Init(...), openRoot)`.
+    *  - `closedRoot`: an APPEND-ONLY log of closed versions. Rows are
+    *    appended exactly once through any replay (left-anti on (key,
+    *    valid_from) against the stored log — the admitPostingsBatch
+    *    dedup pattern; at scales where that probe dominates, cluster
+    *    the log by key or keep a (key, valid_from) registry beside it).
     *
-    * One transaction = [[scd2ApplySplit]]: compute the rebuilt open
-    * timeline (EAGER checkpoint — the write replaces the table the
-    * plan reads), append the batch's newly-closed versions to the log,
-    * then overwrite the open slice. WRITE ORDER IS LOAD-BEARING:
-    * closed-append happens FIRST — a crash between the two writes
-    * leaves the old open table in place, and the replay's re-derived
-    * closed rows anti-join away against the already-appended ones;
-    * the reverse order could lose a closed version forever (open
-    * overwritten ⇒ the replay can no longer derive the version it was
-    * supposed to close). Replays re-run the whole transaction
-    * idempotently. [[scd2Versions]] is the read view (open ∪ log).
+    * One transaction: compute the rebuilt open timeline (EAGER
+    * checkpoint — the write replaces the root the plan reads), append
+    * the batch's newly-closed versions to the log, then replace the
+    * open slice. WRITE ORDER IS LOAD-BEARING: closed-append happens
+    * FIRST — a crash between the two commits leaves the old open slice
+    * in place, and the replay's re-derived closed rows anti-join away
+    * against the already-appended ones; the reverse order could lose a
+    * closed version forever (open replaced ⇒ the replay can no longer
+    * derive the version it was supposed to close). Replays re-run the
+    * whole transaction idempotently. A reader racing either write
+    * always resolves a complete committed snapshot, and a crash
+    * between staging and commit leaves only invisible orphans for
+    * [[Manifest.gc]]. [[scd2Versions]] is the read view (open ∪ log).
     *
     * RETROACTIVE-CHANGE GUARD: the apply runs in rebuildHistory mode
     * (replays demand it — a replayed change may be effective before
@@ -297,15 +300,16 @@ object Store {
     * closed version. Guarded loudly instead: after the replay
     * anti-join, any surviving (genuinely new) closed row whose
     * `valid_from` precedes its key's max logged `valid_to` is a
-    * retroactive rewrite → throw, mirroring the monolithic non-rebuild
-    * reject. (A legitimate new closure always starts at-or-after its
-    * key's last logged closure — the open version it closes did.) The
-    * probe reads the closed log restricted to batch keys, the same
-    * cost class as the replay anti-join beside it. */
+    * retroactive rewrite → throw before either commit, mirroring the
+    * monolithic non-rebuild reject. (A legitimate new closure always
+    * starts at-or-after its key's last logged closure — the open
+    * version it closes did.) The probe reads the closed log restricted
+    * to batch keys, the same cost class as the replay anti-join beside
+    * it. */
   def scd2ApplySplit(spark: SparkSession, changes: DataFrame,
-      openTable: String, closedPath: String, keyCols: Seq[String],
+      openRoot: String, closedRoot: String, keyCols: Seq[String],
       effectiveCol: String): Unit = {
-    val open = table(spark, openTable)
+    val open = Manifest.read(spark, openRoot)
     // rebuildHistory: replayed changes must coincide-and-dedup against
     // the open versions they already minted (and retro vs an open
     // version superseded IN the replayed batch must not throw)
@@ -313,77 +317,18 @@ object Store {
         rebuildHistory = true)
       .localCheckpoint() // EAGER: both writes below invalidate inputs
     val newlyClosed = updated.filter(!col("is_current"))
-    val logKeyed =
-      if (pathExists(spark, closedPath))
-        Some(spark.read.parquet(closedPath)
-          .join(changes.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-          .localCheckpoint()) // read once; feeds both the replay anti-join and the retro guard
-      else None
-    val fresh = logKeyed match {
-      case Some(log) =>
-        // replay anti-join + retro guard in one materialization (same
-        // fusion as [[scd2ApplySplitAtomic]] — the guard was an extra
-        // full pass of touched-key history per applied batch)
-        val maxVt = log.groupBy(keyCols.map(col): _*)
-          .agg(org.apache.spark.sql.functions.max(col("valid_to")).as("__max_vt"))
-        val retroObs = org.apache.spark.sql.Observation()
-        val deduped = newlyClosed.join(
-            log.select((keyCols :+ "valid_from").map(col): _*),
-            keyCols :+ "valid_from", "left_anti")
-          .join(maxVt, keyCols, "left")
-          .observe(retroObs, org.apache.spark.sql.functions.sum(
-            when(col("valid_from") < col("__max_vt"), 1L).otherwise(0L))
-            .as("retro"))
-          .drop("__max_vt")
-          .localCheckpoint()
-        require(retroObs.get.get("retro").flatMap(Option(_)).forall(_ == 0L),
-          "scd2ApplySplit: change closes a version effective inside the closed log's " +
-            "history — a retroactive rewrite needs a rebuild from the full change log, " +
-            "not a split apply (would append overlapping closed versions)")
-        deduped
-      case None => newlyClosed
-    }
-    fresh.write.mode(SaveMode.Append).parquet(closedPath)
-    logKeyed.foreach(_.unpersist())
-    fresh.unpersist()
-    overwrite(updated.filter(col("is_current")), openTable)
-    updated.unpersist()
-    ()
-  }
-
-  /** [[scd2ApplySplit]] on the ATOMIC manifest store ([[Manifest]]):
-    * the open slice and the closed log each live under a versioned
-    * root, and every write is published by one atomic manifest commit.
-    * Same transaction protocol (closed-append FIRST, then open
-    * replace; replays anti-join; retroactive rewrites reject loudly) —
-    * what changes is the failure surface: a reader racing either write
-    * always resolves a complete committed snapshot, never a
-    * half-rewritten open table, and a crash between staging and commit
-    * leaves only invisible orphans for [[Manifest.gc]]. Bootstrap the
-    * open root with `Manifest.overwrite(scd2Init(...), openRoot)`. */
-  def scd2ApplySplitAtomic(spark: SparkSession, changes: DataFrame,
-      openRoot: String, closedRoot: String, keyCols: Seq[String],
-      effectiveCol: String): Unit = {
-    val open = Manifest.read(spark, openRoot)
-    val updated = scd2Apply(open, changes, keyCols, effectiveCol,
-        rebuildHistory = true)
-      .localCheckpoint()
-    val newlyClosed = updated.filter(!col("is_current"))
     val logSnap = Manifest.current(spark, closedRoot).filter(_.files.nonEmpty)
     val logKeyed = logSnap.map(s =>
       Manifest.readSnapshot(spark, closedRoot, s)
         .join(changes.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-        .localCheckpoint())
+        .localCheckpoint()) // read once; feeds both the replay anti-join and the retro guard
     val fresh = logKeyed match {
       case Some(log) =>
         // replay anti-join + retroactive guard in ONE materialization:
-        // the guard was its own limit(1).count() action that re-planned
-        // and re-computed the whole deduped frame the append then staged
-        // AGAIN — an extra full pass of touched-key history per applied
-        // batch. The guard count now rides the deduped frame's eager
-        // checkpoint as an Observation (left join against per-key max
-        // logged valid_to preserves rows; the helper column is dropped),
-        // and the append stages from the checkpointed blocks.
+        // the guard count rides the deduped frame's eager checkpoint as
+        // an Observation (left join against per-key max logged valid_to
+        // preserves rows; the helper column is dropped), and the append
+        // stages from the checkpointed blocks
         val maxVt = log.groupBy(keyCols.map(col): _*)
           .agg(org.apache.spark.sql.functions.max(col("valid_to")).as("__max_vt"))
         val retroObs = org.apache.spark.sql.Observation()
@@ -397,7 +342,7 @@ object Store {
           .drop("__max_vt")
           .localCheckpoint()
         require(retroObs.get.get("retro").flatMap(Option(_)).forall(_ == 0L),
-          "scd2ApplySplitAtomic: change closes a version effective inside the closed " +
+          "scd2ApplySplit: change closes a version effective inside the closed " +
             "log's history — a retroactive rewrite needs a rebuild from the full " +
             "change log, not a split apply (would append overlapping closed versions)")
         deduped
@@ -411,9 +356,10 @@ object Store {
     ()
   }
 
-  /** Read view of the atomic split store: open ∪ closed-log manifests
-    * (spec-pinned ≡ the monolithic [[scd2Apply]] result). */
-  def scd2VersionsAtomic(spark: SparkSession, openRoot: String,
+  /** Read view of the split SCD-2 store: open ∪ closed-log manifests —
+    * the same frame [[scd2Apply]]'s monolithic form returns
+    * (spec-pinned equal). */
+  def scd2Versions(spark: SparkSession, openRoot: String,
       closedRoot: String): DataFrame = {
     val open = Manifest.read(spark, openRoot)
     Manifest.current(spark, closedRoot).filter(_.files.nonEmpty) match {
@@ -421,26 +367,6 @@ object Store {
         Manifest.readSnapshot(spark, closedRoot, s).select(open.columns.map(col): _*))
       case None => open
     }
-  }
-
-  /** Read view of the split SCD-2 store: open versions ∪ the closed
-    * log — the same frame [[scd2Apply]]'s monolithic form returns
-    * (spec-pinned equal). */
-  def scd2Versions(spark: SparkSession, openTable: String,
-      closedPath: String): DataFrame = {
-    val open = table(spark, openTable)
-    if (pathExists(spark, closedPath))
-      open.unionByName(spark.read.parquet(closedPath)
-        .select(open.columns.map(col): _*))
-    else open
-  }
-
-  /** Filesystem-agnostic existence probe (HDFS/S3A/local all resolve
-    * through the Hadoop FS the path names — a `java.io.File` check
-    * would silently answer "absent" for any non-local store). */
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
   /** Bootstrap a versioned dim from a first snapshot: every row is the
@@ -712,13 +638,4 @@ object Store {
       (name, files.length.toLong, bytes, files.length > target)
     }
   }
-
-  /** Persist a full gold layer; fact partitioned if requested. */
-  def persistGold(
-      gold: Map[String, DataFrame],
-      factPartitionBy: Seq[String] = Nil): Unit =
-    gold.foreach { case (name, df) =>
-      if (name.startsWith("fact_")) overwrite(df, name, factPartitionBy)
-      else overwrite(df, name)
-    }
 }

@@ -153,29 +153,30 @@ object StreamOps {
     *    partition (dynamic overwrite) — replays rewrite, never
     *    duplicate. An EMPTY replay result touches no partition, so the
     *    original batch's admitted rows survive.
-    *  - The index appends are NOT transactional, but they self-heal:
-    *    a replayed doc whose fingerprints already reached the index
-    *    near-duplicates ITSELF at jaccard 1.0 ≥ `minJaccard`, so the
-    *    replay screens it out and appends nothing — admission is
-    *    idempotent through the screen itself, no ledger table needed.
-    *    (Requires `minJaccard` ≤ 1.0, i.e. always.)
+    *  - The two index appends are two atomic manifest commits, not one
+    *    transaction, but they self-heal: a replayed doc whose
+    *    fingerprints already reached the index near-duplicates ITSELF
+    *    at jaccard 1.0 ≥ `minJaccard`, so the replay screens it out and
+    *    appends nothing — admission is idempotent through the screen
+    *    itself, no ledger table needed. (Requires `minJaccard` ≤ 1.0,
+    *    i.e. always.)
     *  - A crash between the two index appends leaves hashed rows
     *    without banded rows — invisible to the probe, so the replay
     *    re-admits the doc; the duplicate fingerprint row is harmless
     *    (admitBatch's verdicts key on distinct ids).
     * Index file sprawl from per-batch appends is handled in-loop by
-    * [[graft.dedup.Dedup.maintainCorpusIndex]] via `compactMinFiles`. */
+    * admitBatch's compact + gc via `compactMinFiles`. */
   def screenAndAdmit(
       docs: DataFrame, idCol: String, textCol: String,
       mode: graft.dedup.Dedup.ShingleMode, bands: Int, rowsPerBand: Int,
-      hashedTable: String, bandedTable: String, minJaccard: Double,
+      hashedRoot: String, bandedRoot: String, minJaccard: Double,
       admittedPath: String, checkpoint: String,
       compactMinFiles: Int = 64): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val admitted = graft.dedup.Dedup.admitBatch(
           b.toDF(), idCol, textCol, mode, bands, rowsPerBand,
-          hashedTable, bandedTable, minJaccard,
+          hashedRoot, bandedRoot, minJaccard,
           compactMinFiles = compactMinFiles)
         upsertBatch(admitted, id, admittedPath)
       }
@@ -497,41 +498,25 @@ object StreamOps {
 
   /** The split-store SCD-2 maintainer — [[scd2Sink]]'s 100 TB form:
     * [[scd2Sink]] overwrites the WHOLE versioned table per batch
-    * (O(history)); this one maintains the open-slice table + the
-    * append-only closed log via the
+    * (O(history)); this one maintains the open-slice root + the
+    * append-only closed-log root via the
     * [[graft.store.Store.scd2ApplySplit]] transaction, so each batch
-    * costs O(open keys + batch) writes regardless of history depth.
-    * Same replay contract (the transaction is idempotent; write order
-    * inside it is load-bearing — see its scaladoc);
+    * costs O(open keys + batch) writes regardless of history depth,
+    * and both parts publish by atomic manifest commits (a reader
+    * racing any batch's writes resolves a complete committed
+    * snapshot). Same replay contract (the transaction is idempotent;
+    * write order inside it is load-bearing — see its scaladoc);
     * [[graft.store.Store.scd2Versions]] is the read view, spec-pinned
-    * equal to the monolithic table. */
+    * equal to the monolithic table. Bootstrap `openRoot` with
+    * `Manifest.overwrite(scd2Init(...), openRoot)` before starting the
+    * stream. */
   def scd2SinkSplit(
-      changes: DataFrame, openTable: String, closedPath: String,
-      keyCols: Seq[String], effectiveCol: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.store.Store.scd2ApplySplit(
-          b.sparkSession, b.toDF(), openTable, closedPath, keyCols, effectiveCol)
-      }
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .start()
-
-  /** [[scd2SinkSplit]] on the ATOMIC manifest store
-    * ([[graft.store.Store.scd2ApplySplitAtomic]]): identical
-    * transaction protocol and replay semantics, but both parts publish
-    * by atomic manifest commits, so a reader racing any batch's writes
-    * always resolves a complete committed snapshot. Bootstrap
-    * `openRoot` with `Manifest.overwrite(scd2Init(...), openRoot)`
-    * before starting the stream. */
-  def scd2SinkSplitAtomic(
       changes: DataFrame, openRoot: String, closedRoot: String,
       keyCols: Seq[String], effectiveCol: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     changes.writeStream
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.store.Store.scd2ApplySplitAtomic(
+        graft.store.Store.scd2ApplySplit(
           b.sparkSession, b.toDF(), openRoot, closedRoot, keyCols, effectiveCol)
       }
       .option("checkpointLocation", checkpoint)
@@ -553,9 +538,8 @@ object StreamOps {
     *     cleaned text. Cross-batch exact dups are the near-dup
     *     screen's job (jaccard 1.0 ≥ any threshold).
     *  3. SCREEN-AND-ADMIT: [[graft.dedup.Dedup.admitBatch]] against
-    *     the standing hashed/banded index (bootstrap the two tables
-    *     with `writeCorpusIndex(docs.limit(0), …)` before the first
-    *     batch).
+    *     the standing hashed/banded index roots (bootstrap them with
+    *     `writeCorpusIndex(docs.limit(0), …)` before the first batch).
     *  4. REPLAY-STABLE ADMITTED SET: the batch's admitted docs are
     *     re-derived as `batch ⋉ hashed-index` (ids are the index's
     *     primary key and batches are id-disjoint) rather than taken
@@ -575,13 +559,13 @@ object StreamOps {
     *     `eff` is a valid effective axis; a replayed batch re-derives
     *     the identical changes, which coincide with their existing
     *     versions and no-op through the rebuild dedup. Applied via
-    *     [[graft.store.Store.scd2ApplySplitAtomic]] on manifest roots
+    *     [[graft.store.Store.scd2ApplySplit]] on manifest roots
     *     (atomic commits; first batch bootstraps the open root). */
   def curateBatch(
       b: DataFrame, batchId: Long,
       idCol: String, textCol: String, sourceCol: String,
       mode: graft.dedup.Dedup.ShingleMode, bands: Int, rowsPerBand: Int,
-      hashedTable: String, bandedTable: String, minJaccard: Double,
+      hashedRoot: String, bandedRoot: String, minJaccard: Double,
       admittedPath: String, openRoot: String, closedRoot: String): Unit = {
     val spark = b.sparkSession
     val cleaned = b.withColumn(textCol,
@@ -592,9 +576,10 @@ object StreamOps {
       .filter(col("__rn") === 1).drop("__rn")
       .localCheckpoint() // one substrate for screen + admitted re-derivation
     graft.dedup.Dedup.admitBatch(exact, idCol, textCol, mode, bands, rowsPerBand,
-      hashedTable, bandedTable, minJaccard)
+      hashedRoot, bandedRoot, minJaccard)
     val admitted = exact.join(
-        spark.table(hashedTable).select(col("id").as(idCol)), Seq(idCol), "left_semi")
+        graft.store.Manifest.read(spark, hashedRoot).select(col("id").as(idCol)),
+        Seq(idCol), "left_semi")
       .localCheckpoint() // consumed by the sink write AND the profile agg
     upsertBatch(admitted, batchId, admittedPath)
     val changes = admitted.groupBy(col(sourceCol).as("source"))
@@ -604,7 +589,7 @@ object StreamOps {
       graft.store.Manifest.overwrite(
         graft.store.Store.scd2Init(changes, Seq("source"), "eff"), openRoot)
     else
-      graft.store.Store.scd2ApplySplitAtomic(
+      graft.store.Store.scd2ApplySplit(
         spark, changes, openRoot, closedRoot, Seq("source"), "eff")
     exact.unpersist()
     admitted.unpersist()
@@ -618,13 +603,13 @@ object StreamOps {
   def curationPipelineSink(
       docs: DataFrame, idCol: String, textCol: String, sourceCol: String,
       mode: graft.dedup.Dedup.ShingleMode, bands: Int, rowsPerBand: Int,
-      hashedTable: String, bandedTable: String, minJaccard: Double,
+      hashedRoot: String, bandedRoot: String, minJaccard: Double,
       admittedPath: String, openRoot: String, closedRoot: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
         curateBatch(b.toDF(), id, idCol, textCol, sourceCol,
-          mode, bands, rowsPerBand, hashedTable, bandedTable, minJaccard,
+          mode, bands, rowsPerBand, hashedRoot, bandedRoot, minJaccard,
           admittedPath, openRoot, closedRoot)
       }
       .option("checkpointLocation", checkpoint)

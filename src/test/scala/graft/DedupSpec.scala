@@ -11,6 +11,9 @@ import graft.dedup.Dedup
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def newRoot(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_dedup_$tag").toString + "/t"
+
   test("latestPerKey keeps exactly the argmax row per key (O-23)") {
     val df = Seq(
       ("a", 1L, "old"), ("a", 5L, "new"), ("b", 3L, "only"),
@@ -76,7 +79,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("incrementalNearDupPairs: batch screened against a STORED corpus index") {
-    import graft.store.Store
+    import graft.store.Manifest
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (2L, "completely different content about databases and distributed query engines"))
@@ -86,98 +89,97 @@ class DedupSpec extends SparkTestBase {
       (11L, "novel content that matches nothing in the existing corpus at all here"))
       .toDF("doc_id", "text")
     // write the corpus index once, read it back — the production shape:
-    // the incremental screen must work from the persisted tables alone
-    Store.overwrite(Dedup.hashedDocs(corpus, "doc_id", "text", Dedup.CharShingles(5)),
-      "t_corpus_hashed")
-    Store.overwrite(Dedup.bandedSigs(spark.table("t_corpus_hashed"), 8, 4),
-      "t_corpus_banded")
-    try {
-      val out = Dedup.incrementalNearDupPairs(
-          batch, "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-          spark.table("t_corpus_banded"), spark.table("t_corpus_hashed"))
-        .as[(Long, Long, Double)].collect().toSet
-      assert(out.contains((10L, 1L, 1.0))) // exact dup of corpus doc 1
-      assert(!out.exists(_._1 == 11L))     // novel doc matches nothing
-      // corpus-side bucket cap: cap 0 excludes every bucket → no pairs
-      val capped = Dedup.incrementalNearDupPairs(
-          batch, "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-          spark.table("t_corpus_banded"), spark.table("t_corpus_hashed"),
-          maxBucketSize = 0)
-        .collect()
-      assert(capped.isEmpty)
-    } finally {
-      Store.drop(spark, "t_corpus_hashed")
-      Store.drop(spark, "t_corpus_banded")
-    }
+    // the incremental screen must work from the persisted roots alone
+    val (hashedRoot, bandedRoot) = (newRoot("corpus_h"), newRoot("corpus_b"))
+    Manifest.overwrite(Dedup.hashedDocs(corpus, "doc_id", "text", Dedup.CharShingles(5)),
+      hashedRoot)
+    Manifest.overwrite(Dedup.bandedSigs(Manifest.read(spark, hashedRoot), 8, 4), bandedRoot)
+    val out = Dedup.incrementalNearDupPairs(
+        batch, "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+        Manifest.read(spark, bandedRoot), Manifest.read(spark, hashedRoot))
+      .as[(Long, Long, Double)].collect().toSet
+    assert(out.contains((10L, 1L, 1.0))) // exact dup of corpus doc 1
+    assert(!out.exists(_._1 == 11L))     // novel doc matches nothing
+    // corpus-side bucket cap: cap 0 excludes every bucket → no pairs
+    val capped = Dedup.incrementalNearDupPairs(
+        batch, "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+        Manifest.read(spark, bandedRoot), Manifest.read(spark, hashedRoot),
+        maxBucketSize = 0)
+      .collect()
+    assert(capped.isEmpty)
   }
 
   test("admitBatch: novel docs admitted and indexed; dups of prior admissions screened") {
-    import graft.store.Store
+    import graft.store.Manifest
     val founding = "the quick brown fox jumps over the lazy dog near the river bank today"
     val novelA = "distributed query engines partition work across executors for scale"
     val novelB = "sequence packing fills token budget bins with greedy running totals"
+    val (hashedRoot, bandedRoot) = (newRoot("ix_h"), newRoot("ix_b"))
+    def indexIds(root: String): Set[Long] =
+      Manifest.read(spark, root).select("id").distinct().as[Long].collect().toSet
     Dedup.writeCorpusIndex(Seq((1L, founding)).toDF("doc_id", "text"),
-      "doc_id", "text", Dedup.CharShingles(5), 8, 4, "t_ix_hashed", "t_ix_banded")
-    try {
-      // batch 1: a dup of the founding doc + one novel doc
-      val a1 = Dedup.admitBatch(
-        Seq((10L, founding), (11L, novelA)).toDF("doc_id", "text"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        "t_ix_hashed", "t_ix_banded", minJaccard = 0.9)
-      assert(a1.select("doc_id").as[Long].collect().toSet == Set(11L))
-      // batch 2: a dup of batch 1's ADMISSION must now be screened too
-      val a2 = Dedup.admitBatch(
-        Seq((20L, novelA), (21L, novelB)).toDF("doc_id", "text"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        "t_ix_hashed", "t_ix_banded", minJaccard = 0.9)
-      assert(a2.select("doc_id").as[Long].collect().toSet == Set(21L))
-      // the index holds exactly the founding doc + the two admissions
-      assert(spark.table("t_ix_hashed").select("id").as[Long].collect().toSet
-        == Set(1L, 11L, 21L))
-      assert(spark.table("t_ix_banded").select("id").distinct().as[Long].collect().toSet
-        == Set(1L, 11L, 21L))
-    } finally {
-      Store.drop(spark, "t_ix_hashed")
-      Store.drop(spark, "t_ix_banded")
-    }
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
+    // batch 1: an exact dup and a near (not exact) dup of the founding
+    // doc, plus one novel doc
+    val batch1 = Seq((10L, founding), (11L, novelA), (12L, founding + "!"))
+      .toDF("doc_id", "text")
+    val a1 = Dedup.admitBatch(batch1, "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9)
+    assert(a1.select("doc_id").as[Long].collect().toSet == Set(11L))
+    // REPLAY of batch 1: its admission screens itself at jaccard 1.0 —
+    // nothing admits, nothing re-appends
+    val replay = Dedup.admitBatch(batch1, "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9)
+    assert(replay.isEmpty)
+    assert(Manifest.read(spark, hashedRoot).count() == 2L)
+    // batch 2: a dup of batch 1's ADMISSION must now be screened too
+    val a2 = Dedup.admitBatch(
+      Seq((20L, novelA), (21L, novelB)).toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9)
+    assert(a2.select("doc_id").as[Long].collect().toSet == Set(21L))
+    // the index holds exactly the founding doc + the two admissions
+    assert(indexIds(hashedRoot) == Set(1L, 11L, 21L))
+    assert(indexIds(bandedRoot) == Set(1L, 11L, 21L))
   }
 
   test("admitBatch with the OPH family: loop works end-to-end; family mismatch fails loud") {
-    import graft.store.Store
+    import graft.store.Manifest
     val founding = "the quick brown fox jumps over the lazy dog near the river bank today"
     val novelA = "distributed query engines partition work across executors for scale"
+    val (hashedRoot, bandedRoot) = (newRoot("oix_h"), newRoot("oix_b"))
+    def family(): Option[String] =
+      Manifest.current(spark, bandedRoot).get.meta.get("graft.sig.family")
     Dedup.writeCorpusIndex(Seq((1L, founding)).toDF("doc_id", "text"),
-      "doc_id", "text", Dedup.CharShingles(5), 8, 4, "t_oix_hashed", "t_oix_banded",
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot,
       family = Dedup.OphMinhash)
-    try {
-      // the marker is recorded on the table
-      assert(Dedup.storedFamily(spark, "t_oix_banded").contains("oph"))
-      // a probe with the WRONG family would bucket nothing — it must
-      // throw, not silently admit duplicates
-      val e = intercept[IllegalArgumentException] {
-        Dedup.admitBatch(Seq((10L, founding)).toDF("doc_id", "text"),
-          "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-          "t_oix_hashed", "t_oix_banded", minJaccard = 0.9) // default = perm
-      }
-      assert(e.getMessage.contains("recall hole"))
-      // the matching family screens the dup and admits the novel doc
-      val a1 = Dedup.admitBatch(
-        Seq((10L, founding), (11L, novelA)).toDF("doc_id", "text"),
+    // the marker is recorded in the banded root's manifest metadata
+    assert(family().contains("oph"))
+    // a probe with the WRONG family would bucket nothing — it must
+    // throw, not silently admit duplicates
+    val e = intercept[IllegalArgumentException] {
+      Dedup.admitBatch(Seq((10L, founding)).toDF("doc_id", "text"),
         "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        "t_oix_hashed", "t_oix_banded", minJaccard = 0.9, family = Dedup.OphMinhash)
-      assert(a1.select("doc_id").as[Long].collect().toSet == Set(11L))
-      // a dup of the ADMISSION is screened on the next batch, and the
-      // family marker survives the admission (incl. any compaction)
-      val a2 = Dedup.admitBatch(
-        Seq((20L, novelA)).toDF("doc_id", "text"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        "t_oix_hashed", "t_oix_banded", minJaccard = 0.9, family = Dedup.OphMinhash)
-      assert(a2.isEmpty)
-      assert(Dedup.storedFamily(spark, "t_oix_banded").contains("oph"))
-    } finally {
-      Store.drop(spark, "t_oix_hashed")
-      Store.drop(spark, "t_oix_banded")
+        hashedRoot, bandedRoot, minJaccard = 0.9) // default = perm
     }
+    assert(e.getMessage.contains("recall hole"))
+    // the matching family screens the dup and admits the novel doc
+    val a1 = Dedup.admitBatch(
+      Seq((10L, founding), (11L, novelA)).toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9, family = Dedup.OphMinhash)
+    assert(a1.select("doc_id").as[Long].collect().toSet == Set(11L))
+    // a dup of the ADMISSION is screened on the next batch, and the
+    // family marker survives the admission and an in-loop compaction
+    val a2 = Dedup.admitBatch(
+      Seq((20L, novelA)).toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9, compactMinFiles = 1,
+      family = Dedup.OphMinhash)
+    assert(a2.isEmpty)
+    assert(Manifest.history(spark, bandedRoot).select("operation").as[String]
+      .collect().contains("compact"))
+    assert(family().contains("oph"))
   }
 
   test("overlapPairs finds subsumption the Jaccard LSH misses; frequent shingles are valved") {
@@ -211,46 +213,41 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("admitBatch maintenance: small-batch sprawl triggers compaction; verdicts unchanged") {
-    import graft.store.Store
+    import graft.store.Manifest
     val founding = "the quick brown fox jumps over the lazy dog near the river bank today"
     val novel = "sequence packing fills token budget bins with greedy running totals"
-    def files(t: String): Long =
-      Store.fileReport(spark, t).agg(sum("n_files")).as[Long].head()
+    val (hashedRoot, bandedRoot) = (newRoot("mx_h"), newRoot("mx_b"))
+    def files(root: String): Int = Manifest.current(spark, root).get.files.size
     Dedup.writeCorpusIndex(Seq((1L, founding)).toDF("doc_id", "text"),
-      "doc_id", "text", Dedup.CharShingles(5), 8, 4, "t_mx_hashed", "t_mx_banded")
-    try {
-      // five single-doc admissions with the compaction floor disabled:
-      // every append adds files — the sprawl fileReport exists to flag
-      (2 to 6).foreach { i =>
-        Dedup.admitBatch(
-          Seq((i * 10L, s"unique document number $i about topic ${i * 7} entirely unlike others"))
-            .toDF("doc_id", "text"),
-          "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-          "t_mx_hashed", "t_mx_banded", minJaccard = 0.9,
-          compactMinFiles = Int.MaxValue)
-      }
-      val before = files("t_mx_hashed")
-      assert(before >= 5, s"expected append sprawl, got $before files")
-      // one more admission with a low floor: the loop compacts in-path
-      val a = Dedup.admitBatch(Seq((100L, founding)).toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
+    // five single-doc admissions with the compaction floor disabled:
+    // every append adds files — the sprawl the in-loop compaction bounds
+    (2 to 6).foreach { i =>
+      Dedup.admitBatch(
+        Seq((i * 10L, s"unique document number $i about topic ${i * 7} entirely unlike others"))
+          .toDF("doc_id", "text"),
         "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        "t_mx_hashed", "t_mx_banded", minJaccard = 0.9, compactMinFiles = 3)
-      assert(a.isEmpty) // the dup is still screened on the sprawled index
-      assert(files("t_mx_hashed") < before)
-      assert(files("t_mx_banded") <= 3)
-      // post-compact verdicts unchanged: dup screened, novel admitted
-      val a2 = Dedup.admitBatch(
-        Seq((101L, founding), (102L, novel)).toDF("doc_id", "text"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        "t_mx_hashed", "t_mx_banded", minJaccard = 0.9,
+        hashedRoot, bandedRoot, minJaccard = 0.9,
         compactMinFiles = Int.MaxValue)
-      assert(a2.select("doc_id").as[Long].collect().toSet == Set(102L))
-      assert(spark.table("t_mx_hashed").select("id").as[Long].collect().toSet
-        == Set(1L, 20L, 30L, 40L, 50L, 60L, 102L))
-    } finally {
-      Store.drop(spark, "t_mx_hashed")
-      Store.drop(spark, "t_mx_banded")
     }
+    val before = files(hashedRoot)
+    assert(before >= 5, s"expected append sprawl, got $before files")
+    // one more admission with a low floor: the loop compacts in-path
+    val a = Dedup.admitBatch(Seq((100L, founding)).toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9, compactMinFiles = 3)
+    assert(a.isEmpty) // the dup is still screened on the sprawled index
+    assert(files(hashedRoot) < before)
+    assert(files(bandedRoot) <= 3)
+    // post-compact verdicts unchanged: dup screened, novel admitted
+    val a2 = Dedup.admitBatch(
+      Seq((101L, founding), (102L, novel)).toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9,
+      compactMinFiles = Int.MaxValue)
+    assert(a2.select("doc_id").as[Long].collect().toSet == Set(102L))
+    assert(Manifest.read(spark, hashedRoot).select("id").as[Long].collect().toSet
+      == Set(1L, 20L, 30L, 40L, 50L, 60L, 102L))
   }
 
   test("jaccardOnPairs: identical → 1.0, disjoint → 0.0, known overlap exact") {
@@ -278,21 +275,6 @@ class DedupSpec extends SparkTestBase {
     val dist = df2.select(Dedup.hamming64(col("x"), col("y"))).as[Long].collect()
     assert(dist(0) == 0L)
     assert(dist(1) > 0L && dist(1) <= 64L)
-  }
-
-  test("minhash signature matches per-row Scala reference on a real table " +
-    "(regression: Spark 4.1.2 nested-lambda + cross-row contamination hazards)") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val sig = Dedup.withMinhashSignature(docs, "text", 5, 8)
-      .select("doc_id", "text", "minhash_0", "minhash_7")
-      .collect()
-    assert(sig.length > 10)
-    sig.foreach { r =>
-      val want = Dedup.minhashSigScala(Dedup.charShinglesScala(r.getString(1), 5), 8)
-      assert(r.getString(2) == want(0), s"doc ${r.getLong(0)} minhash_0")
-      assert(r.getString(3) == want(7), s"doc ${r.getLong(0)} minhash_7")
-    }
   }
 
   test("hamming64 on known bit patterns") {

@@ -2247,7 +2247,7 @@ class ManifestSpec extends SparkTestBase {
     assert(Manifest.current(spark, root).get.meta(Manifest.OpKey) == "compact")
   }
 
-  test("scd2ApplySplitAtomic: ≡ monolithic history; replay-safe; retro reject; reader never sees a mix") {
+  test("scd2ApplySplit: ≡ monolithic history; replay-safe; retro reject; reader never sees a mix") {
     val openRoot = newRoot("scd2o")
     val closedRoot = newRoot("scd2c")
     val init = Store.scd2Init(
@@ -2255,111 +2255,35 @@ class ManifestSpec extends SparkTestBase {
     Manifest.overwrite(init, openRoot)
     val b0 = Seq((1L, "a2", 200L), (2L, "b", 200L), (3L, "c", 200L)).toDF("k", "v", "eff")
     val b1 = Seq((1L, "a3", 300L), (1L, "a4", 350L)).toDF("k", "v", "eff")
-    Store.scd2ApplySplitAtomic(spark, b0, openRoot, closedRoot, Seq("k"), "eff")
+    Store.scd2ApplySplit(spark, b0, openRoot, closedRoot, Seq("k"), "eff")
     // a reader pinned between the transactions keeps a complete table
     val pinnedOpen = Manifest.read(spark, openRoot)
-    Store.scd2ApplySplitAtomic(spark, b1, openRoot, closedRoot, Seq("k"), "eff")
+    Store.scd2ApplySplit(spark, b1, openRoot, closedRoot, Seq("k"), "eff")
     assert(pinnedOpen.filter(!col("is_current")).count() == 0)
 
-    val got = Store.scd2VersionsAtomic(spark, openRoot, closedRoot)
+    def versions() = Store.scd2Versions(spark, openRoot, closedRoot)
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
     val mono = Store.scd2Apply(Store.scd2Apply(init, b0, Seq("k"), "eff"),
         b1, Seq("k"), "eff")
       .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
-    assert(got == mono, s"atomic=$got mono=$mono")
+    assert(versions() == mono, s"split=${versions()} mono=$mono")
 
     // replay of b1 changes nothing (idempotent transaction)
-    Store.scd2ApplySplitAtomic(spark, b1, openRoot, closedRoot, Seq("k"), "eff")
-    assert(Store.scd2VersionsAtomic(spark, openRoot, closedRoot)
-      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet == mono)
+    Store.scd2ApplySplit(spark, b1, openRoot, closedRoot, Seq("k"), "eff")
+    assert(versions() == mono)
 
-    // genuinely retroactive change rejects loudly, store untouched
-    val ex = intercept[IllegalArgumentException](Store.scd2ApplySplitAtomic(spark,
+    // genuinely retroactive change (effective 250, inside key 1's logged
+    // [200, 300) interval) rejects loudly, store untouched
+    val ex = intercept[IllegalArgumentException](Store.scd2ApplySplit(spark,
       Seq((1L, "bad", 250L)).toDF("k", "v", "eff"), openRoot, closedRoot, Seq("k"), "eff"))
     assert(ex.getMessage.contains("retroactive"))
-    assert(Store.scd2VersionsAtomic(spark, openRoot, closedRoot)
-      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet == mono)
-  }
-
-  test("scd2SinkSplitAtomic: streamed batches maintain the atomic split store ≡ monolithic history") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val openRoot = newRoot("sinko")
-    val closedRoot = newRoot("sinkc")
-    val ckpt = Files.createTempDirectory("scd2a_ckpt").toString
-    val init = Store.scd2Init(
-      Seq((1L, "a", 100L), (2L, "b", 100L)).toDF("k", "v", "eff"), Seq("k"), "eff")
-    Manifest.overwrite(init, openRoot)
-    val input = MemoryStream[(Long, String, Long)]
-    val q = graft.streaming.StreamOps.scd2SinkSplitAtomic(
-      input.toDF().toDF("k", "v", "eff"), openRoot, closedRoot, Seq("k"), "eff", ckpt)
-    input.addData((1L, "a2", 200L), (3L, "c", 200L))
-    q.processAllAvailable()
-    input.addData((1L, "a3", 300L))
-    q.processAllAvailable()
-    q.stop()
-    val got = Store.scd2VersionsAtomic(spark, openRoot, closedRoot)
-      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
-    val mono = Store.scd2Apply(Store.scd2Apply(init,
-        Seq((1L, "a2", 200L), (3L, "c", 200L)).toDF("k", "v", "eff"), Seq("k"), "eff"),
-        Seq((1L, "a3", 300L)).toDF("k", "v", "eff"), Seq("k"), "eff")
-      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
-    assert(got == mono, s"atomic stream=$got mono=$mono")
-    // the open root holds exactly one open row per key, all committed
-    assert(Manifest.read(spark, openRoot).count() == 3L)
-  }
-
-  test("admitBatchManifest: screen/admit ≡ the catalog form; replay admits nothing twice; maintenance compacts") {
-    import graft.dedup.Dedup
-    val hashedRoot = newRoot("admith")
-    val bandedRoot = newRoot("admitb")
-    def doc(id: Long, text: String) = (id, text)
-    val corpus = Seq(
-      doc(1L, "the quick brown fox jumps over the lazy dog again and again"),
-      doc(2L, "completely different content about spark manifests and atomic commits")
-    ).toDF("doc_id", "text")
-    Dedup.writeCorpusIndexManifest(corpus, "doc_id", "text",
-      Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
-
-    // batch: one near-dup of doc 1, one fresh doc
-    val batch = Seq(
-      doc(10L, "the quick brown fox jumps over the lazy dog again and again!"),
-      doc(11L, "entirely novel text that matches nothing in the standing corpus")
-    ).toDF("doc_id", "text")
-    val admitted = Dedup.admitBatchManifest(batch, "doc_id", "text",
-      Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot, minJaccard = 0.5)
-    assert(admitted.select("doc_id").as[Long].collect().toSet == Set(11L))
-    // the index grew by exactly the admitted doc
-    assert(Manifest.read(spark, hashedRoot).count() == 3)
-
-    // REPLAY: the same batch screens against its own prior admission
-    // (jaccard 1.0) — nothing admits, nothing re-appends
-    val replay = Dedup.admitBatchManifest(batch, "doc_id", "text",
-      Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot, minJaccard = 0.5)
-    assert(replay.count() == 0)
-    assert(Manifest.read(spark, hashedRoot).count() == 3)
-
-    // family mismatch still rejects loudly through the manifest meta
-    val ex = intercept[IllegalArgumentException](
-      Dedup.admitBatchManifest(batch, "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        hashedRoot, bandedRoot, minJaccard = 0.5, family = Dedup.OphMinhash))
-    assert(ex.getMessage.contains("family"))
-
-    // maintenance: force sprawl past the compaction trigger and admit
-    // once more — the roots compact and gc, results unchanged
-    (20L to 40L).foreach { i =>
-      // genuinely distinct content per doc — a shared template would be
-      // (correctly) screened out as a near-dup of the previous filler
-      val text = (0 until 12).map(j => s"w${(i * 131 + j * 17) * (i + j) % 9973}").mkString(" ")
-      Dedup.admitBatchManifest(
-        Seq(doc(i, text)).toDF("doc_id", "text"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        hashedRoot, bandedRoot, minJaccard = 0.5, compactMinFiles = 8)
-    }
-    assert(Manifest.current(spark, hashedRoot).get.files.size <= 8 * 4,
-      "maintenance should keep file sprawl bounded")
-    val total = Manifest.read(spark, hashedRoot).count()
-    assert(total == 3 + 21, s"expected all fillers admitted, got $total")
+    assert(versions() == mono)
+    // forward progress still works after the reject
+    val b2 = Seq((1L, "a5", 400L)).toDF("k", "v", "eff")
+    Store.scd2ApplySplit(spark, b2, openRoot, closedRoot, Seq("k"), "eff")
+    assert(versions() == Store.scd2Apply(Store.scd2Apply(Store.scd2Apply(init,
+        b0, Seq("k"), "eff"), b1, Seq("k"), "eff"), b2, Seq("k"), "eff")
+      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet)
   }
 
   test("incremental log: small commits write O(batch) deltas, checkpoints bound the chain, resolution is exact") {

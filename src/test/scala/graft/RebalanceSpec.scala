@@ -7,8 +7,9 @@ import graft.dedup.Dedup
 import graft.operators.Rebalance
 
 /** The scan-parallelism valve: opens only for narrow plans whose leaf
-  * splits ≪ the target, stays closed for wide plans, streams, and
-  * disabled/garbage conf — and never changes results. */
+  * splits are at most half the session's default parallelism, stays
+  * closed for wide plans, already-split scans and streams — and never
+  * changes results. */
 class RebalanceSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -28,24 +29,29 @@ class RebalanceSpec extends SparkTestBase {
     dir
   }
 
+  private def roundRobin(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.toLowerCase.contains("roundrobin")
+
   test("opens for a narrow single-split scan: one round-robin exchange appears") {
-    withConf("graft.cpuStageParallelism", "8") {
-      val df = Rebalance.forCpuStage(spark.read.parquet(smallParquet).select("id", "t"))
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.toLowerCase.contains("roundrobin"), s"valve did not open:\n$p")
-      assert(df.count() == 1000)
-    }
+    val target = spark.sparkContext.defaultParallelism
+    assert(target >= 2, s"a single split must be at most half of $target")
+    val df = Rebalance.forCpuStage(spark.read.parquet(smallParquet).select("id", "t"))
+    val p = df.queryExecution.executedPlan.toString.toLowerCase
+    assert(p.contains(s"roundrobinpartitioning($target)"), s"valve did not open to $target:\n$p")
+    assert(df.count() == 1000)
   }
 
-  test("stays closed for wide plans and when disabled with 0") {
-    withConf("graft.cpuStageParallelism", "8") {
-      val wide = spark.read.parquet(smallParquet).groupBy("t").count()
-      val p = Rebalance.forCpuStage(wide).queryExecution.executedPlan.toString
-      assert(!p.toLowerCase.contains("roundrobin"), s"valve opened above a wide op:\n$p")
-    }
-    withConf("graft.cpuStageParallelism", "0") {
-      val df = Rebalance.forCpuStage(spark.read.parquet(smallParquet))
-      assert(!df.queryExecution.executedPlan.toString.toLowerCase.contains("roundrobin"))
+  test("stays closed for wide plans and for scans already split past half the parallelism") {
+    val wide = spark.read.parquet(smallParquet).groupBy("t").count()
+    assert(!roundRobin(Rebalance.forCpuStage(wide)), "valve opened above a wide op")
+    // one split per 64 bytes: the estimate exceeds half of any default
+    // parallelism this suite runs under, so the scan is already parallel
+    val bytes = java.nio.file.Files.walk(java.nio.file.Paths.get(smallParquet))
+      .filter(_.toString.endsWith(".parquet")).mapToLong(java.nio.file.Files.size(_)).sum()
+    assert(bytes / 64 * 2 > spark.sparkContext.defaultParallelism)
+    withConf("spark.sql.files.maxPartitionBytes", "64") {
+      assert(!roundRobin(Rebalance.forCpuStage(spark.read.parquet(smallParquet))),
+        "valve opened for a scan already split past half the parallelism")
     }
   }
 
@@ -57,12 +63,5 @@ class RebalanceSpec extends SparkTestBase {
     // streaming input must not throw (it did, via UnsupportedOperationChecker)
     val hashed = Dedup.hashedDocs(sdf, "doc_id", "text", Dedup.CharShingles(3))
     assert(hashed.isStreaming)
-  }
-
-  test("malformed graft.cpuStageParallelism degrades to the default instead of throwing") {
-    withConf("graft.cpuStageParallelism", "16g") {
-      val df = Rebalance.forCpuStage(spark.read.parquet(smallParquet))
-      assert(df.count() == 1000) // no NumberFormatException
-    }
   }
 }

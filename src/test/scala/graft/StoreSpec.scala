@@ -300,45 +300,6 @@ class StoreSpec extends SparkTestBase {
       Store.scd2Init(Seq((1L, "a")).toDF("k", "v"), Seq("k"), "eff"))
   }
 
-  test("scd2ApplySplit: retroactive change into logged history rejects loudly, not silently overlaps") {
-    // The split apply runs rebuildHistory over the OPEN slice only —
-    // replays need the lifted retro reject, but a GENUINELY retroactive
-    // change (effective inside closed-log intervals, not a replay of a
-    // logged closure) must not append an overlapping closed version.
-    import graft.store.Store
-    Store.ensureDatabase(spark, "graft_test")
-    val closedPath =
-      java.nio.file.Files.createTempDirectory("scd2_retro").toString + "/closed"
-    val init = Store.scd2Init(
-      Seq((1L, "a", 100L)).toDF("k", "v", "eff"), Seq("k"), "eff")
-    Store.overwrite(init, "t_scd2_retro_open")
-    try {
-      // legit forward batch: closes a@100 at 200, logs it
-      Store.scd2ApplySplit(spark, Seq((1L, "a2", 200L)).toDF("k", "v", "eff"),
-        "t_scd2_retro_open", closedPath, Seq("k"), "eff")
-      val logged = spark.read.parquet(closedPath)
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
-      assert(logged == Set((1L, "a", 100L, Some(200L), false)))
-      // retroactive: effective 150, inside the logged [100, 200) interval
-      val ex = intercept[IllegalArgumentException](Store.scd2ApplySplit(spark,
-        Seq((1L, "bad", 150L)).toDF("k", "v", "eff"),
-        "t_scd2_retro_open", closedPath, Seq("k"), "eff"))
-      assert(ex.getMessage.contains("retroactive"))
-      // and the store is untouched by the rejected transaction
-      assert(spark.read.parquet(closedPath)
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet == logged)
-      assert(spark.table("t_scd2_retro_open")
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet ==
-        Set((1L, "a2", 200L, None, true)))
-      // forward progress still works after the reject
-      Store.scd2ApplySplit(spark, Seq((1L, "a3", 300L)).toDF("k", "v", "eff"),
-        "t_scd2_retro_open", closedPath, Seq("k"), "eff")
-      assert(Store.scd2Versions(spark, "t_scd2_retro_open", closedPath).count() == 3L)
-    } finally {
-      Store.drop(spark, "t_scd2_retro_open")
-    }
-  }
-
   test("kAnonymity flags only sub-k groups; loud rejects") {
     import graft.quality.QualitySuite
     val df = Seq(("a", 1), ("a", 1), ("a", 1), ("b", 2), ("b", 2), ("c", 3))

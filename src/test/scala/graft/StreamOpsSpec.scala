@@ -85,50 +85,47 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("screenAndAdmit: the stream grows the index it screens; replay admits nothing twice") {
     import graft.dedup.Dedup
-    import graft.store.Store
+    import graft.store.Manifest
     implicit val sqlCtx = spark.sqlContext
     val founding = "the quick brown fox jumps over the lazy dog near the river bank today"
     val novelA = "distributed query engines partition work across executors for scale"
     val novelB = "sequence packing fills token budget bins with greedy running totals"
+    val base = java.nio.file.Files.createTempDirectory("sa_index").toString
+    val (hashedRoot, bandedRoot) = (s"$base/hashed", s"$base/banded")
     Dedup.writeCorpusIndex(Seq((1L, founding)).toDF("doc_id", "text"),
-      "doc_id", "text", Dedup.CharShingles(5), 8, 4, "t_sa_hashed", "t_sa_banded")
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
     val admittedPath = java.nio.file.Files.createTempDirectory("sa_admitted").toString
     val ckpt = java.nio.file.Files.createTempDirectory("sa_ckpt").toString
-    try {
-      val input = MemoryStream[(Long, String)]
-      val q = StreamOps.screenAndAdmit(
-        input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        Dedup.CharShingles(5), 8, 4, "t_sa_hashed", "t_sa_banded",
-        minJaccard = 0.9, admittedPath, ckpt)
-      // batch 0: one novel doc — admitted and indexed
-      input.addData((10L, novelA))
-      q.processAllAvailable()
-      // batch 1: a near-dup OF BATCH 0'S ADMISSION (flagged against the
-      // grown index) + a novel doc
-      input.addData((20L, novelA), (21L, novelB))
-      q.processAllAvailable()
-      q.stop()
-      val admitted = spark.read.parquet(admittedPath)
-        .select("doc_id").as[Long].collect().toSet
-      assert(admitted == Set(10L, 21L), s"admitted=$admitted") // 20 screened out
-      assert(spark.table("t_sa_hashed").select("id").as[Long].collect().toSet
-        == Set(1L, 10L, 21L))
-      // REPLAY of batch 0 (crash-after-append scenario): the doc's own
-      // index entry screens it at jaccard 1.0 — nothing admitted twice
-      val replay = Dedup.admitBatch(Seq((10L, novelA)).toDF("doc_id", "text"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4,
-        "t_sa_hashed", "t_sa_banded", minJaccard = 0.9)
-      assert(replay.isEmpty)
-      assert(spark.table("t_sa_hashed").count() == 3L)
-      // and the empty replay's sink write touches no partition — the
-      // original batch's admitted rows survive
-      StreamOps.upsertBatch(replay.select("doc_id", "text"), 0L, admittedPath)
-      assert(spark.read.parquet(admittedPath)
-        .select("doc_id").as[Long].collect().toSet == Set(10L, 21L))
-    } finally {
-      Store.drop(spark, "t_sa_hashed")
-      Store.drop(spark, "t_sa_banded")
-    }
+    val input = MemoryStream[(Long, String)]
+    val q = StreamOps.screenAndAdmit(
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text",
+      Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot,
+      minJaccard = 0.9, admittedPath, ckpt)
+    // batch 0: one novel doc — admitted and indexed
+    input.addData((10L, novelA))
+    q.processAllAvailable()
+    // batch 1: a near-dup OF BATCH 0'S ADMISSION (flagged against the
+    // grown index) + a novel doc
+    input.addData((20L, novelA), (21L, novelB))
+    q.processAllAvailable()
+    q.stop()
+    val admitted = spark.read.parquet(admittedPath)
+      .select("doc_id").as[Long].collect().toSet
+    assert(admitted == Set(10L, 21L), s"admitted=$admitted") // 20 screened out
+    assert(Manifest.read(spark, hashedRoot).select("id").as[Long].collect().toSet
+      == Set(1L, 10L, 21L))
+    // REPLAY of batch 0 (crash-after-append scenario): the doc's own
+    // index entry screens it at jaccard 1.0 — nothing admitted twice
+    val replay = Dedup.admitBatch(Seq((10L, novelA)).toDF("doc_id", "text"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.9)
+    assert(replay.isEmpty)
+    assert(Manifest.read(spark, hashedRoot).count() == 3L)
+    // and the empty replay's sink write touches no partition — the
+    // original batch's admitted rows survive
+    StreamOps.upsertBatch(replay.select("doc_id", "text"), 0L, admittedPath)
+    assert(spark.read.parquet(admittedPath)
+      .select("doc_id").as[Long].collect().toSet == Set(10L, 21L))
   }
 
   test("screenAndAdmitSpans: the stream cuts against every prior batch's retained text") {
@@ -966,58 +963,52 @@ class StreamOpsSpec extends SparkTestBase {
   }
 
   test("scd2SinkSplit: open table + closed log ≡ monolithic history; replay and crash-window safe") {
-    import graft.store.Store
+    import graft.store.{Manifest, Store}
     implicit val sqlCtx = spark.sqlContext
     val ckpt = java.nio.file.Files.createTempDirectory("scd2s_ckpt").toString
-    val closedPath = java.nio.file.Files.createTempDirectory("scd2s_log").toString + "/closed"
+    val base = java.nio.file.Files.createTempDirectory("scd2s_store").toString
+    val (openRoot, closedRoot) = (s"$base/open", s"$base/closed")
     val init = Store.scd2Init(
       Seq((1L, "a", 100L), (2L, "b", 100L)).toDF("k", "v", "eff"), Seq("k"), "eff")
-    Store.overwrite(init, "t_scd2_open")
-    try {
-      val input = MemoryStream[(Long, String, Long)]
-      val q = StreamOps.scd2SinkSplit(input.toDF().toDF("k", "v", "eff"),
-        "t_scd2_open", closedPath, Seq("k"), "eff", ckpt)
-      input.addData((1L, "a2", 200L), (2L, "b", 200L), (3L, "c", 200L))
-      q.processAllAvailable()
-      input.addData((1L, "a3", 300L), (1L, "a4", 350L)) // in-batch chain
-      q.processAllAvailable()
-      q.stop()
-      // read view ≡ the monolithic apply of the same batches
-      val got = Store.scd2Versions(spark, "t_scd2_open", closedPath)
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
-      val mono = Store.scd2Apply(Store.scd2Apply(init,
-          Seq((1L, "a2", 200L), (2L, "b", 200L), (3L, "c", 200L)).toDF("k", "v", "eff"),
-          Seq("k"), "eff"),
-          Seq((1L, "a3", 300L), (1L, "a4", 350L)).toDF("k", "v", "eff"),
-          Seq("k"), "eff")
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
-      assert(got == mono, s"split=$got mono=$mono")
-      // open table holds EXACTLY one open row per key — O(keys), not O(history)
-      assert(spark.table("t_scd2_open").count() == 3L)
-      assert(spark.table("t_scd2_open").filter(!col("is_current")).count() == 0L)
-      // REPLAY: re-running batch 1's transaction changes nothing
-      Store.scd2ApplySplit(spark,
+    Manifest.overwrite(init, openRoot)
+    def versions() = Store.scd2Versions(spark, openRoot, closedRoot)
+      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSeq
+    val input = MemoryStream[(Long, String, Long)]
+    val q = StreamOps.scd2SinkSplit(input.toDF().toDF("k", "v", "eff"),
+      openRoot, closedRoot, Seq("k"), "eff", ckpt)
+    input.addData((1L, "a2", 200L), (2L, "b", 200L), (3L, "c", 200L))
+    q.processAllAvailable()
+    input.addData((1L, "a3", 300L), (1L, "a4", 350L)) // in-batch chain
+    q.processAllAvailable()
+    q.stop()
+    // read view ≡ the monolithic apply of the same batches
+    val mono = Store.scd2Apply(Store.scd2Apply(init,
+        Seq((1L, "a2", 200L), (2L, "b", 200L), (3L, "c", 200L)).toDF("k", "v", "eff"),
+        Seq("k"), "eff"),
         Seq((1L, "a3", 300L), (1L, "a4", 350L)).toDF("k", "v", "eff"),
-        "t_scd2_open", closedPath, Seq("k"), "eff")
-      assert(Store.scd2Versions(spark, "t_scd2_open", closedPath)
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet == mono)
-      // CRASH WINDOW: closed rows already appended, open NOT yet
-      // overwritten (the load-bearing write order) — re-running the
-      // full transaction must not duplicate the pre-appended rows
-      val nextBatch = Seq((2L, "b2", 400L)).toDF("k", "v", "eff")
-      val preClosed = Seq((2L, "b", 100L, Some(400L), false))
-        .toDF("k", "v", "valid_from", "valid_to", "is_current")
-      preClosed.write.mode("append").parquet(closedPath) // simulate the partial write
-      Store.scd2ApplySplit(spark, nextBatch,
-        "t_scd2_open", closedPath, Seq("k"), "eff")
-      val fin = Store.scd2Versions(spark, "t_scd2_open", closedPath)
-        .as[(Long, String, Long, Option[Long], Boolean)].collect().toSeq
-      assert(fin.size == fin.toSet.size, s"duplicate versions after crash replay: $fin")
-      assert(fin.toSet.contains((2L, "b2", 400L, None, true)))
-      assert(fin.toSet.contains((2L, "b", 100L, Some(400L), false)))
-    } finally {
-      Store.drop(spark, "t_scd2_open")
-    }
+        Seq("k"), "eff")
+      .as[(Long, String, Long, Option[Long], Boolean)].collect().toSet
+    assert(versions().toSet == mono, s"split=${versions()} mono=$mono")
+    // open root holds EXACTLY one open row per key — O(keys), not O(history)
+    assert(Manifest.read(spark, openRoot).count() == 3L)
+    assert(Manifest.read(spark, openRoot).filter(!col("is_current")).count() == 0L)
+    // REPLAY: re-running batch 1's transaction changes nothing
+    Store.scd2ApplySplit(spark,
+      Seq((1L, "a3", 300L), (1L, "a4", 350L)).toDF("k", "v", "eff"),
+      openRoot, closedRoot, Seq("k"), "eff")
+    assert(versions().toSet == mono)
+    // CRASH WINDOW: closed rows already appended, open NOT yet
+    // replaced (the load-bearing write order) — re-running the full
+    // transaction must not duplicate the pre-appended rows
+    val nextBatch = Seq((2L, "b2", 400L)).toDF("k", "v", "eff")
+    val preClosed = Seq((2L, "b", 100L, Some(400L), false))
+      .toDF("k", "v", "valid_from", "valid_to", "is_current")
+    Manifest.append(preClosed, closedRoot) // simulate the partial transaction
+    Store.scd2ApplySplit(spark, nextBatch, openRoot, closedRoot, Seq("k"), "eff")
+    val fin = versions()
+    assert(fin.size == fin.toSet.size, s"duplicate versions after crash replay: $fin")
+    assert(fin.toSet.contains((2L, "b2", 400L, None, true)))
+    assert(fin.toSet.contains((2L, "b", 100L, Some(400L), false)))
   }
 
   test("curationPipelineSink capstone: clean→exact→screen→sink→SCD2 as one stream; idempotent through every crash window") {
@@ -1025,7 +1016,7 @@ class StreamOpsSpec extends SparkTestBase {
     import graft.store.Store
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("capstone").toString
-    val hashedT = "t_cap_hashed"; val bandedT = "t_cap_banded"
+    val (hashedRoot, bandedRoot) = (s"$base/hashed", s"$base/banded")
     val (admittedPath, openRoot, closedRoot) =
       (s"$base/admitted", s"$base/open", s"$base/closed")
     def doc(id: Long, text: String, src: String) = (id, text, src)
@@ -1041,59 +1032,55 @@ class StreamOpsSpec extends SparkTestBase {
     val b2 = Seq(
       doc(20L, "one two three four five six", "s2"), // cross-batch exact dup of 2
       doc(21L, "thirteen fourteen fifteen sixteen seventeen", "s1"))
-    try {
-      Dedup.writeCorpusIndex(
-        Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedT, bandedT)
-      val input = MemoryStream[(Long, String, String)]
-      val q = StreamOps.curationPipelineSink(
-        input.toDF().toDF("doc_id", "text", "source"),
-        "doc_id", "text", "source", Dedup.CharShingles(5), 8, 4,
-        hashedT, bandedT, minJaccard = 0.5,
-        admittedPath, openRoot, closedRoot, s"$base/ckpt")
-      Seq(b0, b1, b2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      q.stop()
+    Dedup.writeCorpusIndex(
+      Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
+    val input = MemoryStream[(Long, String, String)]
+    val q = StreamOps.curationPipelineSink(
+      input.toDF().toDF("doc_id", "text", "source"),
+      "doc_id", "text", "source", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, minJaccard = 0.5,
+      admittedPath, openRoot, closedRoot, s"$base/ckpt")
+    Seq(b0, b1, b2).foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    q.stop()
 
-      def sinkState() = spark.read.parquet(admittedPath)
-        .select(col("doc_id"), col("batch_id").cast("long"))
-        .as[(Long, Long)].collect().toSet
-      def scd2State() = Store.scd2VersionsAtomic(spark, openRoot, closedRoot)
-        .select(col("source"), col("n_admitted"), col("max_admitted_id"),
-          col("valid_from"), col("valid_to"))
-        .as[(String, Long, Long, Long, Option[Long])].collect().toSet
-      val wantSink = Set((1L, 0L), (2L, 0L), (11L, 1L), (21L, 2L))
-      val wantScd2 = Set(
-        ("s1", 1L, 1L, 0L, Some(2L)), ("s1", 1L, 21L, 2L, None),
-        ("s2", 1L, 2L, 0L, Some(1L)), ("s2", 1L, 11L, 1L, None))
-      assert(sinkState() == wantSink, s"sink=${sinkState()}")
-      assert(scd2State() == wantScd2, s"scd2=${scd2State()}")
+    def sinkState() = spark.read.parquet(admittedPath)
+      .select(col("doc_id"), col("batch_id").cast("long"))
+      .as[(Long, Long)].collect().toSet
+    def scd2State() = Store.scd2Versions(spark, openRoot, closedRoot)
+      .select(col("source"), col("n_admitted"), col("max_admitted_id"),
+        col("valid_from"), col("valid_to"))
+      .as[(String, Long, Long, Long, Option[Long])].collect().toSet
+    val wantSink = Set((1L, 0L), (2L, 0L), (11L, 1L), (21L, 2L))
+    val wantScd2 = Set(
+      ("s1", 1L, 1L, 0L, Some(2L)), ("s1", 1L, 21L, 2L, None),
+      ("s2", 1L, 2L, 0L, Some(1L)), ("s2", 1L, 11L, 1L, None))
+    assert(sinkState() == wantSink, s"sink=${sinkState()}")
+    assert(scd2State() == wantScd2, s"scd2=${scd2State()}")
 
-      // FULL REPLAY of the last batch (foreachBatch crash-and-rerun):
-      // identical final state everywhere
-      StreamOps.curateBatch(b2.toDF("doc_id", "text", "source"), 2L,
-        "doc_id", "text", "source", Dedup.CharShingles(5), 8, 4,
-        hashedT, bandedT, 0.5, admittedPath, openRoot, closedRoot)
-      assert(sinkState() == wantSink, "full replay must be a no-op")
-      assert(scd2State() == wantScd2, "full replay must be a no-op")
+    // FULL REPLAY of the last batch (foreachBatch crash-and-rerun):
+    // identical final state everywhere
+    StreamOps.curateBatch(b2.toDF("doc_id", "text", "source"), 2L,
+      "doc_id", "text", "source", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, 0.5, admittedPath, openRoot, closedRoot)
+    assert(sinkState() == wantSink, "full replay must be a no-op")
+    assert(scd2State() == wantScd2, "full replay must be a no-op")
 
-      // PARTIAL-CRASH replay: batch 3's index appends landed but the
-      // crash hit BEFORE the sink/SCD2 writes. The naive replay would
-      // screen doc 30 out (it near-duplicates its own admission) and
-      // lose it from the sink forever; curateBatch's batch ⋉ index
-      // re-derivation must still deliver it downstream.
-      val b3 = Seq(doc(30L, "eighteen nineteen twenty twentyone", "s1"))
-      Dedup.admitBatch(b3.toDF("doc_id", "text", "source"),
-        "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedT, bandedT, 0.5)
-      StreamOps.curateBatch(b3.toDF("doc_id", "text", "source"), 3L,
-        "doc_id", "text", "source", Dedup.CharShingles(5), 8, 4,
-        hashedT, bandedT, 0.5, admittedPath, openRoot, closedRoot)
-      assert(sinkState() == wantSink + ((30L, 3L)),
-        "partial-crash replay must still sink the batch's admissions")
-      assert(scd2State() == wantScd2 - (("s1", 1L, 21L, 2L, None)) +
-        (("s1", 1L, 21L, 2L, Some(3L))) + (("s1", 1L, 30L, 3L, None)),
-        s"scd2 after partial-crash replay: ${scd2State()}")
-    } finally {
-      Store.drop(spark, hashedT); Store.drop(spark, bandedT)
-    }
+    // PARTIAL-CRASH replay: batch 3's index appends landed but the
+    // crash hit BEFORE the sink/SCD2 writes. The naive replay would
+    // screen doc 30 out (it near-duplicates its own admission) and
+    // lose it from the sink forever; curateBatch's batch ⋉ index
+    // re-derivation must still deliver it downstream.
+    val b3 = Seq(doc(30L, "eighteen nineteen twenty twentyone", "s1"))
+    Dedup.admitBatch(b3.toDF("doc_id", "text", "source"),
+      "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot, 0.5)
+    StreamOps.curateBatch(b3.toDF("doc_id", "text", "source"), 3L,
+      "doc_id", "text", "source", Dedup.CharShingles(5), 8, 4,
+      hashedRoot, bandedRoot, 0.5, admittedPath, openRoot, closedRoot)
+    assert(sinkState() == wantSink + ((30L, 3L)),
+      "partial-crash replay must still sink the batch's admissions")
+    assert(scd2State() == wantScd2 - (("s1", 1L, 21L, 2L, None)) +
+      (("s1", 1L, 21L, 2L, Some(3L))) + (("s1", 1L, 30L, 3L, None)),
+      s"scd2 after partial-crash replay: ${scd2State()}")
   }
 }
