@@ -204,7 +204,7 @@ object Bench {
     * when BOTH canaries sit in their healthy bands. */
   private[graft] def fsSpeed(): Double = {
     def once(): Double = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_fs_canary")
+      val dir = graft.TempDirs.create("graft_fs_canary")
       val t0 = System.nanoTime()
       val payload = ("x" * 256).getBytes("UTF-8")
       var i = 0
@@ -457,7 +457,7 @@ object Bench {
     val pipelineRuns = if (pipelineRoom > 130.0) 2 else if (pipelineRoom > 60.0) 1 else 0
     val pipeline = if ((args.isEmpty || args.contains("pipeline")) && pipelineRuns > 0) {
       try {
-        val tsv = java.nio.file.Files.createTempDirectory("graft-off-bench").toString + "/off"
+        val tsv = graft.TempDirs.create("graft-off-bench").toString + "/off"
         graft.bench.OffTsvGen.generate(spark, tsv)
         val silverPath = tsv + "_silver"
         // one full pipeline run: TSV scan → silver (materialized, like

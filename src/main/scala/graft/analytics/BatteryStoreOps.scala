@@ -367,8 +367,8 @@ trait BatteryStoreOps extends BatteryModels {
     * correctness statement, not just an aggregate check. */
   val q152 = Q("q152_manifest_lifecycle",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q152").toString + "/orders_t"
+      val root = graft.TempDirs
+        .create("graft_q152").toString + "/orders_t"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       Manifest.overwrite(orders.filter(col("o_orderkey") % 3 === 0), root)
@@ -406,7 +406,7 @@ trait BatteryStoreOps extends BatteryModels {
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = t(s, dir, "documents").select("doc_id", "text", "source")
-      val base = java.nio.file.Files.createTempDirectory("graft_q153").toString
+      val base = graft.TempDirs.create("graft_q153").toString
       val (hashedRoot, bandedRoot) = (s"$base/hashed", s"$base/banded")
       Dedup.writeCorpusIndex(docs.limit(0), "doc_id", "text",
         Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
@@ -535,8 +535,8 @@ trait BatteryStoreOps extends BatteryModels {
     * itself carries the hash gate. */
   val q155 = Q("q155_manifest_skipping",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q155").toString + "/orders_s"
+      val root = graft.TempDirs
+        .create("graft_q155").toString + "/orders_s"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       // quartile-range appends: each file's o_orderkey range is tight
@@ -572,8 +572,8 @@ trait BatteryStoreOps extends BatteryModels {
     * data scan — pinned against the oracle's real COUNT(*). */
   val q156 = Q("q156_manifest_txn",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q156").toString + "/orders_x"
+      val root = graft.TempDirs
+        .create("graft_q156").toString + "/orders_x"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       (0 to 2).foreach { i =>
@@ -609,8 +609,8 @@ trait BatteryStoreOps extends BatteryModels {
     * feed's file-level delta arithmetic together. */
   val q157 = Q("q157_manifest_restore",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q157").toString + "/orders_r"
+      val root = graft.TempDirs
+        .create("graft_q157").toString + "/orders_r"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       Manifest.overwrite(orders.filter(col("o_orderkey") % 3 === 0), root) // v0
@@ -647,8 +647,8 @@ trait BatteryStoreOps extends BatteryModels {
     * accounting), or a dropped insert all hash-mismatch. */
   val q158 = Q("q158_manifest_upsert",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q158").toString + "/orders_m"
+      val root = graft.TempDirs
+        .create("graft_q158").toString + "/orders_m"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -699,8 +699,8 @@ trait BatteryStoreOps extends BatteryModels {
     * aggregates against a plain NOT-BETWEEN oracle. */
   val q159 = Q("q159_manifest_delete",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q159").toString + "/orders_d"
+      val root = graft.TempDirs
+        .create("graft_q159").toString + "/orders_d"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -741,8 +741,8 @@ trait BatteryStoreOps extends BatteryModels {
     * against the oracle's real COUNT(*). */
   val q160 = Q("q160_manifest_mirror",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q160").toString
+      val base = graft.TempDirs
+        .create("graft_q160").toString
       val src = s"$base/orders_src"
       val dst = s"$base/orders_dst"
       val orders = t(s, dir, "orders")
@@ -789,8 +789,8 @@ trait BatteryStoreOps extends BatteryModels {
     * semantics (ManifestSpec pins that it actually prunes). */
   val q161 = Q("q161_manifest_zorder",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q161").toString + "/orders_z"
+      val root = graft.TempDirs
+        .create("graft_q161").toString + "/orders_z"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       Manifest.append(orders, root, statsCols = Seq("o_orderkey"))
@@ -825,8 +825,8 @@ trait BatteryStoreOps extends BatteryModels {
     (s, dir) => {
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q162").toString + "/orders_cdc"
+      val root = graft.TempDirs
+        .create("graft_q162").toString + "/orders_cdc"
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
       import graft.store.Manifest
@@ -897,8 +897,8 @@ trait BatteryStoreOps extends BatteryModels {
     * (numFiles metric). */
   val q163 = Q("q163_manifest_table",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q163").toString + "/orders_t"
+      val root = graft.TempDirs
+        .create("graft_q163").toString + "/orders_t"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -937,8 +937,8 @@ trait BatteryStoreOps extends BatteryModels {
     * lifecycle (record → accumulate → serve reads → apply → clear). */
   val q164 = Q("q164_manifest_dv",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q164").toString + "/orders_dv"
+      val root = graft.TempDirs
+        .create("graft_q164").toString + "/orders_dv"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -982,8 +982,8 @@ trait BatteryStoreOps extends BatteryModels {
     * copy-on-write leak in either direction mismatches. */
   val q165 = Q("q165_manifest_clone",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q165").toString
+      val base = graft.TempDirs
+        .create("graft_q165").toString
       val src = s"$base/orders_src"
       val dst = s"$base/orders_clone"
       val orders = t(s, dir, "orders")
@@ -1029,8 +1029,8 @@ trait BatteryStoreOps extends BatteryModels {
     * the backfill is real NULLs, not defaults. */
   val q166 = Q("q166_manifest_evolution",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q166").toString + "/orders_ev"
+      val root = graft.TempDirs
+        .create("graft_q166").toString + "/orders_ev"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       Manifest.append(orders.filter(col("o_orderkey") % 3 === 0)
@@ -1072,8 +1072,8 @@ trait BatteryStoreOps extends BatteryModels {
     * along to prove conservatism never costs correctness. */
   val q167 = Q("q167_manifest_or_skip",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q167").toString + "/orders_or"
+      val root = graft.TempDirs
+        .create("graft_q167").toString + "/orders_or"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       Manifest.append(orders, root, statsCols = Seq("o_orderkey"))
@@ -1111,8 +1111,8 @@ trait BatteryStoreOps extends BatteryModels {
     * hash-fails. */
   val q168 = Q("q168_manifest_dv_count",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q168").toString + "/orders_dvc"
+      val root = graft.TempDirs
+        .create("graft_q168").toString + "/orders_dvc"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -1227,8 +1227,8 @@ trait BatteryStoreOps extends BatteryModels {
     * (ManifestAnnSpec pins that the probe actually skips files). */
   val q170 = Q("q170_manifest_ivf",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q170").toString + "/ivf"
+      val root = graft.TempDirs
+        .create("graft_q170").toString + "/ivf"
       val base = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast(LongType).as("label"),
           Similarity.quantize(col("embedding")).as("qv"))
@@ -1273,8 +1273,8 @@ trait BatteryStoreOps extends BatteryModels {
     * footer-count metadata count(*) through the partial rewrite. */
   val q171 = Q("q171_manifest_replace",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q171").toString + "/orders_rw"
+      val root = graft.TempDirs
+        .create("graft_q171").toString + "/orders_rw"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -1326,8 +1326,8 @@ trait BatteryStoreOps extends BatteryModels {
     * compaction all have to be jointly semantics-exact. */
   val q172 = Q("q172_manifest_ivf_trained",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q172").toString + "/ivf_t"
+      val root = graft.TempDirs
+        .create("graft_q172").toString + "/ivf_t"
       val emb = t(s, dir, "embeddings")
       val assigned = Similarity.kmeansAssign(emb, "vec_id", "embedding", k = 8)
       val base = emb
@@ -1384,8 +1384,8 @@ trait BatteryStoreOps extends BatteryModels {
     * stats keep all of them). */
   val q173 = Q("q173_manifest_bloom",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q173").toString + "/orders_b"
+      val root = graft.TempDirs
+        .create("graft_q173").toString + "/orders_b"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       (0 to 3).foreach { b =>
@@ -1423,8 +1423,8 @@ trait BatteryStoreOps extends BatteryModels {
     * from the full recompute. */
   val q174 = Q("q174_manifest_matview",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q174").toString
+      val base = graft.TempDirs
+        .create("graft_q174").toString
       val src = s"$base/orders_src"; val dst = s"$base/orders_mv"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
@@ -1474,8 +1474,8 @@ trait BatteryStoreOps extends BatteryModels {
       val lexR = RankFusion.rankBy(lex,
           Seq(col("score_milli_bits").desc, col("id").asc))
         .select("id", "rank")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q175").toString + "/ivf"
+      val root = graft.TempDirs
+        .create("graft_q175").toString + "/ivf"
       val base = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast(LongType).as("label"),
           Similarity.quantize(col("embedding")).as("qv"))
@@ -1548,8 +1548,8 @@ trait BatteryStoreOps extends BatteryModels {
     * join; an absent id (the shifted key) must contribute nothing. */
   val q176 = Q("q176_manifest_bloom_in",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q176").toString + "/orders_bi"
+      val root = graft.TempDirs
+        .create("graft_q176").toString + "/orders_bi"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       (0 to 3).foreach { b =>
@@ -1582,8 +1582,8 @@ trait BatteryStoreOps extends BatteryModels {
     * replays the swap as NOT(pred) ∪ batch in plain SQL. */
   val q177 = Q("q177_manifest_replace_where",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q177").toString + "/orders_rwp"
+      val root = graft.TempDirs
+        .create("graft_q177").toString + "/orders_rwp"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
@@ -1633,8 +1633,8 @@ trait BatteryStoreOps extends BatteryModels {
     * recompute. */
   val q178 = Q("q178_matview_retraction",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q178").toString
+      val base = graft.TempDirs
+        .create("graft_q178").toString
       val src = s"$base/orders_src"; val dst = s"$base/orders_mv"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
@@ -1703,8 +1703,8 @@ trait BatteryStoreOps extends BatteryModels {
     * stale/missing code for the post-build batch, hash-mismatches. */
   val q179 = Q("q179_manifest_ivfpq_at_rest",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q179").toString + "/ivf"
+      val root = graft.TempDirs
+        .create("graft_q179").toString + "/ivf"
       import graft.similarity.ManifestAnn
       val base = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast(LongType).as("label"),
@@ -1784,8 +1784,8 @@ trait BatteryStoreOps extends BatteryModels {
     * rename that moved data hash-mismatches. */
   val q180 = Q("q180_manifest_column_mapping",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q180").toString + "/orders_cm"
+      val root = graft.TempDirs
+        .create("graft_q180").toString + "/orders_cm"
       import graft.store.Manifest
       val orders = t(s, dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus",
@@ -1833,8 +1833,8 @@ trait BatteryStoreOps extends BatteryModels {
     * aggregate and hash-mismatches. */
   val q181 = Q("q181_manifest_inc_cluster",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q181").toString + "/orders_lc"
+      val root = graft.TempDirs
+        .create("graft_q181").toString + "/orders_lc"
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
       import graft.store.Manifest
@@ -1946,8 +1946,8 @@ trait BatteryStoreOps extends BatteryModels {
     * that double-landed hash-mismatches. */
   val q183 = Q("q183_manifest_merge_into",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q183").toString + "/orders_mi"
+      val root = graft.TempDirs
+        .create("graft_q183").toString + "/orders_mi"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2001,8 +2001,8 @@ trait BatteryStoreOps extends BatteryModels {
     * good row, or a wrong violation tag hash-mismatches. */
   val q184 = Q("q184_manifest_quarantine",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q184").toString + "/orders_q"
+      val root = graft.TempDirs
+        .create("graft_q184").toString + "/orders_q"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2050,8 +2050,8 @@ trait BatteryStoreOps extends BatteryModels {
     * pre/post-image value swap hash-mismatches. */
   val q185 = Q("q185_manifest_change_feed",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q185").toString + "/orders_cdf"
+      val root = graft.TempDirs
+        .create("graft_q185").toString + "/orders_cdf"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2111,8 +2111,8 @@ trait BatteryStoreOps extends BatteryModels {
     * an orphan hash-mismatches. */
   val q186 = Q("q186_manifest_merge_nmbs",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q186").toString + "/orders_nmbs"
+      val root = graft.TempDirs
+        .create("graft_q186").toString + "/orders_nmbs"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2162,8 +2162,8 @@ trait BatteryStoreOps extends BatteryModels {
     * resurrected deleted key hash-mismatches. */
   val q187 = Q("q187_manifest_cdc_mirror",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q187").toString
+      val base = graft.TempDirs
+        .create("graft_q187").toString
       val src = s"$base/orders_src"; val dst = s"$base/orders_mirror"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
@@ -2224,8 +2224,8 @@ trait BatteryStoreOps extends BatteryModels {
     * 3VL edge, or a double-counted overlap hash-mismatches. */
   val q188 = Q("q188_manifest_delete_where",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q188").toString + "/orders_dwp"
+      val root = graft.TempDirs
+        .create("graft_q188").toString + "/orders_dwp"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2277,8 +2277,8 @@ trait BatteryStoreOps extends BatteryModels {
     * row lost in the rewrite hash-mismatches. */
   val q189 = Q("q189_manifest_string_cluster",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q189").toString + "/orders_sc"
+      val root = graft.TempDirs
+        .create("graft_q189").toString + "/orders_sc"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2316,8 +2316,8 @@ trait BatteryStoreOps extends BatteryModels {
     * and the oracle replays only the DATA operations. */
   val q190 = Q("q190_manifest_maintenance",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q190").toString + "/orders_mx"
+      val root = graft.TempDirs
+        .create("graft_q190").toString + "/orders_mx"
       import graft.store.{Maintenance, MaintenancePolicy, Manifest}
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2362,8 +2362,8 @@ trait BatteryStoreOps extends BatteryModels {
     * a gc-broken resolution, hash-mismatches. */
   val q191 = Q("q191_manifest_dataset_tag",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q191").toString + "/orders_tag"
+      val root = graft.TempDirs
+        .create("graft_q191").toString + "/orders_tag"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2411,8 +2411,8 @@ trait BatteryStoreOps extends BatteryModels {
     * the post-resync window hash-mismatches. */
   val q192 = Q("q192_manifest_cdc_resync",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q192").toString
+      val base = graft.TempDirs
+        .create("graft_q192").toString
       val src = s"$base/orders_src"; val dst = s"$base/orders_mirror"
       val orders = t(s, dir, "orders")
       import graft.store.Manifest
@@ -2485,8 +2485,8 @@ trait BatteryStoreOps extends BatteryModels {
     * publish hash-mismatches. */
   val q193 = Q("q193_manifest_branch",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q193").toString + "/orders_br"
+      val root = graft.TempDirs
+        .create("graft_q193").toString + "/orders_br"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2561,8 +2561,8 @@ trait BatteryStoreOps extends BatteryModels {
     * or stale downstream watermark hash-mismatches. */
   val q194 = Q("q194_matview_dag",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q194").toString
+      val base = graft.TempDirs
+        .create("graft_q194").toString
       val src = s"$base/orders_src"
       val v1 = s"$base/by_cust"; val v2 = s"$base/by_status"
       val v3 = s"$base/count_rollup"
@@ -2634,8 +2634,8 @@ trait BatteryStoreOps extends BatteryModels {
     * concurrent ingest being clobbered all hash-mismatch. */
   val q195 = Q("q195_manifest_branch_merge",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q195").toString + "/orders_bm"
+      val root = graft.TempDirs
+        .create("graft_q195").toString + "/orders_bm"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2690,8 +2690,8 @@ trait BatteryStoreOps extends BatteryModels {
     * deleted key all hash-mismatch. */
   val q196 = Q("q196_manifest_branch_merge_cols",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q196").toString + "/orders_bmc"
+      val root = graft.TempDirs
+        .create("graft_q196").toString + "/orders_bmc"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
@@ -2748,8 +2748,8 @@ trait BatteryStoreOps extends BatteryModels {
     * hash-mismatch. */
   val q197 = Q("q197_manifest_publish_feed",
     (s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q197").toString
+      val base = graft.TempDirs
+        .create("graft_q197").toString
       val src = s"$base/orders_src"; val dst = s"$base/orders_mirror"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
@@ -2809,8 +2809,8 @@ trait BatteryStoreOps extends BatteryModels {
     * hash-mismatch. */
   val q198 = Q("q198_manifest_branch_merge_evolve",
     (s, dir) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q198").toString + "/orders_bme"
+      val root = graft.TempDirs
+        .create("graft_q198").toString + "/orders_bme"
       import graft.store.Manifest
       val orders = t(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")

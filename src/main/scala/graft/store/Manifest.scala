@@ -2623,12 +2623,21 @@ object Manifest {
     * follows TOUCHED FILES, not table size: coarse-prune candidate
     * files by the recorded [min, max] of `keyCol` against the batch's
     * key range, then discover the files actually containing a batch key
-    * with ONE semi-join scan of the candidates (`input_file_name`, the
-    * public Delta MERGE's touched-file discovery), rewrite only those
+    * with ONE scan of the candidates (`input_file_name`, the public
+    * Delta MERGE's touched-file discovery), rewrite only those
     * (matched rows replaced by their batch row, every other row carried
     * through), append the batch, and publish (files − touched) ∪
     * rewritten ∪ batch in ONE atomic commit. Untouched files keep their
     * identity, stats, and row counts.
+    *
+    * The batch's keys are read once per commit. When their estimated
+    * size is within `spark.sql.autoBroadcastJoinThreshold` they are
+    * collected to the driver (no job for a local batch) and give the
+    * duplicate guard, the key range, and one broadcast key set that
+    * both discovery and the rewrite test membership against: two jobs
+    * per commit, the discovery scan and the write. Larger key sets take
+    * one aggregate for the guard and range, and semi/anti joins for
+    * membership. Both ways give the same rows and files.
     *
     * Semantics: batch keys must be unique (loud throw); a key present
     * in multiple table files (appended duplicates) has ALL copies
@@ -2643,20 +2652,22 @@ object Manifest {
 
   /** Touched-file discovery, the public Delta MERGE's: the entries of
     * `files` holding a row `matching` keeps, found with ONE scan that
-    * tags each row with its file name (`__f`, from `input_file_name`)
-    * and collects the distinct names. `matching` gets the raw scan
-    * (deletion vector not yet applied) and must keep `__f`. */
+    * tags each row with its file name (`__f`, from `input_file_name`).
+    * Each partition reduces its rows to their distinct names and the
+    * driver merges them: one job, no shuffle. The result keeps the
+    * order of `files`. `matching` gets the raw scan (deletion vector
+    * not yet applied) and must keep `__f`. */
   private def touchedFiles(spark: SparkSession, root: String, snap: Snapshot,
       files: Seq[String])(matching: DataFrame => DataFrame): Seq[String] =
     if (files.isEmpty) Seq.empty
     else {
+      import org.apache.spark.sql.Encoders
       import org.apache.spark.sql.functions.{input_file_name, substring_index}
-      val byName = files.map(rel =>
-        rel.substring(rel.lastIndexOf('/') + 1) -> rel).toMap
-      matching(readFiles(spark, root, snap, files)
+      val found = matching(readFiles(spark, root, snap, files)
           .withColumn("__f", substring_index(input_file_name(), "/", -1)))
-        .select("__f").distinct().collect()
-        .flatMap(r => byName.get(r.getString(0))).toSeq
+        .select("__f").as[String](Encoders.STRING)
+        .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
+      files.filter(rel => found(rel.substring(rel.lastIndexOf('/') + 1)))
     }
 
   /** Bounded auto-retry for the read-modify-write commits: on a
@@ -2938,54 +2949,76 @@ object Manifest {
         (padded, Map(SchemaJsonKey -> mergedN.json))
       }
     val fp = checkedFingerprint(batchP, root, enforceSchema = !evolveSchema)
-    // ONE aggregation serves the duplicate-key guard AND the key range
-    // of batch ∪ drops (previously two jobs per upsert, and a THIRD
-    // when drop-keys were present — on commit-dense lifecycles the
-    // fixed per-job cost was the wall). Drop keys enter with weight 0:
-    // they widen the range without tripping the batch-duplicate count.
+    // The key set of batch ∪ drops is worked out ONCE per commit. When
+    // its estimate fits `spark.sql.autoBroadcastJoinThreshold` (the
+    // rule by which the joins below would broadcast the same keys) it
+    // is collected to the driver, which starts no job for a local
+    // batch, and serves the duplicate-key guard, the key range, and,
+    // as one broadcast variable, the membership test of discovery and
+    // the rewrite, so no job goes to key statistics or to broadcasting
+    // keys. Otherwise ONE aggregation serves the guard and the range,
+    // and the joins test membership. Drop keys widen the range without
+    // counting as batch duplicates.
     // `keyedRange` (private callers only — the matview fold, whose
     // batch is a groupBy(key) output, keys unique BY CONSTRUCTION and
     // the exact range already computed by the step's own delta
-    // aggregate) skips the whole job.
+    // aggregate) skips the guard and the range.
     import org.apache.spark.sql.functions.{lit => flit,
       max => fmax, max_by => fmaxBy, min => fmin, sum => fsum}
-    val range = keyedRange.map { case (lo, hi) =>
-      org.apache.spark.sql.Row(lo, hi)
-    }.getOrElse {
-      val tagged = dropsP match {
-        case None => batchP.select(col(keyP), flit(1L).as("__b"))
-        case Some(d) => batchP.select(col(keyP), flit(1L).as("__b"))
-          .unionByName(d.select(col(keyP), flit(0L).as("__b")))
-      }
-      val kstats = tagged.groupBy(col(keyP)).agg(fsum(col("__b")).as("__n"))
-        .agg(fmin(col(keyP)).as("__lo"), fmax(col(keyP)).as("__hi"),
-          fmax(col("__n")).as("__maxn"),
-          fmaxBy(col(keyP), col("__n")).as("__dupk")).head()
-      require(kstats.isNullAt(2) || kstats.getLong(2) <= 1L,
-        s"upsert batch has duplicate $keyCol values (e.g. ${kstats.get(3)}) — " +
-          "one row per key, the merge is otherwise ambiguous")
-      org.apache.spark.sql.Row(kstats.get(0), kstats.get(1))
-    }
     val allKeys = dropsP match {
       case None => batchP.select(col(keyP))
       case Some(d) => batchP.select(col(keyP))
         .unionByName(d.select(col(keyP))).distinct()
     }
+    def tagged = dropsP match {
+      case None => batchP.select(col(keyP), flit(1L).as("__b"))
+      case Some(d) => batchP.select(col(keyP), flit(1L).as("__b"))
+        .unionByName(d.select(col(keyP), flit(0L).as("__b")))
+    }
+    def tableKeyType = snap.files.headOption.flatMap(f =>
+      recordedSchema(snap).getOrElse(fileSchema(spark, root, f))
+        .find(_.name == keyP).map(_.dataType))
+    val held = UpsertKeys.held(allKeys, tagged, tableKeyType)
+    val range = keyedRange.map { case (lo, hi) =>
+      org.apache.spark.sql.Row(lo, hi)
+    }.getOrElse(held match {
+      case Some(keys) =>
+        keys.requireUnique(keyCol)
+        keys.range
+      case None =>
+        val kstats = tagged.groupBy(col(keyP)).agg(fsum(col("__b")).as("__n"))
+          .agg(fmin(col(keyP)).as("__lo"), fmax(col(keyP)).as("__hi"),
+            fmax(col("__n")).as("__maxn"),
+            fmaxBy(col(keyP), col("__n")).as("__dupk")).head()
+        require(kstats.isNullAt(2) || kstats.getLong(2) <= 1L,
+          UpsertKeys.duplicateMessage(keyCol, kstats.get(3)))
+        org.apache.spark.sql.Row(kstats.get(0), kstats.get(1))
+    })
     if (range.isNullAt(0)) return snap.version // empty batch+drops: no-op
-    val candidates = prunedFiles(snap, keyP, range.get(0), range.get(1))
-    val touched = touchedFiles(spark, root, snap, candidates)(
-      _.select(col(keyP), col("__f")).join(allKeys, Seq(keyP), "left_semi"))
-    val rewritten =
-      if (touched.isEmpty) batchP
-      else applyDv(spark, root, snap, readFiles(spark, root, snap, touched))
-        .join(allKeys, Seq(keyP), "left_anti")
-        // rewritten old rows read under the OLD recorded schema — an
-        // evolving batch's added columns fill as NULL there
-        .unionByName(batchP, allowMissingColumns = evolveSchema)
-    commitStaged(rightSized(rewritten), root, Some(snap), _ => touched,
-      inheritedStatCols(snap),
-      old => old - DvRowsKey + (SchemaKey -> fp) + (OpKey -> "upsert")
-        ++ schemaMeta ++ extraMeta)._1
+    def matching(df: DataFrame, kept: Boolean): DataFrame = held match {
+      case Some(keys) =>
+        val in = keys.member(col(keyP))
+        df.filter(if (kept) in else !in)
+      case None =>
+        df.join(allKeys, Seq(keyP), if (kept) "left_semi" else "left_anti")
+    }
+    try {
+      val candidates = prunedFiles(snap, keyP, range.get(0), range.get(1))
+      val touched = touchedFiles(spark, root, snap, candidates)(raw =>
+        matching(raw.select(col(keyP), col("__f")), kept = true))
+      val rewritten =
+        if (touched.isEmpty) batchP
+        else matching(
+          applyDv(spark, root, snap, readFiles(spark, root, snap, touched)),
+          kept = false)
+          // rewritten old rows read under the OLD recorded schema — an
+          // evolving batch's added columns fill as NULL there
+          .unionByName(batchP, allowMissingColumns = evolveSchema)
+      commitStaged(rightSized(rewritten), root, Some(snap), _ => touched,
+        inheritedStatCols(snap),
+        old => old - DvRowsKey + (SchemaKey -> fp) + (OpKey -> "upsert")
+          ++ schemaMeta ++ extraMeta)._1
+    } finally held.foreach(_.release())
   }
 
   /** DELETE of a key range, file-pruned: only the files whose recorded

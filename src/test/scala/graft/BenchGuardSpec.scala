@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchGuardSpec extends AnyFunSuite {
 
   private def tmpDirWith(files: (String, String)*): java.io.File = {
-    val d = Files.createTempDirectory("benchguard").toFile
+    val d = TempDirs.create("benchguard").toFile
     files.foreach { case (name, body) =>
       Files.writeString(new java.io.File(d, name).toPath, body)
     }

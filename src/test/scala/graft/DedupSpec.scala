@@ -12,7 +12,7 @@ class DedupSpec extends SparkTestBase {
   import spark.implicits._
 
   private def newRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_dedup_$tag").toString + "/t"
+    TempDirs.create(s"graft_dedup_$tag").toString + "/t"
 
   test("latestPerKey keeps exactly the argmax row per key (O-23)") {
     val df = Seq(

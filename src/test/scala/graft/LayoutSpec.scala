@@ -162,7 +162,7 @@ class LayoutSpec extends SparkTestBase {
     val n = 64
     val parts = 16
     val grid = (for { x <- 0 until n; y <- 0 until n } yield (x, y)).toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toFile
+    val dir = TempDirs.create("graft_zorder").toFile
     try {
       Layout.zOrder(grid, Seq("x", "y"), partitions = parts, bits = 6)
         .write.mode("overwrite").parquet(dir.getAbsolutePath)

@@ -12,8 +12,8 @@ import graft.store.{Maintenance, MaintenancePolicy, Manifest}
 class MaintenanceSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def newRoot(tag: String): String = java.nio.file.Files
-    .createTempDirectory(s"graft_maint_$tag").toString + "/t"
+  private def newRoot(tag: String): String = TempDirs
+    .create(s"graft_maint_$tag").toString + "/t"
 
   test("debris policy: bin-pack fires on the small-file trigger, then converges") {
     val root = newRoot("debris")

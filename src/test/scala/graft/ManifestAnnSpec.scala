@@ -30,8 +30,8 @@ class ManifestAnnSpec extends SparkTestBase {
   // nearest list 0, second-nearest list 1; never list 2
   private val query = Seq(1000L, 300L, 0L, 0L)
 
-  private def freshRoot(): String = java.nio.file.Files
-    .createTempDirectory("graft_manifest_ann").toString + "/ivf"
+  private def freshRoot(): String = TempDirs
+    .create("graft_manifest_ann").toString + "/ivf"
 
   private def build(root: String): Unit = {
     ManifestAnn.appendBatch(batch1, root, "label", "vec_id", "qv",

@@ -16,7 +16,7 @@ class ManifestSpec extends SparkTestBase {
   import spark.implicits._
 
   private def newRoot(tag: String): String =
-    Files.createTempDirectory(s"graft_manifest_$tag").toString + "/t"
+    TempDirs.create(s"graft_manifest_$tag").toString + "/t"
 
   test("append/overwrite/read: versions are monotonic; append is prev ∪ new; overwrite replaces") {
     val root = newRoot("basic")
@@ -1687,26 +1687,13 @@ class ManifestSpec extends SparkTestBase {
       .toDF("k", "s", "t", "d", "dt")
       .withColumn("d", col("d").cast("decimal(12,2)"))
     val statCols = Seq("k", "s", "t", "d", "dt")
-    // job counter: footer-lifted stats must add ZERO Spark jobs over
-    // the identical stats-free append (the scan-based pass added one)
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { jobs.incrementAndGet(); () }
-      })
+    // footer-lifted stats must add ZERO Spark jobs over the identical
+    // stats-free append (the scan-based pass added one)
     Manifest.append(mk(0L).coalesce(1), root, statsCols = statCols) // warm
-    Thread.sleep(800) // listener bus is async; let job-start events drain
-    val j0 = jobs.get()
     val plainRoot = newRoot("footerstats_plain")
-    Manifest.append(mk(100L).coalesce(1), plainRoot)
-    Thread.sleep(800) // listener bus is async; let job-start events drain
-    val plainJobs = jobs.get() - j0
-    val j1 = jobs.get()
-    Manifest.append(mk(100L).coalesce(1), root, statsCols = statCols)
-    Thread.sleep(800) // listener bus is async; let job-start events drain
-    val statJobs = jobs.get() - j1
+    val plainJobs = jobsDuring(Manifest.append(mk(100L).coalesce(1), plainRoot))
+    val statJobs = jobsDuring(
+      Manifest.append(mk(100L).coalesce(1), root, statsCols = statCols))
     assert(statJobs == plainJobs,
       s"stats pass launched ${statJobs - plainJobs} extra job(s) — " +
         "footer lift regressed to the scan pass")
@@ -1757,29 +1744,15 @@ class ManifestSpec extends SparkTestBase {
     val statCols = Seq("k", "d38", "tn", "t")
     val rootF = newRoot("footer_d38")
     val rootS = newRoot("scan_d38")
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { jobs.incrementAndGet(); () }
-      })
-    def jobsFor(body: => Unit): Long = {
-      Thread.sleep(800) // listener bus is async; drain prior job starts
-      val j0 = jobs.get()
-      body
-      Thread.sleep(800)
-      jobs.get() - j0
-    }
     val (footerJobs, scanJobs) = try {
       spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       Manifest.append(mk(0).coalesce(1), rootF, statsCols = statCols) // warm
-      val fj = jobsFor {
+      val fj = jobsDuring {
         Manifest.append(mk(100).coalesce(1), rootF, statsCols = statCols)
       }
       spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
       Manifest.append(mk(0).coalesce(1), rootS, statsCols = statCols)
-      val sj = jobsFor {
+      val sj = jobsDuring {
         Manifest.append(mk(100).coalesce(1), rootS, statsCols = statCols)
       }
       (fj, sj)
@@ -3285,7 +3258,7 @@ class ManifestSpec extends SparkTestBase {
   }
 
   test("rightSized floors the coalesce target at leaf scan bytes (deflated-estimate guard)") {
-    val dir = Files.createTempDirectory("graft_rightsized").toString
+    val dir = TempDirs.create("graft_rightsized").toString
     // incompressible-ish wide rows so the parquet bytes are real
     spark.range(0, 5000)
       .select(col("id"), expr("repeat(md5(cast(id as string)), 30)").as("text"))

@@ -52,7 +52,7 @@ class OffPipelineSpec extends SparkTestBase {
     .map(_.mkString("\t"))
 
   private lazy val tsvPath: String = {
-    val dir = Files.createTempDirectory("graft-fixture")
+    val dir = TempDirs.create("graft-fixture")
     val f = dir.resolve("openfoodfacts_sample.tsv")
     Files.writeString(f, (header +: rows).mkString("\n"))
     f.toString
@@ -235,7 +235,7 @@ class OffPipelineSpec extends SparkTestBase {
 
   test("splittable bronze guard rejects a quoted-newline corpus loudly") {
     import graft.ingest.Ingest
-    val dir = Files.createTempDirectory("graft-mlfix")
+    val dir = TempDirs.create("graft-mlfix")
     val f = dir.resolve("embedded_newline.tsv")
     // a quoted product_name spanning a line break — legal under
     // multiLine=true, shredded under line splitting

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.bench.OffTsvGen
 import graft.pipeline.OffPipeline
 import graft.quality.QualitySuite
@@ -16,7 +14,7 @@ class OffTsvGenSpec extends SparkTestBase {
   private val n = 50000L
 
   private lazy val gold = {
-    val dir = Files.createTempDirectory("graft-gen").toString + "/off"
+    val dir = TempDirs.create("graft-gen").toString + "/off"
     OffTsvGen.generate(spark, dir, n)
     OffPipeline.run(spark, dir)
   }

@@ -23,7 +23,7 @@ class RebalanceSpec extends SparkTestBase {
   }
 
   private lazy val smallParquet: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rebalance").toString
+    val dir = TempDirs.create("graft-rebalance").toString
     spark.range(1000).selectExpr("id", "CAST(id AS STRING) AS t")
       .coalesce(1).write.mode("overwrite").parquet(dir)
     dir

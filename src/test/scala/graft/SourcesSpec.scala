@@ -14,7 +14,7 @@ class SourcesSpec extends SparkTestBase {
     .orderBy("o_orderkey")
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-src-$tag").toString + "/t"
+    TempDirs.create(s"graft-src-$tag").toString + "/t"
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.orderBy("o_orderkey").collect().map(_.toSeq.toList).toList

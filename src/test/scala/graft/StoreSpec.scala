@@ -171,7 +171,7 @@ class StoreSpec extends SparkTestBase {
   test("compact rejects external and bucketed tables with a clear error") {
     Store.ensureDatabase(spark, "graft_test")
     // external: the swap would orphan the original location
-    val extDir = java.nio.file.Files.createTempDirectory("graft-ext").toString
+    val extDir = TempDirs.create("graft-ext").toString
     spark.range(10).selectExpr("id").write.mode("overwrite").parquet(extDir)
     spark.sql(s"CREATE TABLE t_external USING parquet LOCATION '$extDir'")
     val e1 = intercept[IllegalArgumentException](Store.compact(spark, "t_external"))

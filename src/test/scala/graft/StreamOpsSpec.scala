@@ -18,8 +18,8 @@ class StreamOpsSpec extends SparkTestBase {
   test("clusteredIngestSink: appends exactly once, maintains layout every N batches") {
     import graft.store.Manifest
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_clustered_sink").toString + "/t"
+    val root = TempDirs
+      .create("graft_clustered_sink").toString + "/t"
     val input = MemoryStream[(Long, Long)]
     val q = StreamOps.clusteredIngestSink(
       input.toDF().toDF("x", "y"), root, Seq("x", "y"), "cluster_loop",
@@ -46,8 +46,8 @@ class StreamOpsSpec extends SparkTestBase {
   test("maintainedIngestSink: the policy loop rides the stream — cluster, gc, exactly once") {
     import graft.store.{Maintenance, MaintenancePolicy, Manifest}
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_maint_sink").toString + "/t"
+    val root = TempDirs
+      .create("graft_maint_sink").toString + "/t"
     val input = MemoryStream[(Long, Long)]
     val policy = MaintenancePolicy(layoutCols = Seq("x", "y"),
       targetBytes = 2048, cubeMinBytes = 512, keepVersions = 2)
@@ -90,12 +90,12 @@ class StreamOpsSpec extends SparkTestBase {
     val founding = "the quick brown fox jumps over the lazy dog near the river bank today"
     val novelA = "distributed query engines partition work across executors for scale"
     val novelB = "sequence packing fills token budget bins with greedy running totals"
-    val base = java.nio.file.Files.createTempDirectory("sa_index").toString
+    val base = TempDirs.create("sa_index").toString
     val (hashedRoot, bandedRoot) = (s"$base/hashed", s"$base/banded")
     Dedup.writeCorpusIndex(Seq((1L, founding)).toDF("doc_id", "text"),
       "doc_id", "text", Dedup.CharShingles(5), 8, 4, hashedRoot, bandedRoot)
-    val admittedPath = java.nio.file.Files.createTempDirectory("sa_admitted").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sa_ckpt").toString
+    val admittedPath = TempDirs.create("sa_admitted").toString
+    val ckpt = TempDirs.create("sa_ckpt").toString
     val input = MemoryStream[(Long, String)]
     val q = StreamOps.screenAndAdmit(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text",
@@ -135,8 +135,8 @@ class StreamOpsSpec extends SparkTestBase {
     Dedup.writeSpanIndex(
       Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
       "doc_id", "text", n = 3, "t_ss_grams")
-    val admittedPath = java.nio.file.Files.createTempDirectory("ss_admitted").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ss_ckpt").toString
+    val admittedPath = TempDirs.create("ss_admitted").toString
+    val ckpt = TempDirs.create("ss_ckpt").toString
     try {
       val input = MemoryStream[(Long, String)]
       val q = StreamOps.screenAndAdmitSpans(
@@ -180,8 +180,8 @@ class StreamOpsSpec extends SparkTestBase {
       .toDF("vec_id", "embedding")
     Similarity.writeSemanticIndex(founding, "vec_id", "embedding",
       k = 2, iters = 2, table = "t_sas_ix", numBuckets = 2)
-    val admittedPath = java.nio.file.Files.createTempDirectory("sas_admitted").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sas_ckpt").toString
+    val admittedPath = TempDirs.create("sas_admitted").toString
+    val ckpt = TempDirs.create("sas_ckpt").toString
     try {
       val input = MemoryStream[(Long, Array[Float])]
       val q = StreamOps.screenAndAdmitSemantic(
@@ -338,7 +338,7 @@ class StreamOpsSpec extends SparkTestBase {
       .withColumn("ts", timestamp_seconds(expr("ts DIV 1000000000"))) // nanos → timestamp
     // readStream needs a directory of homogeneous files — restage the
     // converted events into a temp dir and stream from there
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = TempDirs.create("graft-stream").toString
     batchDf.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(batchDf.schema).parquet(dir)
     val q = StreamOps.windowedTypeCounts(stream, windowDur = "1 day", watermark = "1 hour")
@@ -416,7 +416,7 @@ class StreamOpsSpec extends SparkTestBase {
       .filter(col("predicted")).select("doc_id").as[Long].collect().toSet
     assert(batchKept.nonEmpty && batchKept != docs.map(_._1).toSet,
       s"fixture must split: $batchKept") // the stream test must discriminate
-    val dir = java.nio.file.Files.createTempDirectory("graft-ppl").toString
+    val dir = TempDirs.create("graft-ppl").toString
     val input = MemoryStream[(Long, String)]
     val q = StreamOps.screenByPerplexity(
       input.toDF().toDF("doc_id", "text"), "doc_id", "text", lm, 1500L,
@@ -451,7 +451,7 @@ class StreamOpsSpec extends SparkTestBase {
     try {
       Search.writePostingsIndex(
         Seq((1L, "x y z")).toDF("doc_id", "text"), "doc_id", "text", tbl, 4)
-      val ckpt = java.nio.file.Files.createTempDirectory("post_ckpt").toString
+      val ckpt = TempDirs.create("post_ckpt").toString
       val input = MemoryStream[(Long, String)]
       val q = StreamOps.indexPostings(
         input.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl, ckpt)
@@ -467,7 +467,7 @@ class StreamOpsSpec extends SparkTestBase {
   test("cmsSink: the stored sketch log merges to the batch sketch of everything seen") {
     import graft.functions.CountMinSketch
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms").toString
+    val dir = TempDirs.create("graft-cms").toString
     val input = MemoryStream[String]
     val q = StreamOps.cmsSink(
       input.toDF().toDF("w"), "w", depth = 4, width = 16,
@@ -494,7 +494,7 @@ class StreamOpsSpec extends SparkTestBase {
   test("lmCountsSink: the online model log reconstructs the offline model exactly") {
     import graft.text.LmQuality
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
+    val dir = TempDirs.create("graft-lm").toString
     // batch 2 includes a SINGLE-token doc: vocab-only, no transitions —
     // the case the unigram log exists for
     val b1 = Seq((1L, "a b a b c"), (2L, "a b"))
@@ -561,7 +561,7 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("idempotentParquetSink: a replayed batch does not duplicate rows") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
+    val dir = TempDirs.create("graft-sink").toString
     val input = MemoryStream[(Long, String)]
     val q = StreamOps.idempotentParquetSink(
       input.toDF().toDF("id", "v"), s"$dir/data", s"$dir/ckpt")
@@ -583,7 +583,7 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("manifestSink: exactly-once streamed appends into an atomic manifest table") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-msink").toString
+    val dir = TempDirs.create("graft-msink").toString
     val root = s"$dir/table"
     val input = MemoryStream[(Long, String)]
     val q = StreamOps.manifestSink(
@@ -615,7 +615,7 @@ class StreamOpsSpec extends SparkTestBase {
   test("manifestUpsertSink: streamed CDC merge, last writer wins, replay-idempotent") {
     import graft.store.Manifest
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdcsink").toString
+    val dir = TempDirs.create("graft-cdcsink").toString
     val root = s"$dir/table"
     val input = MemoryStream[(Long, String)]
     val q = StreamOps.manifestUpsertSink(
@@ -646,7 +646,7 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("manifestMirrorStep: exactly-once incremental mirror, no consumer-side state") {
     import graft.store.Manifest
-    val dir = java.nio.file.Files.createTempDirectory("graft-mirror").toString
+    val dir = TempDirs.create("graft-mirror").toString
     val src = s"$dir/src"
     val dst = s"$dir/dst"
     def step(): Option[Long] = StreamOps.manifestMirrorStep(
@@ -689,7 +689,7 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("manifestCdcMirrorStep: a MUTATING source mirrors exactly; net-zero windows advance the cursor") {
     import graft.store.Manifest
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-mirror").toString
+    val dir = TempDirs.create("graft-cdc-mirror").toString
     val src = s"$dir/src"
     val dst = s"$dir/dst"
     def step(): Option[Long] = StreamOps.manifestCdcMirrorStep(
@@ -739,7 +739,7 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("cdc mirror survives gc outpacing its cursor: version-driven re-baseline") {
     import graft.store.Manifest
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-resync").toString
+    val dir = TempDirs.create("graft-cdc-resync").toString
     val src = s"$dir/src"
     val dst = s"$dir/dst"
     def step(): Option[Long] = StreamOps.manifestCdcMirrorStep(
@@ -775,7 +775,7 @@ class StreamOpsSpec extends SparkTestBase {
   test("matview DAG: fan-out + view-over-view, per-view watermarks, cascaded retraction") {
     import graft.store.Manifest
     import StreamOps.MatView
-    val dir = java.nio.file.Files.createTempDirectory("graft-mv-dag").toString
+    val dir = TempDirs.create("graft-mv-dag").toString
     val src = s"$dir/src"
     val v1 = s"$dir/v1"; val v2 = s"$dir/v2"; val v3 = s"$dir/v3"
     val views = Seq(
@@ -832,7 +832,7 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("append-only mirror survives gc outpacing its cursor: transformed re-baseline") {
     import graft.store.Manifest
-    val dir = java.nio.file.Files.createTempDirectory("graft-mirror-resync").toString
+    val dir = TempDirs.create("graft-mirror-resync").toString
     val src = s"$dir/src"
     val dst = s"$dir/dst"
     def step(): Option[Long] = StreamOps.manifestMirrorStep(
@@ -923,7 +923,7 @@ class StreamOpsSpec extends SparkTestBase {
   test("scd2Sink: streamed change batches maintain the versioned dim; batch ≡ stream; replay-safe") {
     import graft.store.Store
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("scd2_ckpt").toString
+    val ckpt = TempDirs.create("scd2_ckpt").toString
     val init = Store.scd2Init(
       Seq((1L, "a", 100L), (2L, "b", 100L)).toDF("k", "v", "eff"), Seq("k"), "eff")
     Store.overwrite(init, "t_scd2_dim")
@@ -965,8 +965,8 @@ class StreamOpsSpec extends SparkTestBase {
   test("scd2SinkSplit: open table + closed log ≡ monolithic history; replay and crash-window safe") {
     import graft.store.{Manifest, Store}
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("scd2s_ckpt").toString
-    val base = java.nio.file.Files.createTempDirectory("scd2s_store").toString
+    val ckpt = TempDirs.create("scd2s_ckpt").toString
+    val base = TempDirs.create("scd2s_store").toString
     val (openRoot, closedRoot) = (s"$base/open", s"$base/closed")
     val init = Store.scd2Init(
       Seq((1L, "a", 100L), (2L, "b", 100L)).toDF("k", "v", "eff"), Seq("k"), "eff")
@@ -1015,7 +1015,7 @@ class StreamOpsSpec extends SparkTestBase {
     import graft.dedup.Dedup
     import graft.store.Store
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("capstone").toString
+    val base = TempDirs.create("capstone").toString
     val (hashedRoot, bandedRoot) = (s"$base/hashed", s"$base/banded")
     val (admittedPath, openRoot, closedRoot) =
       (s"$base/admitted", s"$base/open", s"$base/closed")

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object ListenerBusDrain {
+
+  /** Blocks until every posted listener event has been delivered. */
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

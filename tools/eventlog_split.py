@@ -1,0 +1,145 @@
+#!/usr/bin/env python3
+"""Split a Spark event log into the driver-side layers of each job group.
+
+    python3 tools/eventlog_split.py <event log file or rolling-log dir> [--json]
+
+The log may be plain JSON lines or zstd-compressed (`.zstd`/`.zst`, read
+through the `zstd` command). A rolling log directory (`eventlog_v2_*`) is
+read in its file order. For every job group (jobs without one fall under
+"(none)") it prints, after the group's job description:
+
+- the SQL executions and jobs that ran in it;
+- planning: per SQL execution, the time from its start to its first job
+  (an execution that runs no job counts its whole wall), summed;
+- the wall of each job, submission to completion;
+- the driver gaps: time between one job's end and the next job's start
+  in the group, when no job of the group is running.
+
+Spark writes such a log when the JVM gets
+`-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<existing dir>`
+(for a JVM you do not launch yourself, put them in `JAVA_TOOL_OPTIONS`).
+"""
+import argparse
+import json
+import subprocess
+import sys
+from collections import defaultdict
+from pathlib import Path
+
+SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
+NONE = "(none)"
+
+
+def log_files(path):
+    p = Path(path)
+    if not p.is_dir():
+        return [p]
+
+    def index(f):
+        # rolling logs name their parts events_<n>_<app id>[.codec]
+        parts = f.name.split("_")
+        return int(parts[1]) if len(parts) > 2 and parts[1].isdigit() else 0
+    return sorted((f for f in p.iterdir() if f.name.startswith("events_")), key=index)
+
+
+def lines(path):
+    for f in log_files(path):
+        if f.suffix in (".zstd", ".zst"):
+            # an in-progress log may end mid-frame: keep what decodes
+            out = subprocess.run(["zstd", "-dcq", str(f)], stdout=subprocess.PIPE,
+                                 stderr=subprocess.DEVNULL).stdout
+            text = out.decode("utf-8", errors="replace")
+        else:
+            text = f.read_text(errors="replace")
+        yield from text.splitlines()
+
+
+def read(path):
+    """Jobs and SQL executions of the log, keyed by id."""
+    jobs, execs = {}, {}
+    for line in lines(path):
+        try:
+            e = json.loads(line)
+        except ValueError:
+            continue  # a torn last line of an in-progress log
+        kind = e.get("Event")
+        if kind == "SparkListenerJobStart":
+            props = e.get("Properties") or {}
+            ex = props.get("spark.sql.execution.id")
+            jobs[e["Job ID"]] = {
+                "start": e["Submission Time"], "end": None,
+                "group": props.get("spark.jobGroup.id") or NONE,
+                "label": props.get("spark.job.description") or "",
+                "exec": int(ex) if ex not in (None, "") else None}
+        elif kind == "SparkListenerJobEnd":
+            if e["Job ID"] in jobs:
+                jobs[e["Job ID"]]["end"] = e["Completion Time"]
+        elif kind == SQL_START:
+            execs[e["executionId"]] = {"start": e["time"], "end": None,
+                                       "group": e.get("jobGroupId") or None}
+        elif kind == SQL_END:
+            if e["executionId"] in execs:
+                execs[e["executionId"]]["end"] = e["time"]
+    return jobs, execs
+
+
+def split(jobs, execs):
+    """Per job group: executions, jobs, planning, job walls, driver gaps."""
+    # an execution without a recorded group takes its first job's group
+    for j in sorted(jobs.values(), key=lambda j: j["start"]):
+        x = execs.get(j["exec"])
+        if x is not None and x["group"] is None:
+            x["group"] = j["group"]
+    groups = defaultdict(lambda: {"executions": 0, "jobs": [], "planning_ms": 0})
+    first_job = {}
+    for j in jobs.values():
+        if j["exec"] is not None:
+            first_job[j["exec"]] = min(first_job.get(j["exec"], j["start"]), j["start"])
+        groups[j["group"]]["jobs"].append(j)
+    for xid, x in execs.items():
+        g = groups[x["group"] or NONE]
+        g["executions"] += 1
+        stop = first_job.get(xid, x["end"])
+        if stop is not None:
+            g["planning_ms"] += max(0, stop - x["start"])
+    out = {}
+    for name, g in groups.items():
+        js = sorted(g["jobs"], key=lambda j: j["start"])
+        walls = [j["end"] - j["start"] for j in js if j["end"] is not None]
+        gaps, busy_until = [], None
+        for j in js:
+            if busy_until is not None:
+                gaps.append(max(0, j["start"] - busy_until))
+            end = j["end"] if j["end"] is not None else j["start"]
+            busy_until = end if busy_until is None else max(busy_until, end)
+        out[name] = {"label": js[0]["label"] if js else "",
+                     "first_ms": js[0]["start"] if js else None,
+                     "executions": g["executions"], "jobs": len(js),
+                     "planning_ms": g["planning_ms"], "job_wall_ms": walls,
+                     "driver_gap_ms": gaps}
+    return out
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("log", help="event log file, or a rolling event log directory")
+    ap.add_argument("--json", action="store_true", help="print one JSON object")
+    args = ap.parse_args()
+    result = split(*read(args.log))
+    if args.json:
+        print(json.dumps(result, sort_keys=True))
+        return
+    # groups in the order their first job started
+    for name in sorted(result, key=lambda n: (result[n]["first_ms"] is None,
+                                              result[n]["first_ms"] or 0, n)):
+        r = result[name]
+        label = f" ({r['label']})" if r["label"] else ""
+        print(f"{name}{label}: {r['executions']} SQL executions, {r['jobs']} jobs, "
+              f"planning {r['planning_ms']} ms, "
+              f"job walls {sum(r['job_wall_ms'])} ms {r['job_wall_ms']}, "
+              f"driver gaps {sum(r['driver_gap_ms'])} ms {r['driver_gap_ms']}")
+
+
+if __name__ == "__main__":
+    sys.exit(main())
