@@ -455,7 +455,10 @@ object Bench {
     // bench_vs_baseline) — and only a nearly-exhausted budget skips
     val pipelineRoom = if (unlimited) Double.MaxValue else budget - elapsedSec - 15.0
     val pipelineRuns = if (pipelineRoom > 130.0) 2 else if (pipelineRoom > 60.0) 1 else 0
-    val pipeline = if ((args.isEmpty || args.contains("pipeline")) && pipelineRuns > 0) {
+    // pipeline_sec is None when the section was not run (partial dev
+    // invocations) — -1.0 stays exclusively the failure sentinel the
+    // catch branch records, never "didn't run"
+    val (pipeline, pipelineSec) = if ((args.isEmpty || args.contains("pipeline")) && pipelineRuns > 0) {
       try {
         val tsv = graft.TempDirs.create("graft-off-bench").toString + "/off"
         graft.bench.OffTsvGen.generate(spark, tsv)
@@ -508,14 +511,14 @@ object Bench {
         val r1 = runPipeline()
         val r2 = if (pipelineRuns >= 2) runPipeline() else r1
         val (sec, offQSec, rowsOut) = if (r2._1 <= r1._1) r2 else r1
-        s""","pipeline_sec":${fmt(sec)},"pipeline_rows_in":${graft.bench.OffTsvGen.ReferenceRows}""" +
+        (s""","pipeline_sec":${fmt(sec)},"pipeline_rows_in":${graft.bench.OffTsvGen.ReferenceRows}""" +
           s""","pipeline_rows_out":$rowsOut,"pipeline_rows_per_sec":${fmt(graft.bench.OffTsvGen.ReferenceRows / sec)}""" +
-          s""","off_queries_sec":${fmt(offQSec)}"""
+          s""","off_queries_sec":${fmt(offQSec)}""", Some(sec))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] pipeline: ${e.getMessage}")
-        ",\"pipeline_sec\":-1.0"
+        (",\"pipeline_sec\":-1.0", Some(-1.0))
       }
-    } else ""
+    } else ("", None)
     val hostEnd = hostSpeed()
     System.err.println(f"[bench] host_speed(end): $hostEnd%.3fs")
     val host = math.min(hostStart, hostEnd)
@@ -563,16 +566,9 @@ object Bench {
     val worst5 = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, v) => "{\"q\":\"" + k + "\",\"sec\":" + fmt(v) + "}" }
       .mkString("[", ",", "]")
-    // pipeline_sec is OMITTED when the pipeline section was not run
-    // (partial dev invocations) — -1.0 stays exclusively the failure
-    // sentinel the catch branch writes, never "didn't run"
-    val pipelineSec = {
-      val re = """"pipeline_sec":(-?\d+(?:\.\d+)?)""".r
-      re.findFirstMatchIn(pipeline)
-        .map(m => s""""pipeline_sec":${m.group(1)},""").getOrElse("")
-    }
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$nFailed,""" +
-      s"""$pipelineSec"host_speed":${fmt(host)},"fs_speed":${fmt(fsS)},"par_speed":${fmt(par)},""" +
+      pipelineSec.fold("")(v => s""""pipeline_sec":${fmt(v)},""") +
+      s""""host_speed":${fmt(host)},"fs_speed":${fmt(fsS)},"par_speed":${fmt(par)},""" +
       s""""query_sec":${fmt(querySec)},""" +
       s""""scenario_sec":${fmt(scenarioSec)},"truncated":$truncated,""" +
       s""""skipped":$skippedQs,"cores":$cpus,""" +

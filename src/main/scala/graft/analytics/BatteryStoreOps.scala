@@ -885,7 +885,7 @@ trait BatteryStoreOps extends BatteryModels {
       FROM latest GROUP BY 1 ORDER BY 1"""))
 
   /** PLANNER-INTEGRATED manifest scan
-    * ([[graft.store.Manifest.table]] — a table-format `FileIndex`
+    * ([[graft.store.Manifest.read]] — a table-format `FileIndex`
     * under Spark's own `HadoopFsRelation`, the public Delta
     * architecture): orders land as four range-disjoint stat'd commits
     * and the query arrives as ordinary SQL over a temp view — no
@@ -909,7 +909,7 @@ trait BatteryStoreOps extends BatteryModels {
             col("o_orderkey") < (qtr + 1) * cut).coalesce(1),
           root, statsCols = Seq("o_orderkey"))
       }
-      Manifest.table(s, root).createOrReplaceTempView("graft_q163_orders")
+      Manifest.read(s, root).createOrReplaceTempView("graft_q163_orders")
       s.sql(s"""SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
           ${dsumSql("o_totalprice")} AS total_price
         FROM graft_q163_orders
@@ -1065,7 +1065,7 @@ trait BatteryStoreOps extends BatteryModels {
   /** OR-OF-RANGES DATA SKIPPING through the planner-integrated scan
     * ([[graft.store.ManifestFileIndex]]): the table is range-compacted
     * on the key so files carry tight [min, max] slabs, then plain SQL
-    * with a two-slab OR filter runs over [[graft.store.Manifest.table]]
+    * with a two-slab OR filter runs over [[graft.store.Manifest.read]]
     * — the FileIndex scans only the union of the two slabs' file sets
     * (pinned by the ManifestSpec scan-metric matrix; here the oracle
     * pins the ANSWER). A third NOT-quite-prunable predicate rides
@@ -1081,7 +1081,7 @@ trait BatteryStoreOps extends BatteryModels {
         rangeBy = Seq("o_orderkey"))
       val hi = orders.agg(max(col("o_orderkey"))).head().getLong(0)
       val cut = hi / 10 + 1
-      Manifest.table(s, root).createOrReplaceTempView("graft_q167_orders")
+      Manifest.read(s, root).createOrReplaceTempView("graft_q167_orders")
       s.sql(s"""
         SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
           ${dsumSql("o_totalprice")} AS total_price
@@ -1803,7 +1803,7 @@ trait BatteryStoreOps extends BatteryModels {
           (col("o_totalprice") + lit(100.0)).as("price"),
           col("o_orderstatus")),
         root, "okey")
-      Manifest.table(s, root)
+      Manifest.read(s, root)
         .filter(col("okey") <= mk / 4)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
@@ -2246,7 +2246,7 @@ trait BatteryStoreOps extends BatteryModels {
       require(snap.files == filesBefore, "DV delete moved data files")
       val metaCount = Manifest.rowCount(snap).getOrElse(
         sys.error("metadata count lost under the vector"))
-      Manifest.table(s, root)
+      Manifest.read(s, root)
         .groupBy(col("o_orderstatus").as("status"))
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
@@ -2336,7 +2336,7 @@ trait BatteryStoreOps extends BatteryModels {
       }
       Manifest.deleteWhereDv(s, root, "o_orderkey % 5 = 0")
       Maintenance.run(s, root, policy)
-      Manifest.table(s, root)
+      Manifest.read(s, root)
         .groupBy(col("o_orderstatus").as("status"))
         .agg(count(lit(1)).as("n"),
           sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),

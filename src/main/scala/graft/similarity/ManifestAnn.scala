@@ -19,7 +19,7 @@ import graft.store.Manifest
   * list id before landing, so every data file covers a TIGHT
   * `[min, max]` list range in the manifest's skip stats, and a probe
   * of p of L lists reads ~p/L of the files through the
-  * planner-integrated scan ([[Manifest.table]] — IN prunes). Centroid
+  * planner-integrated scan ([[Manifest.read]] — IN prunes). Centroid
   * state is a sidecar manifest table of per-list PARTIAL SUMS: sums
   * are additive, so index maintenance is pure append — no rebuild, no
   * read-modify-write — and the probe aggregates the (lists × batches)
@@ -137,7 +137,7 @@ object ManifestAnn {
     require(k >= 1, s"probe: k must be >= 1, got $k")
     val qlit = typedLit(queryQv)
     val probed = probedLists(spark, root, listCol, queryQv, nProbe)
-    Manifest.table(spark, root)
+    Manifest.read(spark, root)
       .filter(col(listCol).isin(probed: _*) && rowFilter)
       .select(col(idCol), col(listCol),
         Similarity.cosineQ(col(qvCol), qlit).as("cosine"))
@@ -338,7 +338,7 @@ object ManifestAnn {
     val coarse = Manifest.read(spark, meansRoot(root))
       .filter(col(listCol).isin(probed: _*))
       .select(col(listCol), Similarity.dotQ(col("mvec"), qlit).as("coarse"))
-    val cand = Manifest.table(spark, codesRoot(root))
+    val cand = Manifest.read(spark, codesRoot(root))
       .filter(col(listCol).isin(probed: _*))
       .join(broadcast(coarse), Seq(listCol))
       .select(col("id"), col("coarse"),
@@ -351,9 +351,9 @@ object ManifestAnn {
       .select(col("id"))
       .collect().map(_.get(0)).toSeq
     if (cand.isEmpty)
-      return Manifest.table(spark, root).filter(lit(false))
+      return Manifest.read(spark, root).filter(lit(false))
         .select(col(idCol), col(listCol), lit(0.0).as("cosine"))
-    Manifest.table(spark, root)
+    Manifest.read(spark, root)
       .filter(col(listCol).isin(probed: _*) && col(idCol).isin(cand: _*))
       .select(col(idCol), col(listCol),
         Similarity.cosineQ(col(qvCol), qlit).as("cosine"))

@@ -241,7 +241,7 @@ object Manifest {
   /** Reserved metadata key: the current DELETION VECTOR's root-relative
     * parquet path (columns `f` = manifest-relative data file, `ri` =
     * row index within it). Absent = no outstanding deletions. Every
-    * reader goes through [[readSnapshot]] (or [[table]]'s wrap), which
+    * reader goes through [[readSnapshot]], which
     * anti-joins the vector out; compaction APPLIES it (reads through
     * the vector, publishes clean files, clears the pointer). */
   val DvKey = "graft.dv"
@@ -520,34 +520,37 @@ object Manifest {
       .filter(_.matches("m\\d{16}")).map(_.drop(1).toLong).sorted.toSeq
   }
 
-  /** Read the current snapshot (empty-schema-safe: an absent root
-    * throws — an empty TABLE is a committed manifest with no files,
-    * which reads as an empty frame of the caller-known schema only if
-    * at least one file exists; callers bootstrap with an init commit). */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val snap = currentOrFail(spark, root)
-    readSnapshot(spark, root, snap)
-  }
+  /** Read the current snapshot — [[readSnapshot]] of [[current]]. An
+    * absent root throws, and so does a committed version with no files
+    * (callers bootstrap with an init commit). */
+  def read(spark: SparkSession, root: String): DataFrame =
+    readSnapshot(spark, root, currentOrFail(spark, root))
 
   /** Read a pinned snapshot — the isolation guarantee made usable: the
     * file list is fixed at resolve time, so later commits/compactions
     * never change (or break) this frame until [[gc]] passes retention.
-    * The ONE reader choke point: the snapshot's deletion vector (if
-    * any) is anti-joined out here, so no path through the store can
-    * resurrect deleted rows. */
-  def readSnapshot(spark: SparkSession, root: String, snap: Snapshot): DataFrame =
-    logicalize(readSnapshotRaw(spark, root, snap), snap)
-
-  /** [[readSnapshot]] in PHYSICAL (file) column names — the form every
-    * file-REWRITING maintenance op stages from, so data files keep
-    * their physical names across compactions regardless of any column
-    * mapping. Identical to [[readSnapshot]] on unmapped tables. */
-  private def readSnapshotRaw(spark: SparkSession, root: String,
-      snap: Snapshot): DataFrame = {
+    * The scan is a [[ManifestFileIndex]] under Spark's own
+    * `HadoopFsRelation` (the public Delta architecture): ANY filter a
+    * DataFrame/SQL query pushes down prunes files through the
+    * manifest's recorded per-file stats at scan-planning time, and the
+    * read itself is stock vectorized parquet. The ONE reader choke
+    * point: the snapshot's deletion vector (if any) is anti-joined out
+    * here, so no path through the store can resurrect deleted rows.
+    * Column mapping resolves LAST: its aliases sit above the physical
+    * scan, so pushed filters rewrite through them into the physical
+    * attributes the stats are keyed by. */
+  def readSnapshot(spark: SparkSession, root: String, snap: Snapshot): DataFrame = {
     require(snap.files.nonEmpty,
       s"$root version ${snap.version} is an empty snapshot — nothing to read")
-    applyDv(spark, root, snap, readFiles(spark, root, snap, snap.files))
+    readLive(spark, root, snap, snap.files)
   }
+
+  /** The live rows of a file subset of `snap` in LOGICAL column names:
+    * [[scan]] with the deletion vector anti-joined out and the column
+    * mapping resolved above it. */
+  private def readLive(spark: SparkSession, root: String, snap: Snapshot,
+      files: Seq[String]): DataFrame =
+    logicalize(applyDv(spark, root, snap, scan(spark, root, snap, files)), snap)
 
   /** The snapshot's recorded StructType, when a schema-recording commit
     * has run ([[SchemaJsonKey]]) — absent on pre-evolution tables,
@@ -623,22 +626,36 @@ object Manifest {
     st
   }
 
-  /** Raw parquet scan of a FILE SUBSET of `snap`, under the table's
-    * recorded schema when one exists — the single place every
-    * subset-read (upsert touch rewrite, delete rewrite, DV candidates,
-    * partial compaction) goes through, so evolved tables (files with
-    * heterogeneous column sets) read uniformly: absent columns resolve
-    * to NULL by name. Does NOT apply the deletion vector — callers
-    * that need live rows wrap with [[applyDv]]. Pre-evolution tables
-    * (no recorded schema, uniform files) read under the first file's
-    * footer schema — same answer Spark's inference job would return,
-    * without the job. */
-  private def readFiles(spark: SparkSession, root: String, snap: Snapshot,
+  /** The table's PHYSICAL schema at `snap`: the recorded one when a
+    * schema-recording commit has run, else the footer schema of the
+    * first of `files` (of the snapshot's own files when `files` is
+    * empty) — the answer Spark's inference job would return, without
+    * the job. */
+  private def tableSchema(spark: SparkSession, root: String, snap: Snapshot,
+      files: Seq[String] = Nil): org.apache.spark.sql.types.StructType =
+    recordedSchema(snap).getOrElse(
+      fileSchema(spark, root, files.headOption.getOrElse(snap.files.head)))
+
+  /** Raw parquet scan of a FILE SUBSET of `snap` through a
+    * [[ManifestFileIndex]] — the single place every read reaches data
+    * files (snapshot reads, upsert discovery and rewrites, delete
+    * rewrites, DV candidates, change feeds, compactions). It plans
+    * with no per-file status call and prunes any pushed filter by the
+    * manifest stats. It reads under [[tableSchema]], so evolved tables
+    * (files with heterogeneous column sets) read uniformly: absent
+    * columns resolve to NULL by name. An empty subset is an empty scan
+    * that keeps the schema. Does NOT apply the deletion vector —
+    * callers that need live rows wrap with [[applyDv]]. */
+  private def scan(spark: SparkSession, root: String, snap: Snapshot,
       files: Seq[String]): DataFrame = {
-    val st = recordedSchema(snap).getOrElse(
-      fileSchema(spark, root, files.head))
-    spark.read.schema(st)
-      .parquet(files.map(rel => new Path(dataDir(root), rel).toString): _*)
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val relation = HadoopFsRelation(
+      new ManifestFileIndex(spark, root, snap.copy(files = files)),
+      new org.apache.spark.sql.types.StructType(),
+      tableSchema(spark, root, snap, files), None, new ParquetFileFormat,
+      Map.empty[String, String])(spark)
+    spark.baseRelationToDataFrame(relation)
   }
 
   /** A snapshot file entry as the deletion vector's key domain: the
@@ -1042,12 +1059,13 @@ object Manifest {
         val his = withVals.map { case (ch, s) =>
           convert(ch, s.genericGetMax.asInstanceOf[AnyRef]) }
         if (los.exists(_.isEmpty) || his.exists(_.isEmpty)) None
-        else Some(Seq(
-          c -> ((boundStat(los.flatten.reduce((a, b) =>
-              if (cmp(a, b) <= 0) a else b), isMax = false),
-            boundStat(his.flatten.reduce((a, b) =>
-              if (cmp(a, b) >= 0) a else b), isMax = true)): (Any, Any)),
-          nullsEntry))
+        else {
+          val lo = los.flatten.reduce((a, b) => if (cmp(a, b) <= 0) a else b)
+          val hi = his.flatten.reduce((a, b) => if (cmp(a, b) >= 0) a else b)
+          if (!recordable(lo) || !recordable(hi)) Some(Seq(nullsEntry))
+          else Some(Seq(c -> ((boundStat(lo, isMax = false),
+            boundStat(hi, isMax = true)): (Any, Any)), nullsEntry))
+        }
       }
     }
     val perFile = staged.map { rel =>
@@ -1099,7 +1117,7 @@ object Manifest {
             val (lo, hi) = (r.getAs[Any](s"__lo_$c"), r.getAs[Any](s"__hi_$c"))
             val nn = r.getAs[Long](s"__nn_$c")
             val minMax =
-              if (lo == null || hi == null) None
+              if (lo == null || hi == null || !recordable(lo) || !recordable(hi)) None
               else Some(c -> ((boundStat(lo, isMax = false),
                 boundStat(hi, isMax = true)): (Any, Any)))
             minMax.toSeq :+ (s"$c$NullsSuffix" -> ((nn, nn): (Any, Any)))
@@ -1107,6 +1125,15 @@ object Manifest {
         }
       }
       .filter(_._2.nonEmpty).toMap
+  }
+
+  /** Can `v` be a recorded stat bound? Non-finite floating values
+    * serialize as JSON strings and would read back as string bounds,
+    * so a file holding one records no [min, max] for that column (it
+    * is then never pruned on it, like a stats-free file). */
+  private def recordable(v: Any): Boolean = v match {
+    case n: Number => !nonFinite(n)
+    case _ => true
   }
 
   /** Recorded-stat cap for long strings (the public Delta
@@ -1461,8 +1488,7 @@ object Manifest {
     * through the map) — validation surface for rename/drop. */
   private def logicalSchemaNames(spark: SparkSession, root: String,
       snap: Snapshot): Seq[String] = {
-    val phys = recordedSchema(snap).getOrElse(
-      readFiles(spark, root, snap, snap.files.take(1)).schema)
+    val phys = tableSchema(spark, root, snap)
       .fields.map(_.name).toSeq
     val dropSet = droppedOf(snap).toSet
     val p2l = colMapOf(snap).map(_.swap)
@@ -1537,8 +1563,7 @@ object Manifest {
     // as the post-drop physical shape, so plain appends keep enforcing.
     // Old files still carry the column's bytes; a recorded schema that
     // omits it means by-name resolution simply never reads them.
-    val physSchema = recordedSchema(snap).getOrElse(
-      readFiles(spark, root, snap, snap.files.take(1)).schema)
+    val physSchema = tableSchema(spark, root, snap)
     val kept = org.apache.spark.sql.types.StructType(
       physSchema.fields.filterNot(f => d2.contains(f.name)))
     val fp2 = kept.fields.map(f => s"${f.name}:${f.dataType.catalogString}")
@@ -1719,8 +1744,7 @@ object Manifest {
       case None => Map.empty
       case Some(snap) =>
         val live = logicalSchemaNames(spark, root, snap).toSet
-        val tablePhys = recordedSchema(snap).getOrElse(
-          readFiles(spark, root, snap, snap.files.take(1)).schema)
+        val tablePhys = tableSchema(spark, root, snap)
           .fields.map(_.name).toSet
         val reserved = droppedOf(snap).toSet ++ colMapOf(snap).values ++
           tablePhys
@@ -1743,8 +1767,7 @@ object Manifest {
     val merged: org.apache.spark.sql.types.StructType = parent match {
       case None => dfP.schema
       case Some(snap) =>
-        val table = recordedSchema(snap).getOrElse(
-          readFiles(spark, root, snap, snap.files.take(1)).schema)
+        val table = tableSchema(spark, root, snap)
         mergeStructs(table, dfP.schema).getOrElse(
           throw new IllegalArgumentException(
             s"$root: appendMerge cannot reconcile the batch schema " +
@@ -2013,14 +2036,23 @@ object Manifest {
     * be wrongly pruned for a U+E000-range probe. One comparator now
     * serves stats recording, pruning, and the cube sweeps
     * ([[graft.store.Layout.utf8Order]] is the same order on the
-    * clustering side). */
+    * clustering side). Floating values order as Spark's min/max do:
+    * NaN above every value (+Infinity included), −0.0 equal to 0.0. */
   private[store] def cmp(a0: Any, b0: Any): Int = (temporalText(a0), temporalText(b0)) match {
     case (x: Long, y: Long) => java.lang.Long.compare(x, y)
     case (x: String, y: String) => Layout.utf8Order.compare(x, y)
+    case (x: Number, y: Number) if nonFinite(x) || nonFinite(y) =>
+      java.lang.Double.compare(x.doubleValue + 0.0, y.doubleValue + 0.0)
     case (x: Number, y: Number) =>
       new java.math.BigDecimal(x.toString).compareTo(new java.math.BigDecimal(y.toString))
     case (a, b) => throw new IllegalArgumentException(
       s"manifest stats: cannot order ${a.getClass.getName} against ${b.getClass.getName}")
+  }
+
+  private def nonFinite(n: Number): Boolean = n match {
+    case d: java.lang.Double => d.isNaN || d.isInfinite
+    case f: java.lang.Float => f.isNaN || f.isInfinite
+    case _ => false
   }
 
   /** DATA-SKIPPING read: rows of the current snapshot with
@@ -2029,21 +2061,11 @@ object Manifest {
     * column are conservatively scanned). Semantics are EXACT
     * regardless of pruning — the range filter is applied to the rows
     * too, so a stats-free file contributes exactly its matching rows.
-    * Returns the frame; [[prunedFileCount]] reports the skip rate for
-    * measurement. */
+    * The pruning is the [[ManifestFileIndex]]'s, under the range filter
+    * [[read]] pushes down; [[prunedFiles]] names the files it keeps. */
   def readWhereBetween(spark: SparkSession, root: String,
-      colName: String, lo: Any, hi: Any): DataFrame = {
-    val snap = currentOrFail(spark, root)
-    val keep = prunedFiles(snap, toPhysical(snap, colName), lo, hi)
-    val base =
-      if (keep.isEmpty)
-        // every file pruned: read one file for the SCHEMA, emit no rows
-        // (fabricating a schema here would desync from the stored one)
-        readSnapshot(spark, root, snap.copy(files = snap.files.take(1)))
-          .filter(lit(false))
-      else readSnapshot(spark, root, snap.copy(files = keep))
-    base.filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
-  }
+      colName: String, lo: Any, hi: Any): DataFrame =
+    read(spark, root).filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
 
   /** Deserialized bloom sidecars by (root, rel): a sidecar is
     * IMMUTABLE once written (each build lands under a fresh
@@ -2109,9 +2131,7 @@ object Manifest {
     * pruned. */
   private def bloomProbeType(spark: SparkSession, root: String,
       snap: Snapshot, colName: String): Option[org.apache.spark.sql.types.DataType] =
-    recordedSchema(snap)
-      .orElse(scala.util.Try(
-        readFiles(spark, root, snap, snap.files.take(1)).schema).toOption)
+    scala.util.Try(tableSchema(spark, root, snap)).toOption
       .flatMap(_.fields.find(_.name == colName)).map(_.dataType)
 
   /** Build (or refresh) the per-file BLOOM index for `colName` over
@@ -2143,7 +2163,7 @@ object Manifest {
           org.apache.spark.sql.GraftSqlBridge.expression(xxhash64(col("__v"))),
           litE(items), litE(bits)).toAggregateExpression())
     val rel = s"bloom/${pcol}_v${snap.version}"
-    readFiles(spark, root, snap, snap.files)
+    scan(spark, root, snap, snap.files)
       .select(col(pcol).as("__v"),
         org.apache.spark.sql.functions
           .expr("substring_index(_metadata.file_path, '/data/', -1)")
@@ -2194,54 +2214,43 @@ object Manifest {
       value: Any): DataFrame = {
     require(value != null, "readWhereEquals probes a non-null value")
     val snap = currentOrFail(spark, root)
-    val pcol = toPhysical(snap, colName)
-    val statCand = prunedFiles(snap, pcol, value, value)
-    val cand = snap.meta.get(BloomKeyPrefix + pcol) match {
-      case None => statCand
-      case Some(rel) =>
-        hashProbe(value, bloomProbeType(spark, root, snap, pcol)) match {
-          case None => statCand // unresolvable/uncastable probe: stats only
-          case Some(h) =>
-            val entries = bloomEntries(spark, root, rel)
-            val known = entries.map(_._1).toSet
-            val pass = entries.filter(_._2.mightContainLong(h)).map(_._1).toSet
-            statCand.filter { f =>
-              val n = dvName(f); !known.contains(n) || pass(n)
-            }
-        }
-    }
-    val base =
-      if (cand.isEmpty)
-        readSnapshot(spark, root, snap.copy(files = snap.files.take(1)))
-          .filter(org.apache.spark.sql.functions.lit(false))
-      else readSnapshot(spark, root, snap.copy(files = cand))
-    base.filter(col(colName) === lit(value))
+    readLive(spark, root, snap,
+      bloomCandidates(spark, root, snap, toPhysical(snap, colName), Seq(value)))
+      .filter(col(colName) === lit(value))
   }
 
   /** Multi-value point lookup: `colName IN (values)` as ONE scan of
     * the union candidate set — the id-list fetch shape. Each value
     * screens through the [min, max] stats, then the bloom sidecar
     * (when recorded) keeps a file only if SOME probe value might be
-    * contained; all probe hashes come from one tiny job (the values
-    * cast to the column's recorded type). Driver cost is
-    * O(values × files) set arithmetic — the operator is for BOUNDED
-    * in-lists (tens to thousands of ids), not semi-joins; join a
-    * table for those. */
+    * contained. Driver cost is O(values × files) set arithmetic — the
+    * operator is for BOUNDED in-lists (tens to thousands of ids), not
+    * semi-joins; join a table for those. */
   def readWhereIn(spark: SparkSession, root: String, colName: String,
       values: Seq[Any]): DataFrame = {
     require(values.nonEmpty, "readWhereIn needs at least one value")
     require(values.forall(_ != null), "readWhereIn probes non-null values")
     val snap = currentOrFail(spark, root)
-    val pcol = toPhysical(snap, colName)
-    val statCand = values
-      .flatMap(v => prunedFiles(snap, pcol, v, v)).distinct
-    val cand = snap.meta.get(BloomKeyPrefix + pcol) match {
+    readLive(spark, root, snap,
+      bloomCandidates(spark, root, snap, toPhysical(snap, colName), values))
+      .filter(col(colName).isin(values: _*))
+  }
+
+  /** The files of `snap` that may hold a row whose physical column
+    * `pcol` equals one of `values`: the files [[prunedFiles]] keeps for
+    * some value, then, when a bloom sidecar is recorded, only those
+    * whose sketch might contain some value's hash. Files absent from
+    * the sidecar stay candidates. A value that cannot be hashed at the
+    * column's type could live in ANY file, so then the stats alone
+    * decide (a partial hash list would prune files wrongly). */
+  private def bloomCandidates(spark: SparkSession, root: String,
+      snap: Snapshot, pcol: String, values: Seq[Any]): Seq[String] = {
+    val statCand = values.flatMap(v => prunedFiles(snap, pcol, v, v)).distinct
+    snap.meta.get(BloomKeyPrefix + pcol) match {
       case None => statCand
       case Some(rel) =>
         val dt = bloomProbeType(spark, root, snap, pcol)
         val hashes = values.flatMap(hashProbe(_, dt))
-        // an unhashable probe value could live in ANY file — a partial
-        // hash list must not screen (its files would be pruned wrongly)
         if (hashes.size != values.size) statCand
         else {
           val entries = bloomEntries(spark, root, rel)
@@ -2254,12 +2263,6 @@ object Manifest {
           }
         }
     }
-    val base =
-      if (cand.isEmpty)
-        readSnapshot(spark, root, snap.copy(files = snap.files.take(1)))
-          .filter(org.apache.spark.sql.functions.lit(false))
-      else readSnapshot(spark, root, snap.copy(files = cand))
-    base.filter(col(colName).isin(values: _*))
   }
 
   /** The file subset of `snap` whose recorded [min, max] for `colName`
@@ -2348,11 +2351,7 @@ object Manifest {
       s"$root: versions $sinceVersion..${to.version} are not append-only " +
         s"(${rewritten.size} files rewritten, e.g. ${rewritten.take(2)}) — " +
         "re-read the full table and re-baseline")
-    val oldSet = old.files.toSet
-    val fresh = to.files.filterNot(oldSet)
-    if (fresh.isEmpty)
-      readSnapshot(spark, root, to.copy(files = to.files.take(1))).filter(lit(false))
-    else readSnapshot(spark, root, to.copy(files = fresh))
+    readLive(spark, root, to, to.files.filterNot(old.files.toSet))
   }
 
   /** Last transaction id committed by `writerId` through [[appendOnce]]
@@ -2444,19 +2443,18 @@ object Manifest {
     val removed = old.files.filterNot(curSet)
     val carried = old.files.filter(curSet)
     def empty: DataFrame = {
-      val one = if (to.files.nonEmpty) to.files.take(1) else old.files.take(1)
-      require(one.nonEmpty, s"$root: both snapshots are empty — no schema to expose")
-      readFiles(spark, root, to, one)
-        .filter(lit(false)).withColumn(ChangeTypeCol, lit(""))
+      val schemaOf = if (to.files.nonEmpty) to else old
+      require(schemaOf.files.nonEmpty, s"$root: both snapshots are empty — no schema to expose")
+      scan(spark, root, schemaOf, Seq.empty).withColumn(ChangeTypeCol, lit(""))
     }
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn(ChangeTypeCol, lit(t))
     val ins =
       if (fresh.isEmpty) None
-      else Some(tag(applyDv(spark, root, to, readFiles(spark, root, to, fresh)), "insert"))
+      else Some(tag(applyDv(spark, root, to, scan(spark, root, to, fresh)), "insert"))
     val rem1 =
       if (removed.isEmpty) None
-      else Some(tag(applyDv(spark, root, old, readFiles(spark, root, to, removed)), "remove"))
+      else Some(tag(applyDv(spark, root, old, scan(spark, root, to, removed)), "remove"))
     // carried files newly covered by to's vector: DV-only deletes in
     // the window (same vector pointer = provably none)
     val rem2 =
@@ -2471,7 +2469,7 @@ object Manifest {
           .map(_.getString(0)).filter(carriedNames).toSet
         if (aff.isEmpty) empty
         else tag(
-          readFiles(spark, root, to, carried.filter(f => aff(dvName(f))))
+          scan(spark, root, to, carried.filter(f => aff(dvName(f))))
             .withColumn("__graft_f",
               expr("substring_index(_metadata.file_path, '/data/', -1)"))
             .withColumn("__graft_ri", expr("_metadata.row_index"))
@@ -2518,9 +2516,7 @@ object Manifest {
       val step =
         if (v == 0L) {
           // genesis: no predecessor — version 0's live rows ARE its delta
-          val s0 = snapshot(spark, root, 0L)
-          logicalize(
-            applyDv(spark, root, s0, readFiles(spark, root, s0, s0.files)), s0)
+          readSnapshot(spark, root, snapshot(spark, root, 0L))
             .withColumn(ChangeTypeCol, lit("insert"))
         } else changesWithDeltas(spark, root, v - 1, snapshot(spark, root, v))
       step.withColumn(CommitVersionCol, lit(v))
@@ -2579,9 +2575,7 @@ object Manifest {
     while (have.contains(r - 1)) r -= 1
     val snapR = snapshot(spark, root, r)
     val state =
-      if (snapR.files.nonEmpty)
-        logicalize(applyDv(spark, root, snapR,
-          readFiles(spark, root, snapR, snapR.files)), snapR)
+      if (snapR.files.nonEmpty) readSnapshot(spark, root, snapR)
       else recordedSchema(snapR) match {
         case Some(st) => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
@@ -2663,7 +2657,7 @@ object Manifest {
     else {
       import org.apache.spark.sql.Encoders
       import org.apache.spark.sql.functions.{input_file_name, substring_index}
-      val found = matching(readFiles(spark, root, snap, files)
+      val found = matching(scan(spark, root, snap, files)
           .withColumn("__f", substring_index(input_file_name(), "/", -1)))
         .select("__f").as[String](Encoders.STRING)
         .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().toSet
@@ -2777,8 +2771,7 @@ object Manifest {
     val snap = currentOrFail(spark, root)
     val keyP = toPhysical(snap, keyCol)
     // logical table columns (the expression surface)
-    val tCols = logicalize(
-      readFiles(spark, root, snap, snap.files.take(1)), snap).columns.toSeq
+    val tCols = logicalSchemaNames(spark, root, snap)
     val unknown = matchedSetSql.keys.filterNot(tCols.contains)
     require(unknown.isEmpty,
       s"mergeInto SET names unknown column(s) ${unknown.mkString(", ")} " +
@@ -2832,8 +2825,7 @@ object Manifest {
     val updated: Option[DataFrame] =
       if (touched.isEmpty) None
       else {
-        val t = logicalize(applyDv(spark, root, snap,
-          readFiles(spark, root, snap, touched)), snap).alias("t")
+        val t = readLive(spark, root, snap, touched).alias("t")
         val sSide = source.alias("s")
         val matched = col(s"s.$keyCol").isNotNull
         val joined = t.join(sSide,
@@ -2878,7 +2870,7 @@ object Manifest {
         val existing =
           if (touched.isEmpty) srcKeys.filter(lit(false))
           else applyDv(spark, root, snap,
-              readFiles(spark, root, snap, touched))
+              scan(spark, root, snap, touched))
             .select(col(keyP)).distinct()
         Some(source.select(tCols.map(c => col(s"`$c`")): _*)
           .join(existing.select(col(keyP).as(keyCol)), Seq(keyCol), "left_anti"))
@@ -2926,12 +2918,11 @@ object Manifest {
     // (or safely widen) vs the table — [[appendMerge]]'s reconcile+pad
     // applied to the upsert commit; the recorded schema evolves in the
     // SAME atomic commit, untouched files read the new columns as NULL
-    // through [[readFiles]]'s recorded-schema contract
+    // through [[scan]]'s recorded-schema contract
     val (batchP, schemaMeta) =
       if (!evolveSchema) (batchP0, Map.empty[String, String])
       else {
-        val table = recordedSchema(snap).getOrElse(
-          readFiles(spark, root, snap, snap.files.take(1)).schema)
+        val table = tableSchema(spark, root, snap)
         val merged = mergeStructs(table, batchP0.schema).getOrElse(
           throw new IllegalArgumentException(
             s"$root: upsert cannot reconcile the batch schema " +
@@ -2975,9 +2966,8 @@ object Manifest {
       case Some(d) => batchP.select(col(keyP), flit(1L).as("__b"))
         .unionByName(d.select(col(keyP), flit(0L).as("__b")))
     }
-    def tableKeyType = snap.files.headOption.flatMap(f =>
-      recordedSchema(snap).getOrElse(fileSchema(spark, root, f))
-        .find(_.name == keyP).map(_.dataType))
+    def tableKeyType = snap.files.headOption.flatMap(_ =>
+      tableSchema(spark, root, snap).find(_.name == keyP).map(_.dataType))
     val held = UpsertKeys.held(allKeys, tagged, tableKeyType)
     val range = keyedRange.map { case (lo, hi) =>
       org.apache.spark.sql.Row(lo, hi)
@@ -3009,7 +2999,7 @@ object Manifest {
       val rewritten =
         if (touched.isEmpty) batchP
         else matching(
-          applyDv(spark, root, snap, readFiles(spark, root, snap, touched)),
+          applyDv(spark, root, snap, scan(spark, root, snap, touched)),
           kept = false)
           // rewritten old rows read under the OLD recorded schema — an
           // evolving batch's added columns fill as NULL there
@@ -3069,7 +3059,7 @@ object Manifest {
         _.files.filterNot(touchedSet),
         requireVersion = Some(snap.version))._1
     val survivors = applyDv(spark, root, snap,
-        readFiles(spark, root, snap, clipped))
+        scan(spark, root, snap, clipped))
       .filter(!(col(colName) >= lit(lo) && col(colName) <= lit(hi)) ||
         col(colName).isNull)
     commitStaged(rightSized(survivors), root, Some(snap), _ => touched,
@@ -3120,7 +3110,7 @@ object Manifest {
       fullyCovered(snap, f, colName, lo, hi))
     val survivorsAndBatch =
       if (clipped.isEmpty) batchP
-      else applyDv(spark, root, snap, readFiles(spark, root, snap, clipped))
+      else applyDv(spark, root, snap, scan(spark, root, snap, clipped))
         .filter(!(col(colName) >= lit(lo) && col(colName) <= lit(hi)) ||
           col(colName).isNull)
         .unionByName(batchP)
@@ -3171,8 +3161,7 @@ object Manifest {
     val survivorsAndBatch =
       if (touched.isEmpty) batchP
       else physicalize(
-        logicalize(applyDv(spark, root, snap,
-            readFiles(spark, root, snap, touched)), snap)
+        readLive(spark, root, snap, touched)
           .filter(!pred || pred.isNull), Some(snap))
         .unionByName(batchP)
     commitStaged(rightSized(survivorsAndBatch), root, Some(snap), _ => touched,
@@ -3208,7 +3197,7 @@ object Manifest {
     val candidates = prunedFiles(snap, colName, lo, hi)
     if (candidates.isEmpty) return snap.version
     import org.apache.spark.sql.functions.expr
-    val cand = readFiles(spark, root, snap, candidates)
+    val cand = scan(spark, root, snap, candidates)
       .withColumn("__graft_f",
         expr("substring_index(_metadata.file_path, '/data/', -1)"))
       .withColumn("__graft_ri", expr("_metadata.row_index"))
@@ -3239,7 +3228,7 @@ object Manifest {
     val snap = currentOrFail(spark, root)
     if (snap.files.isEmpty) return snap.version
     import org.apache.spark.sql.functions.{coalesce, expr}
-    val cand = logicalize(readFiles(spark, root, snap, snap.files)
+    val cand = logicalize(scan(spark, root, snap, snap.files)
         .withColumn("__graft_f",
           expr("substring_index(_metadata.file_path, '/data/', -1)"))
         .withColumn("__graft_ri", expr("_metadata.row_index")), snap)
@@ -3309,7 +3298,7 @@ object Manifest {
     val small = snap.files.filter(f => snap.bytes.get(f).forall(_ < smallBytes))
     if (small.size < 2) snap.version
     else {
-      val df = applyDv(spark, root, snap, readFiles(spark, root, snap, small))
+      val df = applyDv(spark, root, snap, scan(spark, root, snap, small))
       val rangeByP = rangeBy.map(toPhysical(snap, _))
       val target = fileCount(small.flatMap(snap.bytes.get).sum.max(1L), targetBytes)
       // range path: materialize the input once (lazy) — the range
@@ -3337,7 +3326,7 @@ object Manifest {
       rangeBy: Seq[String] = Nil): Long =
    retryingCommit(s"$root compact", 4) {
     val snap = currentOrFail(spark, root)
-    val df = readSnapshotRaw(spark, root, snap)
+    val df = applyDv(spark, root, snap, scan(spark, root, snap, snap.files))
     val rangeByP = rangeBy.map(toPhysical(snap, _))
     val target = fileCount(df.queryExecution.optimizedPlan.stats.sizeInBytes, targetBytes)
     // `rangeBy` keeps the skip index SHARP through compaction: a hash
@@ -3385,7 +3374,7 @@ object Manifest {
     // ≪ cores and the plan is narrow (no DV join), so healthy layouts
     // pass through untouched
     val df = graft.operators.Rebalance.forCpuStage(
-      readSnapshotRaw(spark, root, snap))
+      applyDv(spark, root, snap, scan(spark, root, snap, snap.files)))
     val colsP = cols.map(toPhysical(snap, _))
     val target = fileCount(df.queryExecution.optimizedPlan.stats.sizeInBytes, targetBytes)
     val staged = Layout.cluster(df, Layout.mixedBoundariesFor(df, colsP, bits),
@@ -3678,7 +3667,7 @@ object Manifest {
       // selection is typically a few polluting files — narrow plans with
       // splits ≪ cores open the valve, DV'd tables (a join) keep it shut
       val df = graft.operators.Rebalance.forCpuStage(
-        applyDv(spark, root, snap, readFiles(spark, root, snap, selected)))
+        applyDv(spark, root, snap, scan(spark, root, snap, selected)))
       val staged = Layout.cluster(df, Layout.mixedBoundariesFor(df, colsP, bits),
         fileCount(selBytes, targetBytes), bits, curve).localCheckpoint()
       try {
@@ -3699,41 +3688,17 @@ object Manifest {
   def readWhere(spark: SparkSession, root: String,
       preds: Seq[(String, Any, Any)]): DataFrame = {
     require(preds.nonEmpty, "readWhere needs at least one (col, lo, hi) conjunct")
-    val snap = currentOrFail(spark, root)
-    val keep = preds.foldLeft(snap.files) { case (files, (c, lo, hi)) =>
-      val surviving = prunedFiles(snap.copy(files = files),
-        toPhysical(snap, c), lo, hi)
-      surviving
-    }
-    val base =
-      if (keep.isEmpty)
-        readSnapshot(spark, root, snap.copy(files = snap.files.take(1)))
-          .filter(lit(false))
-      else readSnapshot(spark, root, snap.copy(files = keep))
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
+    preds.foldLeft(read(spark, root)) { case (df, (c, lo, hi)) =>
       df.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
     }
   }
 
-  /** The manifest table as a PLANNER-INTEGRATED scan
-    * ([[ManifestFileIndex]] under Spark's own `HadoopFsRelation` +
-    * `ParquetFileFormat` — the public Delta architecture): ANY filter
-    * a DataFrame/SQL query pushes down prunes files through the
-    * manifest's recorded per-file stats at scan-planning time, and
-    * the read itself is stock vectorized parquet inside whole-stage
-    * codegen, with the same predicates pushed further into footers and
-    * row groups. [[read]] is the plain snapshot scan (all files);
-    * `table` is what a catalog would hand a query engine. Pinned to
-    * the current snapshot at call time. */
-  def table(spark: SparkSession, root: String): DataFrame =
-    tableSnapshot(spark, root, currentOrFail(spark, root))
-
-  /** TIME-TRAVEL twin of [[table]]: the planner-integrated scan of a
-    * PAST version — skip pruning, vectorized reads, and that version's
-    * deletion vector all included. Valid while the version is within
-    * [[gc]] retention, like every pinned-snapshot read. */
+  /** TIME TRAVEL: [[readSnapshot]] of a PAST version — skip pruning,
+    * vectorized reads, and that version's deletion vector all
+    * included. Valid while the version is within [[gc]] retention,
+    * like every pinned-snapshot read. */
   def tableAsOf(spark: SparkSession, root: String, version: Long): DataFrame =
-    tableSnapshot(spark, root, snapshot(spark, root, version))
+    readSnapshot(spark, root, snapshot(spark, root, version))
 
   /** The newest retained version whose commit time ([[CommitTimeKey]],
     * stamped at publish) is ≤ `millis` — the public TIMESTAMP AS OF
@@ -3755,27 +3720,6 @@ object Manifest {
   def tableAsOfTimestamp(spark: SparkSession, root: String,
       millis: Long): DataFrame =
     tableAsOf(spark, root, versionAsOfTimestamp(spark, root, millis))
-
-  private def tableSnapshot(spark: SparkSession, root: String,
-      snap: Snapshot): DataFrame = {
-    require(snap.files.nonEmpty,
-      s"$root version ${snap.version} is an empty snapshot — nothing to read")
-    val index = new ManifestFileIndex(spark, root, snap)
-    val schema = recordedSchema(snap).getOrElse(
-      fileSchema(spark, root, snap.files.head))
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      index, new org.apache.spark.sql.types.StructType(), schema, None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      Map.empty[String, String])(spark)
-    // outstanding deletion vector: same anti-join wrap as readSnapshot
-    // (the FileIndex prunes files underneath either way). Column
-    // mapping resolves LAST: the projection's aliases sit above the
-    // physical scan, so pushed filters rewrite through them into
-    // physical attributes — exactly what the stats prune against.
-    logicalize(
-      applyDv(spark, root, snap, spark.baseRelationToDataFrame(relation)),
-      snap)
-  }
 
   /** The table's commit history as a frame — the public DESCRIBE
     * HISTORY: one row per RETAINED version (gc trims the left edge),

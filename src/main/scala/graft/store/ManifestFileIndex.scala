@@ -17,13 +17,18 @@ import org.apache.spark.sql.types.StructType
   * in the manifest prune the file list BEFORE the scan exists. From
   * there everything is stock Spark — `ParquetFileFormat` vectorized
   * reads, whole-stage codegen, parquet footer/row-group pushdown of the
-  * same predicates — so ANY DataFrame/SQL query over
-  * [[Manifest.table]] skips files, not just the dedicated
-  * `readWhereBetween`/`readWhere` API.
+  * same predicates. Every manifest read ([[Manifest.read]],
+  * [[Manifest.readSnapshot]], the skip reads, and the file-subset reads
+  * inside the writers) is a scan over one of these, so ANY
+  * DataFrame/SQL filter over a manifest table skips files.
   *
-  * Pinned to one snapshot at construction (snapshot isolation, same as
-  * every other manifest read): `refresh()` is deliberately a no-op —
-  * re-resolve via a fresh [[Manifest.table]] call.
+  * Pinned to one snapshot's file list at construction (snapshot
+  * isolation, same as every other manifest read): `refresh()` is
+  * deliberately a no-op — re-resolve via a fresh [[Manifest.read]].
+  * Two indexes over the same data directory and file list are equal,
+  * as `InMemoryFileIndex` is over the same root paths, so two reads of
+  * one snapshot give plans that are `sameResult` (exchange reuse,
+  * cache hits).
   *
   * Pruning is conservative by construction: conjuncts of the shapes
   * `col (=|<|<=|>|>=) literal`, null-safe equality, `col IN (…)`,
@@ -43,22 +48,29 @@ final class ManifestFileIndex(
 
   private val dataDirPath = new Path(s"$root/data")
 
-  // file statuses for the pinned list: built from the manifest's
-  // recorded byte sizes when every file carries one — ZERO per-file
-  // status RPCs at scan planning, the reason the public formats record
-  // sizes in their logs (modTime 0 is fine: Spark only consumes length
-  // + path here). Pre-size-recording tables fall back to getFileStatus.
-  private val statuses: Map[String, FileStatus] =
-    if (snapshot.files.forall(snapshot.bytes.contains))
-      snapshot.files.map { rel =>
-        rel -> new FileStatus(snapshot.bytes(rel), false, 1, 128L << 20, 0L,
-          new Path(dataDirPath, rel))
-      }.toMap
-    else {
-      val fsys = dataDirPath.getFileSystem(spark.sessionState.newHadoopConf())
-      snapshot.files.map(rel =>
-        rel -> fsys.getFileStatus(new Path(dataDirPath, rel))).toMap
-    }
+  // file statuses for the pinned list, built from the manifest's
+  // recorded byte sizes — ZERO per-file status RPCs at scan planning,
+  // the reason the public formats record sizes in their logs (modTime 0
+  // is fine: Spark only consumes length + path here). A file without a
+  // recorded size (pre-size-recording tables, files of another
+  // snapshot) falls back to getFileStatus.
+  private val statuses: Map[String, FileStatus] = {
+    lazy val fsys = dataDirPath.getFileSystem(spark.sessionState.newHadoopConf())
+    snapshot.files.map { rel =>
+      val p = new Path(dataDirPath, rel)
+      rel -> snapshot.bytes.get(rel)
+        .map(n => new FileStatus(n, false, 1, 128L << 20, 0L, p))
+        .getOrElse(fsys.getFileStatus(p))
+    }.toMap
+  }
+
+  private lazy val identity = (dataDirPath, snapshot.files)
+  private lazy val hash = identity.hashCode
+  override def equals(o: Any): Boolean = o match {
+    case m: ManifestFileIndex => m.hash == hash && m.identity == identity
+    case _ => false
+  }
+  override def hashCode(): Int = hash
 
   override def rootPaths: Seq[Path] = Seq(dataDirPath)
   override def partitionSchema: StructType = new StructType()
@@ -86,7 +98,7 @@ final class ManifestFileIndex(
     * conjunct falls through to the conservative `case _ => true`.
     * DATE/TIMESTAMP literals (internal days/micros encodings) convert to
     * the same canonical java.sql text [[Manifest.cmp]] orders temporal
-    * stat bounds in — so date-slab SQL over [[Manifest.table]] prunes,
+    * stat bounds in — so date-slab SQL over [[Manifest.read]] prunes,
     * the primary data-skipping shape. */
   private object Lit {
     import org.apache.spark.sql.catalyst.util.DateTimeUtils

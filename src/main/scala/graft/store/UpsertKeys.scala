@@ -42,7 +42,7 @@ private[store] final class UpsertKeys(spark: SparkSession, keyType: DataType,
     val live = rows.iterator.map(_.get(0)).filter(_ != null).toSeq
     if (live.isEmpty) Row(null, null)
     else {
-      val ord: Ordering[Any] = (a: Any, b: Any) => UpsertKeys.order(a, b)
+      val ord: Ordering[Any] = (a: Any, b: Any) => Manifest.cmp(a, b)
       Row(live.min(ord), live.max(ord))
     }
   }
@@ -106,14 +106,6 @@ private[store] object UpsertKeys {
     case d: Double => d + 0.0
     case f: Float => f + 0.0f
     case other => other
-  }
-
-  /** `Manifest.cmp`, except that floating keys order as Spark's
-    * min/max do: NaN above everything, −0.0 equal to 0.0. */
-  def order(a: Any, b: Any): Int = (a, b) match {
-    case (x: Double, y: Double) => java.lang.Double.compare(x + 0.0, y + 0.0)
-    case (x: Float, y: Float) => java.lang.Float.compare(x + 0.0f, y + 0.0f)
-    case _ => Manifest.cmp(a, b)
   }
 }
 

@@ -18,6 +18,21 @@ class ManifestSpec extends SparkTestBase {
   private def newRoot(tag: String): String =
     TempDirs.create(s"graft_manifest_$tag").toString + "/t"
 
+  /** Data files `df` scanned: the numFiles metric of its manifest scans
+    * (a deletion vector's own parquet scan does not count). */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect() // materialize so AQE finalizes and metrics fill
+    val plan = df.queryExecution.executedPlan
+    // the helper descends into adaptive query stages
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.isInstanceOf[graft.store.ManifestFileIndex] => s
+      }
+    assert(scans.nonEmpty, s"no manifest scan in:\n$plan")
+    scans.map(_.metrics("numFiles").value).sum
+  }
+
   test("append/overwrite/read: versions are monotonic; append is prev ∪ new; overwrite replaces") {
     val root = newRoot("basic")
     val v0 = Manifest.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
@@ -136,6 +151,47 @@ class ManifestSpec extends SparkTestBase {
     // fully-out-of-range probe: every file pruned, empty result, real schema
     val none = Manifest.readWhereBetween(spark, root, "id", 1000L, 2000L)
     assert(none.count() == 0 && none.columns.toSeq == Seq("id"))
+    // the skip reads scan exactly the files prunedFiles keeps — the
+    // pruning is the scan's own, under the pushed range filter
+    assert(scannedFiles(Manifest.readWhereBetween(spark, root, "id", 120L, 150L)) == kept.size)
+    assert(scannedFiles(Manifest.readWhere(spark, root,
+      Seq(("id", 120L, 150L), ("id", 0L, 1000L)))) == kept.size)
+    assert(scannedFiles(none) == 0L)
+    assert(scannedFiles(Manifest.readWhere(spark, root, Seq(("id", 1000L, 2000L)))) == 0L)
+    // a change feed with no new files is an empty scan with the schema
+    val noChange = Manifest.changes(spark, root, snap.version, snap)
+    assert(scannedFiles(noChange) == 0L && noChange.columns.toSeq == Seq("id"))
+    // an outstanding deletion vector keeps the pruning (the range filter
+    // pushes through the anti-join) and hides the deleted rows
+    val dvRoot = newRoot("skipdv")
+    (0 until 3).foreach(i => Manifest.append(spark.range(i * 100L, i * 100L + 100)
+      .toDF("id").coalesce(1), dvRoot, statsCols = Seq("id")))
+    Manifest.deleteWhereBetweenDv(spark, dvRoot, "id", 130L, 139L)
+    val dvSnap = Manifest.current(spark, dvRoot).get
+    assert(dvSnap.meta.contains(Manifest.DvKey))
+    val dvRead = Manifest.readWhereBetween(spark, dvRoot, "id", 120L, 150L)
+    assert(scannedFiles(dvRead) == Manifest.prunedFiles(dvSnap, "id", 120L, 150L).size)
+    assert(dvRead.as[Long].collect().sorted.toSeq ==
+      ((120L to 129L) ++ (140L to 150L)))
+    // a renamed (column-mapped) column prunes through its physical stats
+    Manifest.renameColumn(spark, dvRoot, "id", "key")
+    val mapped = Manifest.current(spark, dvRoot).get
+    val mappedKept = Manifest.prunedFiles(mapped, "id", 120L, 150L).size
+    assert(mappedKept == 1)
+    assert(scannedFiles(Manifest.readWhereBetween(spark, dvRoot, "key", 120L, 150L)) == mappedKept)
+    assert(scannedFiles(Manifest.readWhere(spark, dvRoot, Seq(("key", 120L, 150L)))) == mappedKept)
+    assert(Manifest.readWhere(spark, dvRoot, Seq(("key", 120L, 150L)))
+      .as[Long].collect().sorted.toSeq == ((120L to 129L) ++ (140L to 150L)))
+    // point reads scan only the files the bloom screen passes: ids
+    // interleave across three stats-free files, so stats keep every file
+    val bRoot = newRoot("skipbloom")
+    (0 until 3).foreach(i => Manifest.append(spark.range(0L, 300L)
+      .filter(col("id") % 3 === i).toDF("id").coalesce(1), bRoot))
+    Manifest.buildBloomIndex(spark, bRoot, "id")
+    val eq = Manifest.readWhereEquals(spark, bRoot, "id", 151L)
+    assert(scannedFiles(eq) == 1L && eq.as[Long].collect().toSeq == Seq(151L))
+    val in = Manifest.readWhereIn(spark, bRoot, "id", Seq(151L, 152L))
+    assert(scannedFiles(in) == 2L && in.as[Long].collect().sorted.toSeq == Seq(151L, 152L))
     // a stats-free append is conservatively scanned (correct, unpruned)
     Manifest.append(spark.range(400, 410).toDF("id").coalesce(1), root)
     assert(Manifest.readWhereBetween(spark, root, "id", 400L, 405L)
@@ -184,26 +240,54 @@ class ManifestSpec extends SparkTestBase {
       .as[String].collect().sorted.toSeq == Seq("apple", "banana"))
   }
 
+  test("prunedFiles: NaN and ±Infinity bounds order as Spark's min/max") {
+    val root = newRoot("skipnan")
+    Manifest.append(Seq(-1.5, 0.0).toDF("d").coalesce(1), root, statsCols = Seq("d"))
+    Manifest.append(Seq(2.5, 4.0).toDF("d").coalesce(1), root, statsCols = Seq("d"))
+    val snap = Manifest.current(spark, root).get
+    val (low, high) = (snap.files.take(1), snap.files.drop(1))
+    // NaN sorts above every value
+    assert(Manifest.prunedFiles(snap, "d", 3.0, Double.NaN) == high)
+    assert(Manifest.prunedFiles(snap, "d", Double.NaN, Double.NaN).isEmpty)
+    assert(Manifest.readWhereBetween(spark, root, "d", 3.0, Double.NaN)
+      .as[Double].collect().toSeq == Seq(4.0))
+    // -Infinity below and +Infinity above every finite value
+    assert(Manifest.prunedFiles(snap, "d", Double.NegativeInfinity, -1.0) == low)
+    assert(Manifest.prunedFiles(snap, "d", 5.0, Double.PositiveInfinity).isEmpty)
+    assert(Manifest.prunedFiles(snap, "d",
+      Double.NegativeInfinity, Double.PositiveInfinity) == snap.files)
+    // -0.0 equals 0.0
+    assert(Manifest.prunedFiles(snap, "d", -0.0, -0.0) == low)
+    // JSON carries no non-finite number, so a file holding NaN or an
+    // infinity records no [min, max] for the column: every probe keeps it
+    Manifest.append(Seq(1.0, Double.NaN).toDF("d").coalesce(1), root, statsCols = Seq("d"))
+    Manifest.append(Seq(1.0, Double.PositiveInfinity).toDF("d").coalesce(1), root,
+      statsCols = Seq("d"))
+    val snap2 = Manifest.current(spark, root).get
+    val odd = snap2.files.drop(2)
+    assert(odd.forall(f => !snap2.stats.get(f).exists(_.contains("d"))), snap2.stats)
+    assert(Manifest.prunedFiles(snap2, "d", 10.0, 20.0) == odd)
+    assert(Manifest.readWhereBetween(spark, root, "d", 10.0, Double.PositiveInfinity)
+      .as[Double].collect().toSeq == Seq(Double.PositiveInfinity))
+  }
+
+  test("two reads of one snapshot are one relation: a self-join reuses the exchange") {
+    val root = newRoot("reuse")
+    Manifest.append(spark.range(0, 1000).select(col("id"), (col("id") % 10).as("g")), root)
+    assert(Manifest.read(spark, root).queryExecution.analyzed
+      .sameResult(Manifest.read(spark, root).queryExecution.analyzed))
+    def perGroup = Manifest.read(spark, root).groupBy("g").agg(sum("id").as("s"))
+    val joined = perGroup.join(perGroup.withColumnRenamed("s", "s2"), "g")
+    assert(joined.collect().length == 10)
+    val p = joined.queryExecution.executedPlan.toString
+    assert(p.contains("ReusedExchange"), s"self-join sides computed twice:\n$p")
+  }
+
   test("table: planner-integrated scan prunes files by manifest stats for any pushed filter") {
     val root = newRoot("fidx")
     Manifest.append(spark.range(0, 100).toDF("id").coalesce(1), root, statsCols = Seq("id"))
     Manifest.append(spark.range(100, 200).toDF("id").coalesce(1), root, statsCols = Seq("id"))
     Manifest.append(spark.range(200, 300).toDF("id").coalesce(1), root, statsCols = Seq("id"))
-
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect() // materialize so AQE finalizes and metrics fill
-      var plan = df.queryExecution.executedPlan
-      plan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          plan = a.executedPlan
-        case _ =>
-      }
-      val scans = plan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }
-      assert(scans.nonEmpty, s"no FileSourceScanExec in:\n$plan")
-      scans.map(_.metrics("numFiles").value).sum
-    }
 
     // every commit records byte sizes, so the FileIndex plans with
     // ZERO per-file status RPCs (the zero-RPC branch engages)
@@ -211,7 +295,7 @@ class ManifestSpec extends SparkTestBase {
     assert(snapB.files.forall(snapB.bytes.contains),
       s"byte sizes missing: ${snapB.bytes.keys} of ${snapB.files}")
 
-    val t = Manifest.table(spark, root)
+    val t = Manifest.read(spark, root)
     // a BETWEEN through the ordinary DataFrame API prunes to one file
     val mid = t.filter(col("id") >= 120L && col("id") <= 150L)
     assert(scannedFiles(mid) == 1L)
@@ -250,7 +334,7 @@ class ManifestSpec extends SparkTestBase {
         to_date(concat(lit(f"2026-$m%02d-"),
           lpad(col("n").cast("string"), 2, "0"))).as("d")).coalesce(1)
     (1 to 3).foreach(m => Manifest.append(month(m), droot, statsCols = Seq("d")))
-    val dt = Manifest.table(spark, droot)
+    val dt = Manifest.read(spark, droot)
     val feb = dt.filter(col("d") >= lit(java.sql.Date.valueOf("2026-02-01")) &&
       col("d") <= lit(java.sql.Date.valueOf("2026-02-28")))
     assert(scannedFiles(feb) == 1L)
@@ -271,7 +355,7 @@ class ManifestSpec extends SparkTestBase {
         lpad(col("n").cast("string"), 2, "0")).as("s")).coalesce(1)
     Seq("apple_", "mango_", "zebra_").foreach(tag =>
       Manifest.append(batchS(tag), sroot, statsCols = Seq("s")))
-    val st = Manifest.table(spark, sroot)
+    val st = Manifest.read(spark, sroot)
     val likeOne = st.filter(col("s").startsWith("mango"))
     assert(scannedFiles(likeOne) == 1L)
     assert(likeOne.count() == 10L)
@@ -295,7 +379,7 @@ class ManifestSpec extends SparkTestBase {
       oroot, statsCols = Seq("id"))
     Manifest.append(spark.range(0L, 10L).toDF("n")
       .select(lit(777L).as("id")).coalesce(1), oroot, statsCols = Seq("id"))
-    val ot = Manifest.table(spark, oroot)
+    val ot = Manifest.read(spark, oroot)
     val ne = ot.filter(col("id") =!= 777L)
     assert(scannedFiles(ne) == 1L)
     assert(ne.count() == 50L)
@@ -308,13 +392,13 @@ class ManifestSpec extends SparkTestBase {
       .withColumn("k", when(col("id") === 55L, lit(null))
         .otherwise(col("id")).cast("long")).coalesce(1),
       nroot, statsCols = Seq("k"))
-    val nt = Manifest.table(spark, nroot)
+    val nt = Manifest.read(spark, nroot)
     val isNullProbe = nt.filter(col("k").isNull)
     assert(scannedFiles(isNullProbe) == 1L)
     assert(isNullProbe.select("id").as[Long].collect().toSeq == Seq(55L))
     // a stats-free append is conservatively scanned wherever it could match
     Manifest.append(spark.range(400, 410).toDF("id").coalesce(1), root)
-    val t2 = Manifest.table(spark, root)
+    val t2 = Manifest.read(spark, root)
     assert(scannedFiles(t2.filter(col("id") >= 120L && col("id") <= 150L)) == 2L)
     assert(t2.filter(col("id") >= 120L && col("id") <= 150L)
       .as[Long].collect().sorted.toSeq == (120L to 150L))
@@ -337,7 +421,7 @@ class ManifestSpec extends SparkTestBase {
     // the skip read and the planner-integrated table both honor the DV
     assert(Manifest.readWhereBetween(spark, root, "id", 120L, 260L)
       .as[Long].collect().sorted.toSeq == ((120L to 149L) ++ (250L to 260L)))
-    assert(Manifest.table(spark, root).filter(col("id").between(120L, 260L))
+    assert(Manifest.read(spark, root).filter(col("id").between(120L, 260L))
       .as[Long].collect().sorted.toSeq == ((120L to 149L) ++ (250L to 260L)))
     // metadata count stays exact under a DV (footer sum minus the
     // recorded live vector count)
@@ -716,7 +800,7 @@ class ManifestSpec extends SparkTestBase {
     assert(!(100L to 110L).exists(ids), "carried-file DV entries lost")
     assert(!(4100L to 4110L).exists(ids), "rewritten rows resurrected DV'd rows")
     assert(ids.size == 4096 + 512 - 22, ids.size.toString)
-    val t = Manifest.table(spark, root).select("rid").as[Long].collect().toSet
+    val t = Manifest.read(spark, root).select("rid").as[Long].collect().toSet
     assert(t == ids, "planner scan disagrees with plain read under the DV")
   }
 
@@ -784,7 +868,7 @@ class ManifestSpec extends SparkTestBase {
       .map(_._2).sorted
     assert(got == expect, s"${got.size} vs ${expect.size}")
     // the planner scan agrees under the same filters
-    assert(Manifest.table(spark, root)
+    assert(Manifest.read(spark, root)
       .filter(col("lang") === "es" && col("k").between(100L, 4000L))
       .count() == expect.size.toLong)
   }
@@ -1202,7 +1286,7 @@ class ManifestSpec extends SparkTestBase {
     // metadata count survives (live vector count recorded)
     assert(Manifest.rowCount(after).contains(3L))
     // planner scan agrees
-    assert(Manifest.table(spark, root).count() == 3L)
+    assert(Manifest.read(spark, root).count() == 3L)
 
     // accumulates over an earlier vector; overlap dedups in the count
     Manifest.deleteWhereBetweenDv(spark, root, "k", 1L, 1L)
@@ -1921,7 +2005,7 @@ class ManifestSpec extends SparkTestBase {
     // the PLANNER scan resolves the map and still file-prunes: filters
     // on the logical name push through the alias into the physical
     // attribute the stats are keyed by
-    val viaTableDf = Manifest.table(spark, root)
+    val viaTableDf = Manifest.read(spark, root)
       .filter(col("score") >= 20L).select("k", "score")
     val viaTable = viaTableDf
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -1960,7 +2044,7 @@ class ManifestSpec extends SparkTestBase {
     Manifest.dropColumn(spark, root, "w")
     assert(Manifest.current(spark, root).get.files == filesPreDrop)
     assert(Manifest.read(spark, root).columns.toSeq == Seq("id", "score"))
-    assert(Manifest.table(spark, root).columns.toSeq == Seq("id", "score"))
+    assert(Manifest.read(spark, root).columns.toSeq == Seq("id", "score"))
 
     // plain APPEND and UPSERT after the drop: batches arrive in the
     // post-drop logical shape; the re-recorded fingerprint + reader
@@ -2382,8 +2466,8 @@ class ManifestSpec extends SparkTestBase {
       .as[(Long, String, Option[Double])].head() == ((1L, "a2", Some(11.0))))
     assert(Manifest.countRows(spark, root) == 5L)
     // the planner-integrated scan uses the recorded merged schema too
-    assert(Manifest.table(spark, root).columns.toSeq == Seq("k", "v", "w"))
-    assert(Manifest.table(spark, root).filter(col("w").isNull).count() == 1L)
+    assert(Manifest.read(spark, root).columns.toSeq == Seq("k", "v", "w"))
+    assert(Manifest.read(spark, root).filter(col("w").isNull).count() == 1L)
     // overwrite re-records schema wholesale (shrink is legal there)
     Manifest.overwrite(Seq((9L, "z")).toDF("k", "v"), root)
     assert(Manifest.read(spark, root).columns.toSeq == Seq("k", "v"))
@@ -2815,7 +2899,7 @@ class ManifestSpec extends SparkTestBase {
     assert(Manifest.read(spark, root)
       .filter(col("id") >= 10 && col("meta.b").isNull).count() == 2L)
     // ... and through the planner-integrated scan
-    val viaPlanner = Manifest.table(spark, root)
+    val viaPlanner = Manifest.read(spark, root)
       .filter(col("id") < 5).select("meta.b").collect()
     assert(viaPlanner.forall(_.isNullAt(0)),
       "planner scan must read pre-evolution nested field as NULL")

@@ -132,6 +132,22 @@ class UpsertPathsSpec extends SparkTestBase {
     assert(dup.versions == 0L)
   }
 
+  test("double keys with stats: NaN and ±Infinity keys prune as Spark orders them") {
+    val o = upsertCase("double_stats", DoubleType,
+      Seq(Seq(-1.5, 0.0), Seq(2.5, Double.NaN)),
+      Seq(-0.0 -> 7L, Double.NaN -> 8L, 3.5 -> 9L))
+    assert(o.error.isEmpty, o.error)
+    assert(live(o) == Set("[-1.5,0]", "[-0.0,7]", "[2.5,1]", "[NaN,8]", "[3.5,9]"))
+    // an infinite batch key widens the key range past every finite stat
+    val inf = upsertCase("double_inf", DoubleType,
+      Seq(Seq(-1.5, 0.0), Seq(2.5, 4.0)),
+      Seq(Double.NegativeInfinity -> 7L, 4.0 -> 8L, Double.PositiveInfinity -> 9L))
+    assert(inf.error.isEmpty, inf.error)
+    assert(inf.kept == Seq(0))
+    assert(live(inf) == Set("[-1.5,0]", "[0.0,0]", "[2.5,1]", "[4.0,8]",
+      "[-Infinity,7]", "[Infinity,9]"))
+  }
+
   test("null keys: one inserts, two throw, table nulls survive, all-null is a no-op") {
     val files = Seq(Seq[Any](1L, 2L, null), Seq[Any](10L, 11L))
     val one = upsertCase("null_one", LongType, files,
