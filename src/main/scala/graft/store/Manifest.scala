@@ -585,9 +585,10 @@ object Manifest {
               org.apache.spark.sql.types.StructType]): Boolean = size() > 256
       })
   private val SparkSchemaMetaKey = "org.apache.spark.sql.parquet.row.metadata"
-  /** Spark's inference nullable-izes the inferred schema (files can't
-    * prove absence of nulls across future appends) — mirror it exactly,
-    * recursing like StructType.asNullable (private[spark]). */
+  /** Every field (recursively) nullable, like StructType.asNullable
+    * (private[spark]): Spark's inference nullable-izes the inferred
+    * schema (files can't prove absence of nulls across future appends),
+    * and nothing in an evolved table may claim non-nullability. */
   private def deepNullable(dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
@@ -626,15 +627,18 @@ object Manifest {
     st
   }
 
-  /** The table's PHYSICAL schema at `snap`: the recorded one when a
-    * schema-recording commit has run, else the footer schema of the
-    * first of `files` (of the snapshot's own files when `files` is
-    * empty) — the answer Spark's inference job would return, without
-    * the job. */
+  /** The table's PHYSICAL schema at `snap`, deep-nullable: the
+    * recorded one when a schema-recording commit has run, else the
+    * footer schema of the first of `files` (of the snapshot's own files
+    * when `files` is empty) — the answer Spark's inference job would
+    * return, without the job. Nullable because `overwrite` records the
+    * batch schema as given (a `spark.range` id is non-nullable) while
+    * later appends may land NULLs there, and a scan that claims
+    * non-nullability lets Spark fold `isNull` away and read NULL as 0. */
   private def tableSchema(spark: SparkSession, root: String, snap: Snapshot,
       files: Seq[String] = Nil): org.apache.spark.sql.types.StructType =
-    recordedSchema(snap).getOrElse(
-      fileSchema(spark, root, files.headOption.getOrElse(snap.files.head)))
+    deepNullable(recordedSchema(snap).getOrElse(
+      fileSchema(spark, root, files.headOption.getOrElse(snap.files.head))))
 
   /** Raw parquet scan of a FILE SUBSET of `snap` through a
     * [[ManifestFileIndex]] — the single place every read reaches data
@@ -1575,8 +1579,7 @@ object Manifest {
         // ALWAYS record the reader schema: post-drop appends stage
         // files WITHOUT the column, and a heterogeneous file mix needs
         // the recorded-schema read path (exactly like appendMerge)
-        (SchemaKey -> fp2) + (SchemaJsonKey -> nullableDeep(kept)
-          .asInstanceOf[org.apache.spark.sql.types.StructType].json) +
+        (SchemaKey -> fp2) + (SchemaJsonKey -> deepNullable(kept).json) +
         (OpKey -> s"dropColumn($name)"),
       _.files, requireVersion = Some(snap.version))._1
    }
@@ -1781,7 +1784,7 @@ object Manifest {
     // recorded DEEP-NULLABLE: files predating a column addition read it
     // as NULL, so nothing in an evolved table may claim non-nullability
     // (the vectorized parquet reader enforces the recorded schema)
-    val mergedN = nullableDeep(merged).asInstanceOf[org.apache.spark.sql.types.StructType]
+    val mergedN = deepNullable(merged)
     val have = dfP.schema.fields.map(f => f.name -> f.dataType).toMap
     // present columns PADDED to the merged type — rebuilt field-by-field
     // for structs (a Cast cannot add fields), a no-op when unchanged;
@@ -1885,22 +1888,6 @@ object Manifest {
           .map(e => ArrayType(e, x.containsNull || y.containsNull))
       case _ => None
     })
-  }
-
-  /** Every field (recursively) nullable — what an evolved table's
-    * recorded schema must claim. */
-  private def nullableDeep(dt: org.apache.spark.sql.types.DataType):
-      org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = nullableDeep(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullableDeep(a.elementType), containsNull = true)
-      case m: MapType =>
-        MapType(nullableDeep(m.keyType), nullableDeep(m.valueType),
-          valueContainsNull = true)
-      case other => other
-    }
   }
 
   /** EXACTLY-ONCE append — the public Delta `txn` idea, the idempotent
@@ -2209,14 +2196,12 @@ object Manifest {
     * RECORDED TYPE (xxhash64 is type-sensitive) and evaluates the
     * might-contain per sidecar row — O(files) driver booleans, no
     * bloom bytes leave the executors. Correctness never depends on
-    * either layer: the equality predicate re-applies to every row. */
+    * either layer: the equality predicate re-applies to every row.
+    * It is [[readWhereIn]] of the one value. */
   def readWhereEquals(spark: SparkSession, root: String, colName: String,
       value: Any): DataFrame = {
     require(value != null, "readWhereEquals probes a non-null value")
-    val snap = currentOrFail(spark, root)
-    readLive(spark, root, snap,
-      bloomCandidates(spark, root, snap, toPhysical(snap, colName), Seq(value)))
-      .filter(col(colName) === lit(value))
+    readWhereIn(spark, root, colName, Seq(value))
   }
 
   /** Multi-value point lookup: `colName IN (values)` as ONE scan of
@@ -2929,8 +2914,7 @@ object Manifest {
               s"[${batchP0.schema.catalogString}] with the table schema " +
               s"[${table.catalogString}] — fields may be added or safely " +
               "widened; any other type change is an intentional rewrite"))
-        val mergedN = nullableDeep(merged)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
+        val mergedN = deepNullable(merged)
         val have = batchP0.schema.fields.map(f => f.name -> f.dataType).toMap
         val padded = batchP0.select(mergedN.fields.toSeq.map(f =>
           have.get(f.name) match {
