@@ -327,14 +327,10 @@ object Dedup {
     def apply(text: String): Seq[String] = Dedup.wordShinglesScala(text, n)
   }
 
-  private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
   /** Prime modulus 2³¹−1 for the permutation-minhash family. Small
     * enough that a·x+b stays within a signed 64-bit product (a,x < P ⇒
     * a·x < 2⁶²), so any BIGINT engine reproduces it exactly. */
-  val MinhashP: Long = 2147483647L
+  final val MinhashP = 2147483647L
 
   /** Deterministic permutation constants (a_i, b_i) for
     * h_i(x) = (a_i·x + b_i) mod P — splitmix64-style odd-multiplier
@@ -347,34 +343,72 @@ object Dedup {
       (a, b)
     }
 
-  /** k permutation-minhash values over a 60-bit shingle-hash set:
-    * min over shingles of (a_i·(x mod P) + b_i) mod P. Cost is ONE md5
-    * per shingle total (the [[shingleHash60]] pass) + k multiply-adds —
-    * ~k× fewer digests than a per-seed md5 signature (k digests per
-    * shingle), which is the difference between a CPU-bound and an
-    * I/O-bound scan at 100 TB. */
-  def minhashPermScala(h: Iterable[Long], k: Int): Array[Long] = {
+  /** `v mod P` for 0 ≤ v < 2⁶³ without a division: 2³¹ ≡ 1 (mod P),
+    * so folding the bits above 31 onto the low 31 keeps the residue.
+    * The first fold leaves < 2³³, the second < P + 4, and one
+    * conditional subtract lands in [0, P). Every product the minhash
+    * families form (a, x < P ⇒ a·x + b < 2⁶²) and every 60-bit shingle
+    * hash is in range. */
+  def modP(v: Long): Long = {
+    val f1 = (v & MinhashP) + (v >>> 31)
+    val f2 = (f1 & MinhashP) + (f1 >>> 31)
+    if (f2 >= MinhashP) f2 - MinhashP else f2
+  }
+
+  /** k permutation-minhash values over a set of non-negative (60-bit
+    * shingle) hashes: min over shingles of (a_i·(x mod P) + b_i) mod P.
+    * Cost is ONE md5 per shingle total (the [[shingleHash60]] pass) +
+    * k multiply-adds per shingle — ~k× fewer digests than a per-seed
+    * md5 signature (k digests per shingle), which is the difference
+    * between a CPU-bound and an I/O-bound scan at 100 TB. Each hash is
+    * reduced once; then per permutation (outer loop) the inner loop
+    * runs over the reduced hashes with a_i, b_i and the running min in
+    * locals, reducing by the [[modP]] fold instead of a 64-bit `%`.
+    * The fold is written out and the loop takes two hashes per trip:
+    * the client compiler (C1, which the e2ebench JVM runs) neither
+    * inlines `modP` here nor unrolls, and this form measured faster
+    * there than a `modP` call per hash (BENCH_NOTES.md). */
+  def minhashPermScala(h: Array[Long], k: Int): Array[Long] = {
     val (as, bs) = permArrays(k)
-    val mins = Array.fill(k)(Long.MaxValue)
-    h.foreach { hv =>
-      val x = hv % MinhashP
-      var j = 0
-      while (j < k) {
-        val v = (as(j) * x + bs(j)) % MinhashP
-        if (v < mins(j)) mins(j) = v
-        j += 1
+    val n = h.length
+    val xs = new Array[Long](n)
+    var i = 0
+    while (i < n) { xs(i) = modP(h(i)); i += 1 }
+    val mins = new Array[Long](k)
+    var j = 0
+    while (j < k) {
+      val a = as(j)
+      val b = bs(j)
+      var m = Long.MaxValue
+      i = 0
+      while (i < n) {
+        val v = a * xs(i) + b
+        val f = (v & MinhashP) + (v >>> 31)
+        val g = (f & MinhashP) + (f >>> 31)
+        val r = if (g >= MinhashP) g - MinhashP else g
+        if (r < m) m = r
+        if (i + 1 < n) {
+          val v1 = a * xs(i + 1) + b
+          val f1 = (v1 & MinhashP) + (v1 >>> 31)
+          val g1 = (f1 & MinhashP) + (f1 >>> 31)
+          val r1 = if (g1 >= MinhashP) g1 - MinhashP else g1
+          if (r1 < m) m = r1
+        }
+        i += 2
       }
+      mins(j) = m
+      j += 1
     }
     mins
   }
 
   // (a,b) constants as flat primitive arrays, cached per k: this runs
-  // once per ROW on the LSH banding path (MinhashBandSigs), where
-  // rebuilding + boxing the permConsts IndexedSeq per row was pure
-  // overhead on the hottest 100 TB scan
+  // once per ROW on the LSH banding paths (MinhashBandSigs, and
+  // OphBandSigs with k = 1), where rebuilding + boxing the permConsts
+  // IndexedSeq per row was pure overhead on the hottest 100 TB scan
   private val permCache =
     new java.util.concurrent.ConcurrentHashMap[Int, (Array[Long], Array[Long])]()
-  private def permArrays(k: Int): (Array[Long], Array[Long]) =
+  private[graft] def permArrays(k: Int): (Array[Long], Array[Long]) =
     permCache.computeIfAbsent(k, (kk: Int) => {
       val cs = permConsts(kk)
       (cs.map(_._1).toArray, cs.map(_._2).toArray)
@@ -755,13 +789,9 @@ object Dedup {
     * engines hash identically before the set ops, cross-engine parity
     * is exact even under (astronomically unlikely) collisions. */
   def shingleHash60(s: String): Long = {
-    val d = md5Digest.get(); d.reset()
-    val b = d.digest(s.getBytes("UTF-8"))
-    val top64 =
-      ((b(0) & 0xffL) << 56) | ((b(1) & 0xffL) << 48) | ((b(2) & 0xffL) << 40) |
-        ((b(3) & 0xffL) << 32) | ((b(4) & 0xffL) << 24) | ((b(5) & 0xffL) << 16) |
-        ((b(6) & 0xffL) << 8) | (b(7) & 0xffL)
-    top64 >>> 4
+    val w = new Array[Int](4)
+    graft.functions.Md5.digestWords(s, w)
+    graft.functions.Md5.top64(w) >>> 4
   }
 
   /** Jaccard of two sorted long arrays — the codegen linear-merge

@@ -66,10 +66,12 @@ case class CountMinSketch(
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val digest = CountMinSketch.md5Of(v.asInstanceOf[UTF8String].getBytes)
+      val u = v.asInstanceOf[UTF8String]
+      val w = new Array[Int](4)
+      Md5.digestWords(u.getBaseObject, u.getBaseOffset, u.numBytes, w)
       var i = 0
       while (i < depth) {
-        val b = ((CountMinSketch.slice32(digest, i) & 0xffffffffL) % width).toInt
+        val b = ((Md5.slice32(w, i) & 0xffffffffL) % width).toInt
         buf(i * width + b) += 1L
         i += 1
       }
@@ -106,27 +108,14 @@ case class CountMinSketch(
 
 object CountMinSketch {
 
-  private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private[functions] def md5Of(bytes: Array[Byte]): Array[Byte] = {
-    val d = md5Digest.get(); d.reset(); d.digest(bytes)
-  }
-
-  /** 32-bit slice `i` of a 16-byte digest (bytes 4i..4i+4, big-endian
-    * — the value `substr(md5_hex, 1+8*i, 8)` parses to). Raw Int;
-    * callers widen unsigned (`& 0xffffffffL`) before any mod. */
-  private[functions] def slice32(digest: Array[Byte], i: Int): Int =
-    ((digest(4 * i) & 0xff) << 24) | ((digest(4 * i + 1) & 0xff) << 16) |
-      ((digest(4 * i + 2) & 0xff) << 8) | (digest(4 * i + 3) & 0xff)
-
   /** Driver/kernel-side bucket of `item` in row `i`: the same value the
     * SQL replay computes. (slice32 can be negative as an Int; widen
     * unsigned before the mod.) */
-  def bucketOf(item: String, i: Int, width: Int): Int =
-    ((slice32(md5Of(item.getBytes("UTF-8")), i) & 0xffffffffL) % width).toInt
+  def bucketOf(item: String, i: Int, width: Int): Int = {
+    val w = new Array[Int](4)
+    Md5.digestWords(item, w)
+    ((Md5.slice32(w, i) & 0xffffffffL) % width).toInt
+  }
 
   /** Column API: the flattened d×w sketch of `item` strings. */
   def sketch(item: Column, depth: Int, width: Int): Column =

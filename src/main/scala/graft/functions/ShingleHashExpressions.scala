@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType}
@@ -28,8 +28,13 @@ import graft.dedup.Dedup
   * 32-bit SimHash. Measured before→after (sf0.1, local[32], min-of-2
   * in one JVM): q29 3.29→2.82s, q79 3.16→2.67s, q64 2.66→2.59s,
   * q27 2.29→2.23s — the removed serde + fence is worth ~10-15% on the
-  * simhash/CC paths; the remaining per-row cost is the md5 digest
-  * itself (shared by any engine computing the same portable hash).
+  * simhash/CC paths. Every digest goes through the single-block
+  * [[Md5]] kernel (no JCA call, no digest array; ASCII char shingles
+  * are hashed in place from the UTF8String bytes), and the banding
+  * kernels run over primitive arrays with a division-free mod
+  * ([[Dedup.modP]]): on the `neardup` benchmark the shingle-hash +
+  * banding stage dropped from 3.7-4.8 s to 1.8-1.9 s of executor CPU
+  * per round (4 cores, C1; BENCH_NOTES.md).
   */
 case class ShingleHashSet(child: Expression, word: Boolean, n: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
@@ -72,43 +77,71 @@ object ShingleHashSet {
     * followed by hash+distinct+sort, except the distinct runs on the
     * 60-bit hashes directly (the UDF deduped strings AND then hashes;
     * distinct-of-hashes is the same final set either way) — no
-    * intermediate distinct string set is materialized. */
+    * intermediate distinct string set is materialized.
+    *
+    * Char shingles of an all-ASCII text are its byte windows (one
+    * UTF-16 char per byte), so they are digested in place from the
+    * UTF8String's bytes by [[Md5]]: no `toString`, no `substring`, no
+    * UTF-8 encode per shingle. Any other text takes the `String` path,
+    * whose char windows may split a surrogate pair (encoded as `?`). */
   def evalUtf8(s: UTF8String, word: Boolean, n: Int): ArrayData = {
-    val t = s.toString
     val raw: Array[Long] =
-      if (word) {
-        val toks = ws.split(t.trim)
-        if (toks.length >= n) {
-          val m = toks.length - n + 1
-          val out = new Array[Long](m)
-          val sb = new java.lang.StringBuilder
-          var i = 0
-          while (i < m) {
-            sb.setLength(0)
-            var j = 0
-            while (j < n) {
-              if (j > 0) sb.append(' ')
-              sb.append(toks(i + j))
-              j += 1
-            }
-            out(i) = Dedup.shingleHash60(sb.toString)
-            i += 1
-          }
-          out
-        } else Array(Dedup.shingleHash60(toks.mkString(" ")))
-      } else {
-        if (t.length >= n) {
-          val m = t.length - n + 1
-          val out = new Array[Long](m)
-          var i = 0
-          while (i < m) {
-            out(i) = Dedup.shingleHash60(t.substring(i, i + n))
-            i += 1
-          }
-          out
-        } else Array(Dedup.shingleHash60(t))
+      if (word) wordHashes(s.toString, n)
+      else if (s.isFullAscii) asciiCharHashes(s, n)
+      else charHashes(s.toString, n)
+    UnsafeArrayData.fromPrimitiveArray(distinctSorted(raw))
+  }
+
+  private def asciiCharHashes(s: UTF8String, n: Int): Array[Long] = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val len = s.numBytes
+    val w = new Array[Int](4)
+    if (len >= n) {
+      val out = new Array[Long](len - n + 1)
+      var i = 0
+      while (i < out.length) {
+        Md5.digestWords(base, off + i, n, w)
+        out(i) = Md5.top64(w) >>> 4
+        i += 1
       }
-    new GenericArrayData(distinctSorted(raw))
+      out
+    } else {
+      Md5.digestWords(base, off, len, w)
+      Array(Md5.top64(w) >>> 4)
+    }
+  }
+
+  private def charHashes(t: String, n: Int): Array[Long] =
+    if (t.length >= n) {
+      val out = new Array[Long](t.length - n + 1)
+      var i = 0
+      while (i < out.length) {
+        out(i) = Dedup.shingleHash60(t.substring(i, i + n))
+        i += 1
+      }
+      out
+    } else Array(Dedup.shingleHash60(t))
+
+  private def wordHashes(t: String, n: Int): Array[Long] = {
+    val toks = ws.split(t.trim)
+    if (toks.length >= n) {
+      val out = new Array[Long](toks.length - n + 1)
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i < out.length) {
+        sb.setLength(0)
+        var j = 0
+        while (j < n) {
+          if (j > 0) sb.append(' ')
+          sb.append(toks(i + j))
+          j += 1
+        }
+        out(i) = Dedup.shingleHash60(sb.toString)
+        i += 1
+      }
+      out
+    } else Array(Dedup.shingleHash60(toks.mkString(" ")))
   }
 
   /** Column API — the [[Dedup.hashedDocs]] kernel. */
@@ -323,11 +356,12 @@ object JaccardHashSets {
 
 /** Per-band signature strings from a 60-bit shingle-hash set via the
   * permutation-minhash family ([[Dedup.minhashPermScala]]: ONE md5 per
-  * shingle upstream + k linear maps here) — the banding kernel of the
-  * LSH path, one eval per document. Replaces `bandSigsFromHashesUdf`
-  * with the same fence-free rationale as the rest of this file; the
-  * opaque output also keeps the Spark 4.1.2 nested-lambda hazard
-  * structurally impossible. */
+  * shingle upstream + k linear maps here, each a multiply-add and a
+  * division-free Mersenne reduction over the unboxed hash array) — the
+  * banding kernel of the LSH path, one eval per document. Replaces
+  * `bandSigsFromHashesUdf` with the same fence-free rationale as the
+  * rest of this file; the opaque output also keeps the Spark 4.1.2
+  * nested-lambda hazard structurally impossible. */
 case class MinhashBandSigs(child: Expression, bands: Int, rowsPerBand: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
 
@@ -348,16 +382,13 @@ case class MinhashBandSigs(child: Expression, bands: Int, rowsPerBand: Int)
 
 object MinhashBandSigs {
 
-  /** Static kernel: k = bands·rowsPerBand permutation minhashes, then
-    * one "m_i|m_j|..." string per band — identical to the UDF it
-    * replaces (and to the SQL the oracles inline via
-    * [[Dedup.permConsts]]). */
+  /** Static kernel: the hash array is copied out once (a bulk copy
+    * from unsafe array data), k = bands·rowsPerBand permutation
+    * minhashes run over it, then one "m_i|m_j|..." string per band —
+    * identical to the UDF it replaces (and to the SQL the oracles
+    * inline via [[Dedup.permConsts]]). */
   def evalArray(h: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
-    val n = h.numElements()
-    val hs = new Array[Long](n)
-    var i = 0
-    while (i < n) { hs(i) = h.getLong(i); i += 1 }
-    val mins = Dedup.minhashPermScala(hs, bands * rowsPerBand)
+    val mins = Dedup.minhashPermScala(h.toLongArray(), bands * rowsPerBand)
     val out = new Array[Any](bands)
     val sb = new java.lang.StringBuilder
     var b = 0
@@ -382,10 +413,6 @@ object MinhashBandSigs {
 object SimHash32 {
 
   private val ws = java.util.regex.Pattern.compile("\\s+")
-  private val md5Tl = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** Static kernel shared by interpreted eval and generated code.
     * Votes are summed over the DISTINCT non-empty tokens (a HashSet
@@ -394,7 +421,7 @@ object SimHash32 {
   def evalUtf8(s: UTF8String): Long = {
     val toks = ws.split(s.toString.trim.toLowerCase)
     val seen = new java.util.HashSet[String]()
-    val md = md5Tl.get()
+    val w = new Array[Int](4)
     val counts = new Array[Int](32)
     var total = 0
     var i = 0
@@ -402,11 +429,9 @@ object SimHash32 {
       val t = toks(i)
       if (t.nonEmpty && seen.add(t)) {
         total += 1
-        md.reset()
-        val d = md.digest(t.getBytes("UTF-8"))
+        Md5.digestWords(t, w)
         // first 4 bytes == first 8 hex chars, big-endian unsigned
-        val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+        val h = Md5.slice32(w, 0) & 0xffffffffL
         var b = 0
         while (b < 32) { counts(b) += ((h >>> b) & 1L).toInt; b += 1 }
       }
@@ -465,16 +490,12 @@ case class SimHash64(child: Expression)
 object SimHash64 {
 
   private val ws = java.util.regex.Pattern.compile("\\s+")
-  private val md5Tl = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 
   /** Static kernel shared by interpreted eval and generated code. */
   def evalUtf8(s: UTF8String): Long = {
     val toks = ws.split(s.toString.trim.toLowerCase)
     val seen = new java.util.HashSet[String]()
-    val md = md5Tl.get()
+    val w = new Array[Int](4)
     val counts = new Array[Int](64)
     var total = 0
     var i = 0
@@ -482,12 +503,9 @@ object SimHash64 {
       val t = toks(i)
       if (t.nonEmpty && seen.add(t)) {
         total += 1
-        md.reset()
-        val d = md.digest(t.getBytes("UTF-8"))
+        Md5.digestWords(t, w)
         // first 8 bytes == first 16 hex chars, big-endian unsigned
-        var h = 0L
-        var k = 0
-        while (k < 8) { h = (h << 8) | (d(k) & 0xffL); k += 1 }
+        val h = Md5.top64(w)
         var b = 0
         while (b < 64) { counts(b) += ((h >>> b) & 1L).toInt; b += 1 }
       }
@@ -563,16 +581,21 @@ object OphBandSigs {
 
   /** Densified OPH slot values: one permutation, k bins by value
     * range, min per bin, empty bins borrow from the nearest occupied
-    * bin rightward (circular) at offset t as borrowed + t·P. Exposed
-    * for specs and the SQL oracle mirror. */
+    * bin rightward (circular) at offset t as borrowed + t·P. The
+    * permutation is the cached `permArrays(1)` and the mod is
+    * [[graft.dedup.Dedup.modP]], so inputs are non-negative hashes as
+    * in [[graft.dedup.Dedup.minhashPermScala]]. Exposed for specs and
+    * the SQL oracle mirror. */
   def ophMins(h: Array[Long], k: Int): Array[Long] = {
-    import graft.dedup.Dedup.MinhashP
-    val (a, b) = graft.dedup.Dedup.permConsts(1).head
+    import graft.dedup.Dedup.{MinhashP, modP}
+    val (as, bs) = graft.dedup.Dedup.permArrays(1)
+    val a = as(0)
+    val b = bs(0)
     val mins = Array.fill(k)(Long.MaxValue)
     var i = 0
     var occupied = 0
     while (i < h.length) {
-      val v = (a * (h(i) % MinhashP) + b) % MinhashP
+      val v = modP(a * modP(h(i)) + b)
       val j = ((v * k) / MinhashP).toInt
       if (mins(j) == Long.MaxValue) occupied += 1
       if (v < mins(j)) mins(j) = v
@@ -600,11 +623,7 @@ object OphBandSigs {
     * ([[graft.dedup.Dedup.candidatePairsFromBanded]], the stored
     * corpus index, the streaming screen) is reused unchanged. */
   def evalArray(h: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
-    val n = h.numElements()
-    val hs = new Array[Long](n)
-    var i = 0
-    while (i < n) { hs(i) = h.getLong(i); i += 1 }
-    val mins = ophMins(hs, bands * rowsPerBand)
+    val mins = ophMins(h.toLongArray(), bands * rowsPerBand)
     val out = new Array[Any](bands)
     val sb = new java.lang.StringBuilder
     var b = 0

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 
 import graft.dedup.Dedup
-import graft.functions.{ShingleHashSet, SimHash32, SimHash64}
+import graft.functions.{Md5, ShingleHashSet, SimHash32, SimHash64}
 
 /** Native codegen shingle-hash-set and simhash32: bit-for-bit parity
   * with the plain-Scala reference kernels the former UDFs wrapped,
@@ -14,10 +14,15 @@ import graft.functions.{ShingleHashSet, SimHash32, SimHash64}
 class ShingleHashExpressionsSpec extends SparkTestBase {
   import spark.implicits._
 
-  /** The pre-expression reference semantics, straight from the Dedup
-    * building blocks the DuckDB oracles mirror. */
-  private def refShingleSet(t: String, mode: Dedup.ShingleMode): Seq[Long] =
-    mode(t).map(Dedup.shingleHash60).distinct.sorted
+  /** The pre-expression reference semantics: the Dedup shingle
+    * builders the DuckDB oracles mirror, each shingle hashed by the JCA
+    * md5 (top 60 bits of the digest), independent of the [[Md5]]
+    * kernel under test. */
+  private def refShingleSet(t: String, mode: Dedup.ShingleMode): Seq[Long] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    mode(t).map(sh => java.nio.ByteBuffer.wrap(md.digest(sh.getBytes("UTF-8"))).getLong >>> 4)
+      .distinct.sorted
+  }
 
   private def refSimhash32(text: String): Long = {
     val toks = text.trim.toLowerCase.split("\\s+").distinct.filter(_.nonEmpty)
@@ -34,11 +39,51 @@ class ShingleHashExpressionsSpec extends SparkTestBase {
       if (counts(b) * 2 > toks.length) acc | (1L << b) else acc)
   }
 
+  // 2-, 3- and 4-byte UTF-8 characters (the 4-byte one is a UTF-16
+  // surrogate pair, which char windows can split) and a lone surrogate
+  // put texts on the String fallback of the shingle kernel; the long
+  // word runs past the single-block md5 limit
   private val textGen: Gen[String] = Gen.oneOf(
     Gen.alphaNumStr,
     Gen.listOf(Gen.oneOf(Gen.alphaNumStr, Gen.const(" "), Gen.const("\t"),
-      Gen.const("é"), Gen.const("The"))).map(_.mkString),
+      Gen.const("é"), Gen.const("€"), Gen.const("\uD834\uDD1E"), Gen.const("\uD800"),
+      Gen.const("The"), Gen.const("x" * 60))).map(_.mkString),
     Gen.const(""), Gen.const("   "), Gen.const("a"), Gen.const("ab"))
+
+  test("md5 kernel ≡ MessageDigest for every length 0-64 (property)") {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def bytesOf(w: Array[Int]): Seq[Byte] =
+      w.toSeq.flatMap(x => (0 until 4).map(i => (x >>> (8 * i)).toByte))
+    val bytesGen = for {
+      len <- Gen.choose(0, 64)
+      bs <- Gen.listOfN(len, Gen.choose(Byte.MinValue, Byte.MaxValue))
+    } yield bs.toArray
+    val w = new Array[Int](4)
+    ScalaCheckSupport.checkProp(Prop.forAll(bytesGen, Gen.choose(0, 7)) {
+      (bs: Array[Byte], pad: Int) =>
+        val want = md.digest(bs).toSeq
+        Md5.digestWords(bs, w)
+        val whole = bytesOf(w)
+        // the same bytes read in place at an offset inside a larger array
+        val framed = Array.fill[Byte](pad)(0x5a) ++ bs ++ Array.fill[Byte](pad)(-1)
+        Md5.digestWords(framed, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + pad,
+          bs.length, w)
+        whole == want && bytesOf(w) == want &&
+          Md5.top64(w) == java.nio.ByteBuffer.wrap(want.toArray).getLong
+    }, minSuccessful = 2000)
+    // every length once, with a fixed seed, including 55/56 (one block / two)
+    val rnd = new scala.util.Random(55)
+    (0 to 64).foreach { len =>
+      val bs = Array.fill[Byte](len)(rnd.nextInt(256).toByte)
+      Md5.digestWords(bs, w)
+      assert(bytesOf(w) == md.digest(bs).toSeq, s"length $len")
+    }
+    // strings: UTF-8, a lone surrogate encoded as '?'
+    Seq("", "a", "€𝄞é", "\uD800", "x\uDC00y", "y" * 56).foreach { t =>
+      Md5.digestWords(t, w)
+      assert(bytesOf(w) == md.digest(t.getBytes("UTF-8")).toSeq, t)
+    }
+  }
 
   test("shingle_hash_set ≡ reference kernel (char + word, property)") {
     ScalaCheckSupport.checkProp(Prop.forAll(textGen, Gen.choose(1, 6)) { (t: String, n: Int) =>
@@ -130,10 +175,18 @@ class ShingleHashExpressionsSpec extends SparkTestBase {
   }
 
   test("minhash_band_sigs ≡ permutation-minhash reference (property)") {
-    val hGen = Gen.nonEmptyListOf(Gen.chooseNum(0L, Long.MaxValue >>> 4))
+    val p = Dedup.MinhashP
+    // independent reference: the %-based definition the SQL oracles inline
+    def ref(hs: Seq[Long], k: Int): Seq[Long] = Dedup.permConsts(k).map { case (a, b) =>
+      hs.map(x => (a * (x % p) + b) % p).min
+    }
+    // hashes at and around multiples of P, and the largest 60-bit hash
+    val edges = Seq(0L, p - 1, p, p + 1, 2 * p, (1L << 60) - 1)
+    val hGen = Gen.nonEmptyListOf(Gen.frequency(
+      4 -> Gen.chooseNum(0L, Long.MaxValue >>> 4), 1 -> Gen.oneOf(edges)))
     ScalaCheckSupport.checkProp(Prop.forAll(hGen, Gen.choose(1, 6), Gen.choose(1, 4)) {
       (hs, bands, rpb) =>
-        val mins = Dedup.minhashPermScala(hs, bands * rpb)
+        val mins = ref(hs, bands * rpb)
         val expected = (0 until bands).map(b =>
           (0 until rpb).map(r => mins(b * rpb + r)).mkString("|"))
         val got = graft.functions.MinhashBandSigs.evalArray(
@@ -169,6 +222,11 @@ class ShingleHashExpressionsSpec extends SparkTestBase {
           new org.apache.spark.sql.catalyst.util.GenericArrayData(hs.toArray), bands, rpb)
         (0 until bands).forall(i => got.getUTF8String(i).toString == expected(i))
     })
+    val edges = Array(0L, p - 1, p, p + 1, 2 * p, (1L << 60) - 1)
+    assert(OphBandSigs.ophMins(edges, 8).toSeq == ref(edges.toSeq, 8))
+    ScalaCheckSupport.checkProp(Prop.forAll(Gen.chooseNum(0L, Long.MaxValue)) { v =>
+      Dedup.modP(v) == v % p
+    }, minSuccessful = 2000)
     // identical sets -> identical signatures (the LSH premise)
     val s1 = OphBandSigs.ophMins(Array(7L, 99L, 123456789L), 8)
     val s2 = OphBandSigs.ophMins(Array(7L, 99L, 123456789L), 8)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Split a Spark event log into the driver-side layers of each job group.
 
-    python3 tools/eventlog_split.py <event log file or rolling-log dir> [--json]
+    python3 tools/eventlog_split.py <event log file or rolling-log dir> [--json] [--stages]
 
 The log may be plain JSON lines or zstd-compressed (`.zstd`/`.zst`, read
 through the `zstd` command). A rolling log directory (`eventlog_v2_*`) is
@@ -14,6 +14,14 @@ read in its file order. For every job group (jobs without one fall under
 - the wall of each job, submission to completion;
 - the driver gaps: time between one job's end and the next job's start
   in the group, when no job of the group is running.
+
+With `--stages` it also prints, under each group, one row per stage
+attempt that ran in it, in submission order: the stage's tasks, its wall
+(submission to completion), the executor run time and executor CPU time
+summed over its tasks, its longest task (launch to finish) and the
+shuffle bytes its tasks wrote. A stage whose wall is far below its summed
+run time ran its tasks in parallel; of two stages with the same wall, the
+one with little CPU was waiting.
 
 Spark writes such a log when the JVM gets
 `-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<existing dir>`
@@ -56,8 +64,8 @@ def lines(path):
 
 
 def read(path):
-    """Jobs and SQL executions of the log, keyed by id."""
-    jobs, execs = {}, {}
+    """Jobs, SQL executions and stage attempts of the log, keyed by id."""
+    jobs, execs, stages = {}, {}, {}
     for line in lines(path):
         try:
             e = json.loads(line)
@@ -81,11 +89,36 @@ def read(path):
         elif kind == SQL_END:
             if e["executionId"] in execs:
                 execs[e["executionId"]]["end"] = e["time"]
-    return jobs, execs
+        elif kind == "SparkListenerStageSubmitted":
+            info, props = e["Stage Info"], e.get("Properties") or {}
+            stages[(info["Stage ID"], info["Stage Attempt ID"])] = {
+                "id": info["Stage ID"], "name": info.get("Stage Name") or "",
+                "group": props.get("spark.jobGroup.id") or NONE,
+                "start": info.get("Submission Time"), "end": None, "tasks": 0,
+                "run_ms": 0, "cpu_ms": 0.0, "max_task_ms": 0, "shuffle_write_bytes": 0}
+        elif kind == "SparkListenerStageCompleted":
+            info = e["Stage Info"]
+            st = stages.get((info["Stage ID"], info["Stage Attempt ID"]))
+            if st is not None:
+                st["end"] = info.get("Completion Time")
+        elif kind == "SparkListenerTaskEnd":
+            st = stages.get((e["Stage ID"], e["Stage Attempt ID"]))
+            if st is None:
+                continue
+            info, m = e.get("Task Info") or {}, e.get("Task Metrics") or {}
+            st["tasks"] += 1
+            st["run_ms"] += m.get("Executor Run Time", 0)
+            st["cpu_ms"] += m.get("Executor CPU Time", 0) / 1e6
+            if info.get("Finish Time") and info.get("Launch Time"):
+                st["max_task_ms"] = max(st["max_task_ms"], info["Finish Time"] - info["Launch Time"])
+            sw = m.get("Shuffle Write Metrics") or {}
+            st["shuffle_write_bytes"] += sw.get("Shuffle Bytes Written", 0)
+    return jobs, execs, stages
 
 
-def split(jobs, execs):
-    """Per job group: executions, jobs, planning, job walls, driver gaps."""
+def split(jobs, execs, stages=None):
+    """Per job group: executions, jobs, planning, job walls, driver gaps;
+    with `stages`, also each stage attempt that ran in the group."""
     # an execution without a recorded group takes its first job's group
     for j in sorted(jobs.values(), key=lambda j: j["start"]):
         x = execs.get(j["exec"])
@@ -118,6 +151,14 @@ def split(jobs, execs):
                      "executions": g["executions"], "jobs": len(js),
                      "planning_ms": g["planning_ms"], "job_wall_ms": walls,
                      "driver_gap_ms": gaps}
+    for st in sorted((stages or {}).values(), key=lambda st: (st["start"] or 0, st["id"])):
+        if st["group"] not in out:
+            continue  # every stage runs for a job, so this is a torn log
+        row = {k: st[k] for k in ("id", "name", "tasks", "run_ms", "max_task_ms",
+                                  "shuffle_write_bytes")}
+        row["cpu_ms"] = round(st["cpu_ms"])
+        row["wall_ms"] = st["end"] - st["start"] if st["end"] and st["start"] else None
+        out[st["group"]].setdefault("stages", []).append(row)
     return out
 
 
@@ -125,8 +166,12 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("log", help="event log file, or a rolling event log directory")
     ap.add_argument("--json", action="store_true", help="print one JSON object")
+    ap.add_argument("--stages", action="store_true",
+                    help="add one row per stage: tasks, wall, run and CPU time, "
+                         "longest task, shuffle bytes written")
     args = ap.parse_args()
-    result = split(*read(args.log))
+    jobs, execs, stages = read(args.log)
+    result = split(jobs, execs, stages if args.stages else None)
     if args.json:
         print(json.dumps(result, sort_keys=True))
         return
@@ -139,6 +184,12 @@ def main():
               f"planning {r['planning_ms']} ms, "
               f"job walls {sum(r['job_wall_ms'])} ms {r['job_wall_ms']}, "
               f"driver gaps {sum(r['driver_gap_ms'])} ms {r['driver_gap_ms']}")
+        for st in r.get("stages", []):
+            wall = "?" if st["wall_ms"] is None else st["wall_ms"]
+            print(f"  stage {st['id']} ({st['name']}): {st['tasks']} tasks, wall {wall} ms, "
+                  f"run {st['run_ms']} ms, cpu {st['cpu_ms']} ms, "
+                  f"max task {st['max_task_ms']} ms, "
+                  f"shuffle write {st['shuffle_write_bytes']} B")
 
 
 if __name__ == "__main__":
