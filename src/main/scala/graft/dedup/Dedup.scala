@@ -512,11 +512,20 @@ object Dedup {
         .as(Seq("band", "bandsig")))
 
   /** Distinct (id_a < id_b) pairs sharing any (band, bandsig) bucket.
-    * Merge-hinted: a broadcast self-join would compute the banding UDF
-    * on BOTH sides (stream + build); forcing sort-merge gives the two
-    * sides identical hash-partition exchanges, which ReuseExchange
-    * collapses into one — the signatures are computed once. SMJ is also
-    * what a 100 TB run would pick (neither side broadcastable).
+    * The self-join is hinted, never left to the planner: a broadcast
+    * self-join would compute the banding expression on BOTH sides
+    * (stream + build), while a shuffle join gives the two sides
+    * identical hash-partition exchanges on (band, bandsig), which
+    * ReuseExchange collapses into one — the signatures are computed
+    * once. Which shuffle join is [[selfJoinHint]]'s size check on
+    * `banded`: a shuffled hash join while the banded rows fit a
+    * per-partition hash map (a 10k-doc round: the join's CPU drops
+    * ~4× against sorting ~80k band rows, BENCH_NOTES.md), else
+    * sort-merge. A shuffled hash join does not spill its build side,
+    * but per task that side is the partition's share of the banded
+    * rows, the same rows a sort-merge join buffers; a skewed bucket's
+    * risk is its quadratic OUTPUT, which `maxBucketSize` bounds under
+    * either join.
     *
     * `maxBucketSize` is the quadratic-blowup safety valve for huge
     * corpora: pairs per bucket grow as n², so ONE degenerate bucket
@@ -546,12 +555,27 @@ object Dedup {
           .select("band", "bandsig")
         banded.join(ok, Seq("band", "bandsig"))
       }
-    val a = base.as("a").hint("merge")
+    // sized on `banded`: the cap only drops rows, while the size-only
+    // estimate of its join multiplies the two inputs' sizes
+    val a = base.as("a").hint(selfJoinHint(banded))
     val b = base.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.bandsig") === col("b.bandsig")
         && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
+  }
+
+  /** Join hint for a self-join of `side` on its bucket key: Spark's own
+    * test for a per-partition hash map (`canBuildLocalHashMapBySize` in
+    * `JoinSelectionHelper`, private there) — plan-stats size below
+    * `spark.sql.autoBroadcastJoinThreshold` × `spark.sql.shuffle.partitions`
+    * picks "shuffle_hash"; a threshold ≤ 0, an unknown size (the
+    * `defaultSizeInBytes` sentinel) or a larger side picks "merge". */
+  private def selfJoinHint(side: DataFrame): String = {
+    val conf = side.sparkSession.sessionState.conf
+    val size = side.queryExecution.optimizedPlan.stats.sizeInBytes
+    val budget = BigInt(conf.autoBroadcastJoinThreshold) * conf.numShufflePartitions
+    if (size < BigInt(conf.defaultSizeInBytes) && size < budget) "shuffle_hash" else "merge"
   }
 
   /** Bipartite LSH candidates: a NEW batch's banded signatures joined
@@ -802,10 +826,9 @@ object Dedup {
 
   /** Exact Jaccard for a pair DataFrame (id_a, id_b) over an
     * already-hashed docs table (id, h) — see [[hashedDocs]].
-    * Merge-hinted like candidatePairsFromBanded: the two hash joins key
-    * on the same child exchange (hashpartitioning of the id), so
-    * forcing SMJ lets ReuseExchange build the hashed side once, not
-    * twice. */
+    * Merge-hinted: the two joins key on the same child exchange
+    * (hashpartitioning of the id), so forcing SMJ lets ReuseExchange
+    * build the hashed side once, not twice. */
   def jaccardOnHashed(pairs: DataFrame, hashed: DataFrame): DataFrame =
     pairs
       .join(hashed.select(col("id").as("id_a"), col("h").as("sh_a")).hint("merge"), "id_a")

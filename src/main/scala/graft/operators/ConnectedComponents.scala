@@ -17,14 +17,17 @@ import org.apache.spark.sql.functions._
   * Small-side escape hatch: after Jaccard verification the edge list
   * is normally ≪ the corpus (near-dup rate is a few percent), while
   * the distributed fixpoint costs 4-6 shuffle rounds of fixed
-  * overhead. When the deduplicated edge list fits comfortably on the
-  * driver (explicit bound, default 1M directed edges ≈ 50 MB of
-  * collected tuples — sized for a modest driver heap, not this box)
-  * and ids are LongType, a driver union-find computes the identical
-  * labels in microseconds — the same adaptive small-side move as a
-  * broadcast join, with the distributed loop as the unconditional
-  * fallback. The edge count is free: the edges are localCheckpointed
-  * for the loop anyway, so `count()` reads materialized blocks.
+  * overhead. When the pair list fits comfortably on the driver
+  * (explicit bound, default 1M directed edges ≈ 50 MB of collected
+  * tuples — sized for a modest driver heap, not this box) and ids are
+  * LongType, a driver union-find computes the identical labels in
+  * microseconds — the same adaptive small-side move as a broadcast
+  * join, with the distributed loop as the unconditional fallback.
+  * The pairs are lazily localCheckpointed as given, undirected and
+  * with any repeats: `count()` is the job that fills the checkpoint,
+  * and the driver path collects from it. Union-find is indifferent to
+  * edge direction and repeats, so only the distributed loop builds
+  * the symmetric, distinct edge list (a shuffle) from the checkpoint.
   *
   * Null ids are dropped from the edge list up front (garbage-in for a
   * dedup-pairs operator), which also keeps the two paths
@@ -37,26 +40,31 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** @param pairs DataFrame with columns (id_a, id_b), undirected edges
-    * @param driverThreshold max deduplicated directed-edge count for
-    *        the driver union-find path (0 forces the distributed loop)
+    * @param driverThreshold the driver union-find path runs while
+    *        2 × the non-null pair rows (counting self-loops and repeats)
+    *        is below it — an upper bound on the deduplicated directed
+    *        edges; 0 forces the distributed loop
     * @return (id, component): every vertex appearing in `pairs`, with
     *         component = min id of its connected component */
   def components(
       pairs: DataFrame, maxRounds: Int = 25,
       driverThreshold: Long = 1000000L): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    val undirected = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint()
+      .localCheckpoint(false)
 
     // LongType only, so the driver path's output schema matches the
     // distributed path's exactly; strict < honors "0 forces the
-    // distributed loop" even for an empty edge list
-    val longIds = edges.schema.fields.forall(
+    // distributed loop" even for an empty pair list
+    val longIds = undirected.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && edges.count() < driverThreshold)
-      return driverUnionFind(edges)
+    if (longIds && 2 * undirected.count() < driverThreshold)
+      return driverUnionFind(undirected)
+
+    val edges = undirected
+      .union(undirected.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .localCheckpoint()
 
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
@@ -90,9 +98,10 @@ object ConnectedComponents {
     labels
   }
 
-  /** Path-compressing union-find over a collected (src, dst) edge list
-    * with min-id representatives — byte-identical labels to the
-    * distributed fixpoint, used below [[components]]'s driverThreshold. */
+  /** Path-compressing union-find over a collected (src, dst) edge list,
+    * in either direction and with repeats, with min-id representatives —
+    * byte-identical labels to the distributed fixpoint, used below
+    * [[components]]'s driverThreshold. */
   private def driverUnionFind(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._

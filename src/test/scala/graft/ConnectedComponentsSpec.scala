@@ -52,17 +52,29 @@ class ConnectedComponentsSpec extends SparkTestBase {
   }
 
   test("driver and distributed paths match union-find on arbitrary graphs (property)") {
-    val pairGen = Gen.listOfN(30, for {
-      a <- Gen.chooseNum(0L, 20L); b <- Gen.chooseNum(0L, 20L) if a != b
-    } yield (math.min(a, b), math.max(a, b)))
+    // pairs in either orientation with self-loops, then some pairs again
+    // reversed and some repeated as given
+    val pairGen = for {
+      ps <- Gen.listOfN(30, Gen.zip(Gen.chooseNum(0L, 20L), Gen.chooseNum(0L, 20L)))
+      flipped <- Gen.someOf(ps)
+      repeated <- Gen.someOf(ps)
+    } yield ps ++ flipped.map(_.swap) ++ repeated
+    // the driver path's labels are a local relation
+    def viaDriver(labels: org.apache.spark.sql.DataFrame) = labels.queryExecution.analyzed
+      .collectLeaves().forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     ScalaCheckSupport.checkProp(Prop.forAll(pairGen) { ps =>
       ps.isEmpty || {
         val df = ps.toDF("id_a", "id_b")
-        val driver = ConnectedComponents.components(df)
-          .as[(Long, Long)].collect().toMap
-        val distributed = ConnectedComponents.components(df, driverThreshold = 0L)
-          .as[(Long, Long)].collect().toMap
-        driver == reference(ps) && distributed == driver
+        val want = reference(ps)
+        // the driver path runs while 2 × the pair rows is below the threshold
+        val atBound = ConnectedComponents.components(df, driverThreshold = 2L * ps.size)
+        val aboveBound = ConnectedComponents.components(df, driverThreshold = 2L * ps.size + 1)
+        !viaDriver(atBound) && viaDriver(aboveBound) &&
+          atBound.as[(Long, Long)].collect().toMap == want &&
+          aboveBound.as[(Long, Long)].collect().toMap == want &&
+          ConnectedComponents.components(df).as[(Long, Long)].collect().toMap == want &&
+          ConnectedComponents.components(df, driverThreshold = 0L)
+            .as[(Long, Long)].collect().toMap == want
       }
     }, minSuccessful = 8)
   }

@@ -417,4 +417,67 @@ class DedupSpec extends SparkTestBase {
     val full = Dedup.candidatePairsFromBanded(banded).count()
     assert(full == 40L * 39 / 2 + 1)
   }
+
+  test("candidatePairsFromBanded: shuffled hash join below the size check, sort-merge above; same pairs") {
+    // 300 identical docs make one skewed bucket per band (44,850 pairs);
+    // beside them, 40 bases each with a one-word variant and 40 loners
+    val rnd = new scala.util.Random(11)
+    val vocab = Vector.fill(400)(rnd.alphanumeric.take(6).mkString.toLowerCase)
+    def sentence(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val skew = (1L to 300L).map(i => (i, "the same boilerplate footer on every page of the site"))
+    val bases = (0 until 40).map(_ => sentence(30))
+    val variants = bases.zipWithIndex.flatMap { case (b, i) =>
+      val w = b.split(" ")
+      w(7) = "changed"
+      Seq((1000L + i, b), (2000L + i, w.mkString(" ")))
+    }
+    val loners = (0 until 40).map(i => (3000L + i, sentence(30)))
+    val docs = (skew ++ variants ++ loners).toDF("id", "text")
+    val banded = Dedup.bandedSigs(
+      Dedup.hashedDocs(docs, "id", "text", Dedup.CharShingles(5)), 8, 4).localCheckpoint()
+
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // (pairs, shuffled hash joins, sort-merge joins, reused exchanges)
+    // of the executed plan, AQE query stages included
+    def run(maxBucketSize: Int) = {
+      val df = Dedup.candidatePairsFromBanded(banded, maxBucketSize)
+      // collect `df` itself: its adaptive plan is final only once run
+      val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val plan = df.queryExecution.executedPlan
+      (pairs, Plans.collect(plan) { case j: ShuffledHashJoinExec => j }.size,
+        Plans.collect(plan) { case j: SortMergeJoinExec => j }.size,
+        Plans.collect(plan) { case r: ReusedExchangeExec => r }.size)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def merged(maxBucketSize: Int) = {
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try run(maxBucketSize)
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
+    // default confs: one shuffled hash join, its sides one reused exchange
+    val (hashPairs, hashShj, hashSmj, hashReused) = run(Int.MaxValue)
+    assert(hashShj == 1 && hashSmj == 0, s"shj=$hashShj smj=$hashSmj")
+    assert(hashReused >= 1, "both sides of the self-join must read one exchange")
+    // no broadcast threshold: the size check falls back to sort-merge
+    val (mergePairs, mergeShj, mergeSmj, mergeReused) = merged(Int.MaxValue)
+    assert(mergeShj == 0 && mergeSmj == 1, s"shj=$mergeShj smj=$mergeSmj")
+    assert(mergeReused >= 1, "both sides of the self-join must read one exchange")
+    assert(hashPairs == mergePairs)
+    val inSkew = (p: (Long, Long)) => p._2 <= 300L
+    assert(hashPairs.count(inSkew) == 300 * 299 / 2)
+    assert((0 until 40).forall(i => hashPairs((1000L + i, 2000L + i))))
+
+    // capped: the skewed bucket is dropped under either join, the rest
+    // kept (the cap's own bucket join is unhinted, so it is never the
+    // shuffled hash join)
+    val (cappedHash, cappedShj, _, _) = run(50)
+    val (cappedMerge, cappedMergeShj, cappedSmj, _) = merged(50)
+    assert(cappedShj == 1 && cappedMergeShj == 0 && cappedSmj >= 1)
+    assert(cappedHash == cappedMerge)
+    assert(cappedHash == hashPairs.filterNot(inSkew))
+  }
 }

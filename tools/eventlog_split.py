@@ -23,6 +23,19 @@ shuffle bytes its tasks wrote. A stage whose wall is far below its summed
 run time ran its tasks in parallel; of two stages with the same wall, the
 one with little CPU was waiting.
 
+Each stage is labelled with the operation scopes of its RDDs, in lineage
+order (`Exchange > WholeStageCodegen (5) > Exchange`): Spark names every
+SQL stage after the same thread-pool call site, so the scopes are what
+tell one SQL stage from another. A `WholeStageCodegen (n)` scope is
+followed by the plan nodes fused into that codegen stage, in data-flow
+order (`{ShuffledHashJoin, Project, HashAggregate}`), taken from the
+latest plan of the stage's SQL execution (its start event, then each
+adaptive update) in which a node of that name has a metric the stage's
+tasks updated. A stage can also compute a localCheckpointed Dataset's
+own lineage, whose codegen stages are numbered in another plan: the
+metric check, and labelling only the last of two same-named scopes
+(that lineage's RDDs come first), keep those scopes bare.
+
 Spark writes such a log when the JVM gets
 `-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<existing dir>`
 (for a JVM you do not launch yourself, put them in `JAVA_TOOL_OPTIONS`).
@@ -36,6 +49,8 @@ from pathlib import Path
 
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
 SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
+SQL_PLAN = "org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate"
+CODEGEN = "WholeStageCodegen ("
 NONE = "(none)"
 
 
@@ -63,9 +78,62 @@ def lines(path):
         yield from text.splitlines()
 
 
+def scopes(rdd_infos):
+    """The distinct operation scope names of a stage's RDDs, in RDD id
+    (lineage) order."""
+    seen, names = set(), []
+    for r in sorted(rdd_infos, key=lambda r: r.get("RDD ID", 0)):
+        try:
+            scope = json.loads(r.get("Scope") or "null")
+        except ValueError:
+            continue
+        if scope and scope.get("id") not in seen:
+            seen.add(scope.get("id"))
+            names.append(scope.get("name") or "")
+    return names
+
+
+def codegen_nodes(plan, name, accums):
+    """Plan nodes fused into the codegen stage `name`, in data-flow
+    order, from the first node of that name in `plan` with a metric in
+    `accums`; None when there is no such node."""
+    def fused(node):
+        # a codegen stage ends at its InputAdapters and at nested stages
+        out = []
+        for c in node.get("children", []):
+            if c["nodeName"] != "InputAdapter" and not c["nodeName"].startswith(CODEGEN):
+                out += fused(c) + [c["nodeName"]]
+        return out
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node["nodeName"] == name and any(
+                m.get("accumulatorId") in accums for m in node.get("metrics", [])):
+            return fused(node)
+        stack.extend(node.get("children", []))
+    return None
+
+
+def label(stage, plans):
+    """A stage's scopes, each codegen scope with its fused plan nodes."""
+    parts = []
+    for i, name in enumerate(stage["scopes"]):
+        nodes = None
+        # an earlier plan's lineage (a checkpointed Dataset's) has the
+        # lower RDD ids, so of two same-named scopes the last is this
+        # execution's
+        if name.startswith(CODEGEN) and name not in stage["scopes"][i + 1:]:
+            for plan in reversed(plans.get(stage["exec"], [])):
+                nodes = codegen_nodes(plan, name, stage["accums"])
+                if nodes is not None:
+                    break
+        parts.append(f"{name} {{{', '.join(nodes)}}}" if nodes else name)
+    return " > ".join(parts)
+
+
 def read(path):
-    """Jobs, SQL executions and stage attempts of the log, keyed by id."""
-    jobs, execs, stages = {}, {}, {}
+    """Jobs, SQL executions, stage attempts and SQL plans of the log."""
+    jobs, execs, stages, plans = {}, {}, {}, defaultdict(list)
     for line in lines(path):
         try:
             e = json.loads(line)
@@ -86,14 +154,21 @@ def read(path):
         elif kind == SQL_START:
             execs[e["executionId"]] = {"start": e["time"], "end": None,
                                        "group": e.get("jobGroupId") or None}
+            if e.get("sparkPlanInfo"):
+                plans[e["executionId"]].append(e["sparkPlanInfo"])
+        elif kind == SQL_PLAN:
+            plans[e["executionId"]].append(e["sparkPlanInfo"])
         elif kind == SQL_END:
             if e["executionId"] in execs:
                 execs[e["executionId"]]["end"] = e["time"]
         elif kind == "SparkListenerStageSubmitted":
             info, props = e["Stage Info"], e.get("Properties") or {}
+            ex = props.get("spark.sql.execution.id")
             stages[(info["Stage ID"], info["Stage Attempt ID"])] = {
                 "id": info["Stage ID"], "name": info.get("Stage Name") or "",
                 "group": props.get("spark.jobGroup.id") or NONE,
+                "exec": int(ex) if ex not in (None, "") else None,
+                "scopes": scopes(info.get("RDD Info") or []), "accums": set(),
                 "start": info.get("Submission Time"), "end": None, "tasks": 0,
                 "run_ms": 0, "cpu_ms": 0.0, "max_task_ms": 0, "shuffle_write_bytes": 0}
         elif kind == "SparkListenerStageCompleted":
@@ -101,6 +176,7 @@ def read(path):
             st = stages.get((info["Stage ID"], info["Stage Attempt ID"]))
             if st is not None:
                 st["end"] = info.get("Completion Time")
+                st["accums"] = {a.get("ID") for a in info.get("Accumulables") or []}
         elif kind == "SparkListenerTaskEnd":
             st = stages.get((e["Stage ID"], e["Stage Attempt ID"]))
             if st is None:
@@ -113,12 +189,13 @@ def read(path):
                 st["max_task_ms"] = max(st["max_task_ms"], info["Finish Time"] - info["Launch Time"])
             sw = m.get("Shuffle Write Metrics") or {}
             st["shuffle_write_bytes"] += sw.get("Shuffle Bytes Written", 0)
-    return jobs, execs, stages
+    return jobs, execs, stages, plans
 
 
-def split(jobs, execs, stages=None):
+def split(jobs, execs, stages=None, plans=None):
     """Per job group: executions, jobs, planning, job walls, driver gaps;
-    with `stages`, also each stage attempt that ran in the group."""
+    with `stages`, also each stage attempt that ran in the group,
+    labelled from the SQL `plans`."""
     # an execution without a recorded group takes its first job's group
     for j in sorted(jobs.values(), key=lambda j: j["start"]):
         x = execs.get(j["exec"])
@@ -157,6 +234,7 @@ def split(jobs, execs, stages=None):
         row = {k: st[k] for k in ("id", "name", "tasks", "run_ms", "max_task_ms",
                                   "shuffle_write_bytes")}
         row["cpu_ms"] = round(st["cpu_ms"])
+        row["label"] = label(st, plans or {})
         row["wall_ms"] = st["end"] - st["start"] if st["end"] and st["start"] else None
         out[st["group"]].setdefault("stages", []).append(row)
     return out
@@ -167,11 +245,12 @@ def main():
     ap.add_argument("log", help="event log file, or a rolling event log directory")
     ap.add_argument("--json", action="store_true", help="print one JSON object")
     ap.add_argument("--stages", action="store_true",
-                    help="add one row per stage: tasks, wall, run and CPU time, "
-                         "longest task, shuffle bytes written")
+                    help="add one row per stage: its scopes and codegen plan nodes, "
+                         "tasks, wall, run and CPU time, longest task, "
+                         "shuffle bytes written")
     args = ap.parse_args()
-    jobs, execs, stages = read(args.log)
-    result = split(jobs, execs, stages if args.stages else None)
+    jobs, execs, stages, plans = read(args.log)
+    result = split(jobs, execs, stages if args.stages else None, plans)
     if args.json:
         print(json.dumps(result, sort_keys=True))
         return
@@ -186,7 +265,8 @@ def main():
               f"driver gaps {sum(r['driver_gap_ms'])} ms {r['driver_gap_ms']}")
         for st in r.get("stages", []):
             wall = "?" if st["wall_ms"] is None else st["wall_ms"]
-            print(f"  stage {st['id']} ({st['name']}): {st['tasks']} tasks, wall {wall} ms, "
+            print(f"  stage {st['id']} [{st['label']}] ({st['name']}): "
+                  f"{st['tasks']} tasks, wall {wall} ms, "
                   f"run {st['run_ms']} ms, cpu {st['cpu_ms']} ms, "
                   f"max task {st['max_task_ms']} ms, "
                   f"shuffle write {st['shuffle_write_bytes']} B")
